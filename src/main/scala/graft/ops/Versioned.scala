@@ -108,6 +108,12 @@ object Versioned {
   private def resolveGroup(dir: String, g: String): String =
     if (g.startsWith("/") || g.contains("://")) g else s"$dir/data/$g"
 
+  /** One multi-root parquet read of `groups`, its schema taken from the
+    * driver-side footer ([[ParquetFooters.read]]) — no inference job. */
+  private def readGroups(spark: SparkSession, dir: String,
+      groups: Seq[String]): DataFrame =
+    ParquetFooters.read(spark, groups.map(resolveGroup(dir, _)))
+
   /** Manifest file names under `_manifests/`, stream closed via
     * try/finally (Files.list leaks a directory fd otherwise — and
     * [[lastTxnVersion]] runs once per streaming micro-batch). */
@@ -415,8 +421,7 @@ object Versioned {
     import org.apache.spark.sql.functions.col
     val (dgs, dk) = readDeletes(dir, v)
     if (dgs.isEmpty) None
-    else Some((dgs.map(g =>
-        spark.read.parquet(resolveGroup(dir, g)).select(col(dk.get)))
+    else Some((dgs.map(g => readGroups(spark, dir, Seq(g)).select(col(dk.get)))
       .reduce(_ unionAll _).distinct(), dk.get))
   }
 
@@ -427,12 +432,23 @@ object Versioned {
 
   /** Min/max of `statsCol` over the WRITTEN group (the manifest must
     * describe what is on disk, not the input plan). None when the group
-    * is empty or the column is all-null. */
+    * is empty or the column is all-null. Read from the written footers'
+    * column statistics; only a group the footers cannot answer for (a
+    * non-BIGINT column, chunks without statistics) pays an aggregation
+    * job. */
   private def writtenStats(spark: SparkSession, dir: String, group: String,
       statsCol: String): Option[(Long, Long)] = {
-    val row = spark.read.parquet(resolveGroup(dir, group))
-      .selectExpr(s"min($statsCol)", s"max($statsCol)").head()
-    if (row.isNullAt(0)) None else Some((row.getLong(0), row.getLong(1)))
+    val root = resolveGroup(dir, group)
+    val field = ParquetFooters.schema(spark, Seq(root)).fields
+      .find(f => spark.sessionState.conf.resolver(f.name, statsCol))
+    field.flatMap(f => ParquetFooters.longMinMax(
+        ParquetFooters.dataFooters(root, spark.sparkContext.hadoopConfiguration),
+        f.name, f.dataType))
+      .getOrElse {
+        val row = readGroups(spark, dir, Seq(group))
+          .selectExpr(s"min($statsCol)", s"max($statsCol)").head()
+        if (row.isNullAt(0)) None else Some((row.getLong(0), row.getLong(1)))
+      }
   }
 
   /** EXACT row count of a freshly-written file group, summed from its
@@ -440,25 +456,10 @@ object Versioned {
     * bounded by files-per-commit), never a data scan or Spark job. Feeds
     * the manifest's per-group `counts`, which make a global `COUNT(*)`
     * answerable from the manifest alone through the connector. */
-  private def writtenRowCount(dir: String, group: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val root = Paths.get(resolveGroup(dir, group))
-    val s = Files.walk(root)
-    val files =
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }.toList
-      finally s.close()
-    files.map { p =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  private def writtenRowCount(spark: SparkSession, dir: String,
+      group: String): Long =
+    ParquetFooters.rowCount(ParquetFooters.dataFooters(resolveGroup(dir, group),
+      spark.sparkContext.hadoopConfiguration))
 
   /** Commit `df` as the next version. `overwrite = false` (append)
     * makes the new version = parent's file groups + the new group;
@@ -553,7 +554,8 @@ object Versioned {
       scol = statsCol.orElse(parentScol),
       scol2 = if (overwrite || parent == 0) None
               else readStatsCol2(dir, parent),
-      counts = parentCounts + (group -> writtenRowCount(dir, group)))
+      counts = parentCounts +
+        (group -> writtenRowCount(df.sparkSession, dir, group)))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"commit at $dir lost the race for version $v — " +
@@ -685,7 +687,7 @@ object Versioned {
         counts =
           (if (overwrite || parent == 0) Map.empty[String, Long]
            else readCounts(dir, parent)) +
-            (group -> writtenRowCount(dir, group)))
+            (group -> writtenRowCount(df.sparkSession, dir, group)))
       if (publishIfAbsent(dir, v, json)) return Some(v)
       // publish lost to a racing APPEND (a false conflict): loop back —
       // the next iteration's basis sweep ((lvAtWrite+1)..parent) vets
@@ -873,9 +875,7 @@ object Versioned {
     val (touched, carried) = touchedGroups(updates, statsCol, dir, parent)
     val merged =
       if (touched.isEmpty) updates
-      else Upsert.merge(
-        spark.read.parquet(touched.map(resolveGroup(dir, _)): _*),
-        updates, key)
+      else Upsert.merge(readGroups(spark, dir, touched), updates, key)
     val v = commitRewrite(merged, spark, dir, parent, carried, Some(statsCol))
     (v, touched, carried)
   }
@@ -919,7 +919,7 @@ object Versioned {
     require(touched.nonEmpty || carried.nonEmpty, "empty manifest")
     val survivors =
       if (touched.isEmpty) null
-      else spark.read.parquet(touched.map(resolveGroup(dir, _)): _*)
+      else readGroups(spark, dir, touched)
         .filter(!(col(statsCol) >= lo && col(statsCol) <= hi))
     if (touched.isEmpty) {
       // nothing intersects: the delete is a metadata no-op — still mint
@@ -964,7 +964,8 @@ object Versioned {
     // a TRUNCATE tombstone holds no rows: deleting from it is a no-op
     // (and must not publish a groups-empty manifest that loses the
     // recorded schema — review r16)
-    if (readManifest(dir, parent).isEmpty) return parent
+    val groups = readManifest(dir, parent)
+    if (groups.isEmpty) return parent
     requireNoRenames(dir, parent, "merge-on-read DELETE")
     requireNoDefaults(dir, parent, "merge-on-read DELETE")
     requireNoDrops(dir, parent, "merge-on-read DELETE")
@@ -975,7 +976,23 @@ object Versioned {
     val dgroup = s"d$v"
     val spark = deletes.sparkSession
     import org.apache.spark.sql.functions.{broadcast, col}
-    val keys = deletes.select(deletes.col(key)).na.drop().distinct()
+    // delete files carry the TABLE's key type, so every reader probes
+    // like-typed values: a LONG delete key against a DECIMAL key column
+    // would otherwise build a mask the connector's typed probe misses.
+    // A key whose cast does not compare equal to itself under Spark's
+    // coercion (5.5 into BIGINT, 'x' into BIGINT) matches no table value
+    // in the read's anti-join either, so it is dropped, never truncated
+    // into a match.
+    val given = deletes.col(key)
+    val tableKeyType = ParquetFooters.schema(spark,
+        groups.map(resolveGroup(dir, _))).fields
+      .find(f => spark.sessionState.conf.resolver(f.name, key)).map(_.dataType)
+    val keys = (tableKeyType match {
+      case Some(t) if t != deletes.select(given).schema.head.dataType =>
+        deletes.select(given.try_cast(t).as(key), given.as("__given"))
+          .filter(col(key) === col("__given")).select(col(key))
+      case _ => deletes.select(given.as(key))
+    }).na.drop()
     // PER-GROUP DELETION VECTORS (the Iceberg/Delta DV sidecar shape):
     // when the manifest stats describe the delete key for EVERY data
     // group, each key is routed to the group(s) whose [min,max] range
@@ -991,62 +1008,59 @@ object Versioned {
     // identical to the legacy flat layout's semantics. Without
     // usable stats the legacy single-file layout applies to all groups
     // (the conservative plan, like applyDeletesCommit's fallback).
-    val groups = readManifest(dir, parent)
     val ranges = readStats(dir, parent)
     val statsUsable = readStatsCol(dir, parent).contains(key) &&
       groups.forall(ranges.contains)
-    val wroteGroup: Boolean =
-      if (statsUsable) {
-        import org.apache.spark.sql.functions.coalesce
-        import org.apache.spark.sql.functions.lit
-        val rangeDf = spark.createDataFrame(
-          groups.map(g => (g, ranges(g)._1, ranges(g)._2)))
-          .toDF("__tg", "__lo", "__hi")
-        val routed = keys.join(broadcast(rangeDf),
-            keys(key).cast("long") >= col("__lo") &&
-              keys(key).cast("long") <= col("__hi"), "left")
-          .select(keys(key),
-            coalesce(col("__tg"), lit(NoneGroup)).as("__tg"))
-        // O(deleted keys × touched groups) rows; hash-repartition on the
-        // target group so EACH touched group's vector is written by its
-        // own task — a big-delete regime (quarter-table GDPR erasure at
-        // 100 TB) routes billions of keys, and a single write task would
-        // be the same funnel shape topFraction retired. The hive layout
-        // is unchanged: one file per `__tg=` dir (all rows of a group
-        // hash to one partition; a task owning two colliding groups
-        // still writes one file per dir).
-        routed.persist()
-        val any = !routed.isEmpty
-        if (any) {
-          routed.repartition(col("__tg")).write.partitionBy("__tg")
-            .mode("errorifexists").parquet(s"$dir/data/$dgroup")
-          // the routing SCOPE: the groups that existed when this delete
-          // was routed. A data group appended LATER is outside the
-          // scope and the connector must mask it with the FULL key
-          // union (appends carry delete files forward — a re-inserted
-          // key stays deleted until applyDeletesCommit, exactly like
-          // the ops-layer anti-join; review r16)
-          Files.write(Paths.get(dir, "data", dgroup, "_scope"),
-            groups.mkString("\n").getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-        }
-        routed.unpersist()
-        any
-      } else {
-        keys.persist()
-        val any = !keys.isEmpty
-        if (any) keys
-          .coalesce(1) // a delete file is small by design — one file
-          .write.mode("errorifexists").parquet(s"$dir/data/$dgroup")
-        keys.unpersist()
-        any
-      }
+    val dgroupDir = s"$dir/data/$dgroup"
+    // ONE job: the write. Emptiness is read from the written footers
+    // afterwards (a persist + isEmpty probe used to cost two more jobs);
+    // an empty delete group is removed before the manifest publishes.
+    if (statsUsable) {
+      import org.apache.spark.sql.functions.coalesce
+      import org.apache.spark.sql.functions.lit
+      val rangeDf = spark.createDataFrame(
+        groups.map(g => (g, ranges(g)._1, ranges(g)._2)))
+        .toDF("__tg", "__lo", "__hi")
+      val distinctKeys = keys.distinct()
+      val routed = distinctKeys.join(broadcast(rangeDf),
+          distinctKeys(key).cast("long") >= col("__lo") &&
+            distinctKeys(key).cast("long") <= col("__hi"), "left")
+        .select(distinctKeys(key),
+          coalesce(col("__tg"), lit(NoneGroup)).as("__tg"))
+      // O(deleted keys × touched groups) rows; hash-repartition on the
+      // target group so EACH touched group's vector is written by its
+      // own task — a big-delete regime (quarter-table GDPR erasure at
+      // 100 TB) routes billions of keys, and a single write task would
+      // be the same funnel shape topFraction retired. The hive layout
+      // is unchanged: one file per `__tg=` dir (all rows of a group
+      // hash to one partition; a task owning two colliding groups
+      // still writes one file per dir).
+      routed.repartition(col("__tg")).write.partitionBy("__tg")
+        .mode("errorifexists").parquet(dgroupDir)
+    } else {
+      // a delete file is small by design — one file; deduplicating AFTER
+      // the coalesce needs no exchange (a single partition is already
+      // clustered on every key)
+      keys.coalesce(1).distinct()
+        .write.mode("errorifexists").parquet(dgroupDir)
+    }
+    val wroteGroup = writtenRowCount(spark, dir, dgroup) > 0
+    if (!wroteGroup) deleteRecursively(Paths.get(dgroupDir))
+    else if (statsUsable)
+      // the routing SCOPE: the groups that existed when this delete
+      // was routed. A data group appended LATER is outside the
+      // scope and the connector must mask it with the FULL key
+      // union (appends carry delete files forward — a re-inserted
+      // key stays deleted until applyDeletesCommit, exactly like
+      // the ops-layer anti-join; review r16)
+      Files.write(Paths.get(dgroupDir, "_scope"),
+        groups.mkString("\n").getBytes(
+          java.nio.charset.StandardCharsets.UTF_8))
     // keys matching nothing (or an empty delete frame) still commit a
     // version — the caller's delete "happened" — but add no delete group
     val dgs = if (wroteGroup) pdgs :+ dgroup else pdgs
     val json = manifestJson(v, parent, overwrite = true,
-      readManifest(dir, parent), readStats(dir, parent),
-      readStats2(dir, parent), dgroups = dgs,
+      groups, ranges, readStats2(dir, parent), dgroups = dgs,
       dkey = if (dgs.nonEmpty) Some(key) else None,
       scol = readStatsCol(dir, parent),
       scol2 = readStatsCol2(dir, parent))
@@ -1093,8 +1107,7 @@ object Versioned {
           s"applyDeletesCommit at $dir lost the race for version $v")
       (v, Seq.empty, carried)
     } else {
-      val purged = spark.read
-        .parquet(touched.map(resolveGroup(dir, _)): _*)
+      val purged = readGroups(spark, dir, touched)
         .join(delKeys, Seq(dk), "left_anti")
       // in the pruned path the recorded stats column IS dk (checked
       // above); in the conservative path nothing is carried, so fresh
@@ -1402,7 +1415,7 @@ object Versioned {
       scol2 = if (carriedStats2.nonEmpty) readStatsCol2(dir, parent)
               else None,
       counts = readCounts(dir, parent).filter(kv => carriedSet(kv._1)) +
-        (group -> writtenRowCount(dir, group)))
+        (group -> writtenRowCount(spark, dir, group)))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"rewrite commit at $dir lost the race for version $v")
@@ -1453,8 +1466,7 @@ object Versioned {
     val smallBytes = smalls.map(_._2).sum
     val bins = math.max(1L,
       (smallBytes + targetBytes - 1) / targetBytes).toInt
-    val packed = spark.read.parquet(
-      smalls.map(s => resolveGroup(dir, s._1)): _*)
+    val packed = readGroups(spark, dir, smalls.map(_._1))
     val nv = commitRewrite(packed, spark, dir, v, carried, statsCol,
       repartitionTo = bins)
     (nv, bins, smalls.map(_._1), carried)
@@ -1511,7 +1523,7 @@ object Versioned {
     // explicit long casts keep getLong safe when aCol/bCol are INT
     // (the docstring invites pre-gridded ints; zValue casts internally
     // so the write succeeds and only the stats probe would crash)
-    val statRows = spark.read.parquet(s"$dir/data/$base")
+    val statRows = readGroups(spark, dir, Seq(base))
       .groupBy(col("__zb"))
       .agg(min(col(aCol).cast("long")).as("aLo"),
         max(col(aCol).cast("long")).as("aHi"),
@@ -1676,10 +1688,10 @@ object Versioned {
           val sortedAdded = added.toSeq.sorted
           val stepBase =
             if (feedDefaults.isEmpty && feedDrops.isEmpty)
-              spark.read.parquet(sortedAdded.map(resolveGroup(dir, _)): _*)
+              readGroups(spark, dir, sortedAdded)
             else {
               val frames = sortedAdded.map(g => withoutDrops(withDefaults(
-                spark.read.parquet(resolveGroup(dir, g)), feedDefaults),
+                readGroups(spark, dir, Seq(g)), feedDefaults),
                 feedDrops))
               val canonical = frames.head.columns.toSeq
               balancedUnion(frames.map(_.select(canonical.map(col): _*)))
@@ -1697,8 +1709,8 @@ object Versioned {
           if (newDels.nonEmpty && cd.take(pd.size) == pd &&
               readManifest(dir, v) == readManifest(dir, v - 1)) {
             // per-dir reads: delete dirs may be flat or __tg=-partitioned
-            val keys = newDels.map(g => spark.read
-                .parquet(resolveGroup(dir, g)).select(col(cdk.get)))
+            val keys = newDels.map(g =>
+                readGroups(spark, dir, Seq(g)).select(col(cdk.get)))
               .reduce(_ unionAll _).distinct()
             read(spark, dir, v - 1).join(keys, Seq(cdk.get), "left_semi")
               .withColumn("_change_type", lit("delete"))
@@ -1833,15 +1845,14 @@ object Versioned {
       v: Int, groups: Seq[String]): DataFrame = {
     val defaults = readDefaults(dir, v)
     val drops = readDrops(dir, v)
-    if (defaults.isEmpty && drops.isEmpty)
-      spark.read.parquet(groups.map(resolveGroup(dir, _)): _*)
+    if (defaults.isEmpty && drops.isEmpty) readGroups(spark, dir, groups)
     else {
       val canonical = withoutDrops(withDefaults(
-        spark.read.parquet(resolveGroup(dir, groups.head)), defaults),
+        readGroups(spark, dir, groups.take(1)), defaults),
         drops).columns.toSeq
       balancedUnion(groups.map(g =>
         withoutDrops(withDefaults(
-          spark.read.parquet(resolveGroup(dir, g)), defaults), drops)
+          readGroups(spark, dir, Seq(g)), defaults), drops)
           .select(canonical.map(org.apache.spark.sql.functions.col): _*)))
     }
   }
@@ -1942,7 +1953,7 @@ object Versioned {
       val logicalToPhys = renames.map(_.swap)
       val tableSig = sig(read(spark, dir, parent).schema)
         .map { case (n, t) => logicalToPhys.getOrElse(n, n) -> t }
-      val stagedSig = sig(spark.read.parquet(stagedDir).schema)
+      val stagedSig = sig(ParquetFooters.schema(spark, Seq(stagedDir)))
       // ONLY when the caller opted in (`omitDefaultedOk` — the RUNNING
       // streaming sink, whose writer schema was fixed at query start),
       // a staged group may OMIT a column that carries a registered
@@ -2057,7 +2068,7 @@ object Versioned {
         if (overwrite || parent == 0) Set.empty else readDrops(dir, parent),
       scol = statsCol.orElse(parentScol),
       scol2 = if (overwrite || parent == 0) None else readStatsCol2(dir, parent),
-      counts = parentCounts + (group -> writtenRowCount(dir, group)))
+      counts = parentCounts + (group -> writtenRowCount(spark, dir, group)))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"staged commit at $dir lost the race for version $v")
@@ -2202,7 +2213,7 @@ object Versioned {
     val newStats = if (hasStaged) statsCol.orElse(parentScol).flatMap(c =>
       writtenStats(spark, dir, group, c).map(group -> _)) else None
     val newCounts =
-      if (hasStaged) Map(group -> writtenRowCount(dir, group))
+      if (hasStaged) Map(group -> writtenRowCount(spark, dir, group))
       else Map.empty[String, Long]
     val json = manifestJson(v, parent, overwrite = removed.nonEmpty,
       carried ++ newGroups,

@@ -441,7 +441,10 @@ object MvRewrite extends Rule[LogicalPlan] {
 
     // Fresh MV scan (fresh exprIds per rewrite — no cross-plan sharing).
     val spark = SparkSession.active
-    val mvRel = spark.read.parquet(entry.mvPath).queryExecution.analyzed
+    // schema from the MV's parquet footer: inference would launch a
+    // Spark job inside query optimization
+    val mvRel = graft.ops.ParquetFooters.read(spark, Seq(entry.mvPath))
+      .queryExecution.analyzed
     val mvOut: Map[String, AttributeReference] =
       mvRel.output.map(a => a.name.toLowerCase -> a.asInstanceOf[AttributeReference]).toMap
 

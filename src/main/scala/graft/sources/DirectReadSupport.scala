@@ -143,10 +143,14 @@ private[sources] final class DecimalSlotConverter(out: Array[Any], i: Int,
   override def addValueFromDictionary(id: Int): Unit = out(i) = dict(id)
 }
 
-/** INT64 timestamps in a non-micros unit → internal micros Long. */
+/** INT64 timestamps in a non-micros unit → internal micros Long: NANOS
+  * floor toward negative infinity (a pre-epoch instant stays before the
+  * epoch, as in Spark's own reader), MILLIS fail loudly on overflow
+  * instead of wrapping. */
 private[sources] final class TimestampScaleSlotConverter(out: Array[Any],
     i: Int, mul: Long, div: Long) extends PrimitiveConverter {
-  override def addLong(v: Long): Unit = out(i) = v * mul / div
+  override def addLong(v: Long): Unit =
+    out(i) = Math.multiplyExact(Math.floorDiv(v, div), mul)
 }
 
 /** INT96 (julian day + nanos-of-day, little-endian) → UTC micros Long —

@@ -253,7 +253,7 @@ class VersionedCatalog extends TableCatalog with SupportsNamespaces {
     finally s.close()
     // a re-CREATE at this path must re-read footers, even on a
     // filesystem whose mtime granularity can't see a fast recreate
-    VersionedSource.invalidateUnder(tableDir(ident))
+    graft.ops.ParquetFooters.invalidateUnder(tableDir(ident))
     true
   }
 
@@ -264,8 +264,8 @@ class VersionedCatalog extends TableCatalog with SupportsNamespaces {
     Files.move(Paths.get(tableDir(oldIdent)), Paths.get(tableDir(newIdent)))
     // the vacated path may be re-created; the target path may shadow a
     // previously-cached (dropped) table's entries
-    VersionedSource.invalidateUnder(tableDir(oldIdent))
-    VersionedSource.invalidateUnder(tableDir(newIdent))
+    graft.ops.ParquetFooters.invalidateUnder(tableDir(oldIdent))
+    graft.ops.ParquetFooters.invalidateUnder(tableDir(newIdent))
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {

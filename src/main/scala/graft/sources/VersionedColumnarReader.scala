@@ -183,7 +183,11 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
     case StringType => (v, i) => maskSet.containsAny(v.getUTF8String(i))
     case d: DecimalType =>
       (v, i) => maskSet.containsAny(v.getDecimal(i, d.precision, d.scale))
-    case _ => (_, _) => false
+    case NullType => (_, _) => false // no mask: never probed
+    // a probe that answered "not deleted" for a type it cannot compare
+    // would silently UN-delete rows — refuse the scan instead
+    case other => throw new IllegalStateException(
+      s"deletion-vector probe has no branch for key type $other")
   }
 
   /** Survivor row ids of the current batch (compaction path only). */

@@ -140,55 +140,14 @@ private[sources] object VersionedSource {
     * (the reader serves them as NULL for older groups); a same-name
     * column with CONFLICTING types is refused loudly (the v1-scope gate
     * discipline) instead of silently serving the oldest group's shape.
-    * One schema inference per group — CACHED on the group dir: committed
-    * groups are immutable (the manifest-log discipline), so the footer
-    * read amortizes to once per group per JVM and table-load planning
-    * stops scaling O(groups) in driver-side parquet footer I/O. */
-  private val groupSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private def groupSchema(spark: SparkSession, d: String,
-      hadoopConf: Configuration): StructType = {
-    if (groupSchemaCache.size() > 65536) groupSchemaCache.clear()
-    // keyed on dir + mtime (one stat, vs a footer read): a DROPped and
-    // re-created table at the SAME path must not serve the old schema.
-    // The stat goes through the Hadoop FileSystem (scheme'd paths —
-    // s3a://, hdfs:// — stat correctly where a raw NIO probe cannot);
-    // a FAILED stat bypasses the cache entirely and reads the footer
-    // (fail closed — keying on a sentinel would collapse to dir-only
-    // and serve a stale schema forever, the exact hazard the mtime key
-    // prevents). DROP/RENAME also invalidate via [[invalidateUnder]],
-    // which covers same-millisecond recreates on coarse-mtime
-    // filesystems in-JVM (advice r14).
-    val p = new Path(d)
-    val mtime: Option[Long] =
-      try Some(p.getFileSystem(hadoopConf)
-        .getFileStatus(p).getModificationTime)
-      catch { case _: Exception => None }
-    mtime match {
-      case Some(t) => groupSchemaCache.computeIfAbsent(s"$d@$t",
-        _ => spark.read.parquet(d).schema)
-      case None => spark.read.parquet(d).schema
-    }
-  }
-
-  /** Drop every cached group schema under `tableDir` — called by the
-    * catalog's DROP/RENAME so an in-JVM recreate at the same path never
-    * serves the old table's schema even when the filesystem's mtime
-    * granularity (1 s on some) cannot distinguish the recreate. */
-  def invalidateUnder(tableDir: String): Unit = {
-    val prefix = tableDir.stripSuffix("/") + "/"
-    groupSchemaCache.keySet.removeIf(k =>
-      k.startsWith(prefix) || k.startsWith(tableDir + "@"))
-  }
-
+    * Each group's schema is read from its footer on the driver and
+    * CACHED on the group dir ([[graft.ops.ParquetFooters.schema]]):
+    * committed groups are immutable, so table-load planning stops
+    * scaling O(groups) in footer I/O and launches no Spark job. */
   def mergedGroupSchema(spark: SparkSession, groupDirs: Seq[String])
       : StructType = {
-    // ONE session hadoop conf for the whole resolution — building it
-    // per group copies every SQL conf, O(groups) on the planning path
-    // (review r15)
-    val hc = spark.sessionState.newHadoopConf()
-    groupDirs.map(groupSchema(spark, _, hc)).reduceLeft { (acc, s) =>
+    val schemas = groupDirs.map(d => graft.ops.ParquetFooters.schema(spark, Seq(d)))
+    schemas.reduceLeft { (acc, s) =>
       s.fields.foldLeft(acc) { (a, f) =>
         a.fields.find(_.name == f.name) match {
           case Some(existing) =>
@@ -1139,11 +1098,21 @@ private[sources] final class LongMorMask private (table: Array[Long],
     case f: Float =>
       f >= Long.MinValue.toFloat && f <= Long.MaxValue.toFloat &&
         f.toLong.toFloat == f && containsLong(f.toLong)
+    // a DECIMAL key column probing a LONG-built mask (delete files
+    // written with BIGINT keys): exact whole values only, like Double
+    case d: org.apache.spark.sql.types.Decimal =>
+      val b = d.toJavaBigDecimal
+      b.stripTrailingZeros.scale <= 0 &&
+        b.compareTo(LongMorMask.MinLong) >= 0 &&
+        b.compareTo(LongMorMask.MaxLong) <= 0 && containsLong(b.longValueExact)
     case _ => false
   }
 }
 
 private[sources] object LongMorMask {
+  private val MinLong = java.math.BigDecimal.valueOf(Long.MinValue)
+  private val MaxLong = java.math.BigDecimal.valueOf(Long.MaxValue)
+
   /** Murmur3 64-bit finalizer — full avalanche, so sequential ids
     * (range-generated keys, the common shape) spread uniformly. */
   private[sources] def mix(v: Long): Long = {

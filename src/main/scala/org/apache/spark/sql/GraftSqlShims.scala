@@ -24,4 +24,10 @@ object GraftSqlShims {
         new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry()),
       ext.buildPlannerStrategies(spark),
       ext.buildOptimizerRules(spark))
+
+  /** The nullable form every file-source read reports (`asNullable` is
+    * private[spark]) — how a driver-side footer schema matches Spark's
+    * inferred `spark.read.parquet(...).schema`. */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
 }

@@ -163,4 +163,64 @@ class VersionedTypedScanSpec extends SparkSpec {
         .orderBy("k").collect().toSeq)
     assert(afterD.count() == 350)
   }
+
+  test("BIGINT delete keys against a DECIMAL key column mask the same " +
+      "rows through the connector and the ops read") {
+    val dir = tmp("morDecLong")
+    Versioned.commit(spark.range(0, 300).select(
+      col("id").cast("decimal(20,0)").as("k"), col("id").as("v")), dir)
+    Versioned.deleteCommitMor(spark.range(0, 300, 7).select(col("id").as("k")),
+      dir, "k")
+    val conn = load(dir)
+    assert(conn.count() == 300 - 43)
+    assert(conn.orderBy("k").collect().toSeq ==
+      Versioned.read(spark, dir).select(conn.columns.map(col): _*)
+        .orderBy("k").collect().toSeq)
+  }
+
+  test("a LONG-built mask matches DECIMAL probes by exact whole value") {
+    import org.apache.spark.sql.types.Decimal
+    val mask = LongMorMask.build(Array(5L, 0L, Long.MaxValue), 3)
+    assert(mask.containsAny(Decimal(5L, 20, 0)))
+    assert(mask.containsAny(Decimal(BigDecimal("5.000"), 20, 3)))
+    assert(mask.containsAny(Decimal(BigDecimal("0.00"), 10, 2)))
+    assert(mask.containsAny(Decimal(BigDecimal(Long.MaxValue), 38, 0)))
+    assert(!mask.containsAny(Decimal(BigDecimal("5.5"), 10, 1)))
+    assert(!mask.containsAny(Decimal(6L, 20, 0)))
+    assert(!mask.containsAny(Decimal(BigDecimal(Long.MaxValue) + 1, 38, 0)))
+  }
+
+  test("INT64 timestamp scaling floors pre-epoch NANOS and refuses a " +
+      "MILLIS overflow") {
+    val out = new Array[Any](1)
+    new TimestampScaleSlotConverter(out, 0, 1L, 1000L).addLong(-1L)
+    assert(out(0) == -1L, "-1 ns is 1 µs before the epoch, not the epoch")
+    new TimestampScaleSlotConverter(out, 0, 1L, 1000L).addLong(-1500L)
+    assert(out(0) == -2L)
+    new TimestampScaleSlotConverter(out, 0, 1000L, 1L).addLong(-7L)
+    assert(out(0) == -7000L)
+    intercept[ArithmeticException] {
+      new TimestampScaleSlotConverter(out, 0, 1000L, 1L)
+        .addLong(Long.MaxValue / 10)
+    }
+  }
+
+  test("a deletion-vector probe of an unhandled key type fails loudly") {
+    import org.apache.spark.sql.types.{ShortType, StructField, StructType}
+    val base = tmp("probe")
+    def part(d: String): String = {
+      spark.range(0, 10).select(col("id").cast("short").as("k"))
+        .coalesce(1).write.parquet(d)
+      new java.io.File(d).listFiles().map(_.getPath)
+        .find(_.endsWith(".parquet")).get
+    }
+    val data = part(s"$base/data")
+    val deletes = part(s"$base/deletes")
+    val err = intercept[IllegalStateException] {
+      new VersionedColumnarReader(data, "c1",
+        StructType(Seq(StructField("k", ShortType))), Array.empty, Map.empty,
+        Map.empty, Some("k"), Seq(deletes))
+    }
+    assert(err.getMessage.contains("ShortType"))
+  }
 }
