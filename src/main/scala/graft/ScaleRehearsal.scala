@@ -175,7 +175,7 @@ object ScaleRehearsal {
     // encode+decode CPU — expect ~k× rows at constant per-row cost);
     // the n-gram generator is one streamed tokenize pass (~k×); the
     // DSv2 connector legs rebuild their orders-derived version logs at
-    // k× (read = pruned parquet-mr scan ~k× of a fraction; write = two
+    // k× (read = pruned vectorized scan ~k× of a fraction; write = two
     // staged appends ~k×; the MIN/MAX leg stays metadata-only flat);
     // the streaming source replays k×-sized versions through the same
     // four-append protocol

@@ -982,7 +982,9 @@ object Versioned {
     // A key whose cast does not compare equal to itself under Spark's
     // coercion (5.5 into BIGINT, 'x' into BIGINT) matches no table value
     // in the read's anti-join either, so it is dropped, never truncated
-    // into a match.
+    // into a match. Only NULL keys are dropped (anti-join equality never
+    // matches NULL); a NaN key matches NaN rows in that anti-join, so it
+    // is kept — `na.drop()` would drop NaN with the NULLs.
     val given = deletes.col(key)
     val tableKeyType = ParquetFooters.schema(spark,
         groups.map(resolveGroup(dir, _))).fields
@@ -992,7 +994,7 @@ object Versioned {
         deletes.select(given.try_cast(t).as(key), given.as("__given"))
           .filter(col(key) === col("__given")).select(col(key))
       case _ => deletes.select(given.as(key))
-    }).na.drop()
+    }).filter(col(key).isNotNull)
     // PER-GROUP DELETION VECTORS (the Iceberg/Delta DV sidecar shape):
     // when the manifest stats describe the delete key for EVERY data
     // group, each key is routed to the group(s) whose [min,max] range

@@ -24,7 +24,7 @@ object ConnectorQueries {
   private def tmp(name: String): String = s"$sinkRoot/$name"
 
   /** s50's connector-written table: two year-split appends through
-    * df.write.format("graft-versioned") (executors stage parquet-mr
+    * df.write.format("graft-versioned") (executors stage parquet
     * files, commit publishes the manifest) with od stats. Built once
     * per (session, sfDir) — the s17/s18 immutable-derived-data
     * discipline. */
@@ -107,8 +107,8 @@ object ConnectorQueries {
     // from the manifest, pushes the 1996 range filter onto the
     // manifest's od stats (whole groups pruned before any file opens),
     // compiles it to parquet row-group predicates executor-side, and
-    // serves rows through parquet-mr — no Spark parquet reader in the
-    // path. `pruned` pins the planning mechanism in the gated row (the
+    // decodes each file with Spark's vectorized parquet reader.
+    // `pruned` pins the planning mechanism in the gated row (the
     // filtered scan planned strictly fewer input partitions than the
     // full-table scan); the second leg time-travels to v1 via the
     // versionAsOf option. The oracle replays both legs from source, so
@@ -156,7 +156,7 @@ object ConnectorQueries {
 
     // S50: the connector WRITE path + metadata-only aggregates. The
     // table is built ENTIRELY through df.write.format("graft-versioned")
-    // — two appends whose executors stage parquet via parquet-mr and
+    // — two appends whose executors stage parquet via Spark's writer and
     // whose commit publishes a Versioned manifest (atomic staged-group
     // rename; Versioned.commitStagedGroup). The gated row reads it back
     // through the connector: full-table count + exact decimal total
@@ -316,7 +316,7 @@ object ConnectorQueries {
     // PER-GROUP DELETION VECTORS (the Iceberg/Delta DV sidecar read
     // shape, round 16): deleteCommitMor routes each delete key to the
     // file group(s) whose manifest stats could hold it and lays the
-    // delete group out __tg=<group>-partitioned; each parquet-mr reader
+    // delete group out __tg=<group>-partitioned; each file reader
     // then loads ONLY its own group's vector, executor-side — nothing
     // is collected on the driver and there is NO mask size cap, so the
     // big-delete regime (leg b masks ~a quarter of the table) is SERVED

@@ -6,31 +6,32 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetInputFormat
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar (vectorized) reader for the connector's file partitions —
-  * the bulk-scan fast path (r15), extended (r16) to serve MERGE-ON-READ
-  * masked groups and the TIMESTAMP/DECIMAL types.
-  *
-  * The row reader pays per-row record assembly in parquet-mr plus a
-  * boxed `GenericInternalRow` per row; Spark's own
-  * [[VectorizedParquetRecordReader]] (a public Java class, the same
-  * engine `spark.read.parquet` uses) decodes whole column chunks into
-  * `ColumnarBatch`es that feed whole-stage codegen directly. The
-  * snapshot-normalization duties the custom reader exists for map onto
-  * it cleanly:
+/** The connector's one reader: Spark's own
+  * [[VectorizedParquetRecordReader]] (the engine `spark.read.parquet`
+  * uses) over ONE file, decoding whole column chunks into
+  * `ColumnarBatch`es that feed whole-stage codegen directly. It serves
+  * every file partition of the batch, micro-batch and row-level scans,
+  * and — as a key-only reader with no mask of its own — loads the
+  * deletion vectors too ([[VersionedColumnarReader.morMask]]), so the
+  * mask and the per-batch probe see key values through one decoder.
+  * The snapshot-normalization duties map onto it cleanly:
   *
   *  - column mapping: the requested Catalyst schema is issued in the
   *    file's PHYSICAL names (output consumption is positional, so the
@@ -46,14 +47,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    per BATCH against the key column's vector. A batch with no
   *    masked row is served zero-copy (the common case — untouched row
   *    groups of a masked file); a batch with hits is COMPACTED into
-  *    reusable on-heap vectors holding the survivors. Previously any
-  *    pending DV dropped the WHOLE scan to the row path — measured
-  *    4.4× the vectorized read at the 10M-key regime; the key column
+  *    reusable on-heap vectors holding the survivors. The key column
   *    is added to the decode set when the query itself does not
-  *    project it, exactly like the row reader.
+  *    project it.
   *
-  * Files are written by Spark or parquet-mr with standard annotations;
-  * INT96 timestamps ride the vectorized reader's CORRECTED rebase. */
+  * Files are written by Spark with standard annotations; INT96
+  * timestamps ride the vectorized reader's CORRECTED rebase. */
 private[sources] class VersionedColumnarReader(file: String, group: String,
     required: StructType, pushed: Array[Filter],
     logicalToPhysical: Map[String, String],
@@ -62,10 +61,10 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
     morVectorFiles: Seq[String] = Seq.empty)
     extends PartitionReader[ColumnarBatch] {
 
-  private val conf = VersionedPartitionReader.freshConf()
+  private val conf = VersionedColumnarReader.freshConf()
   private val path = new Path(file)
   private val fileSchema: MessageType =
-    VersionedPartitionReader.schemaOf(path, conf)
+    VersionedColumnarReader.schemaOf(path, conf)
   private val present: Map[String, PrimitiveType] =
     fileSchema.getFields.asScala.collect {
       case p: PrimitiveType => p.getName -> p
@@ -82,7 +81,7 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
     else morKey.map(k => logicalToPhysical.getOrElse(k, k)).orNull
   private val maskSet: MorMask =
     if (maskKeyPhys == null || !present.contains(maskKeyPhys)) null
-    else VersionedPartitionReader.morMask(morVectorFiles, maskKeyPhys, conf)
+    else VersionedColumnarReader.morMask(morVectorFiles, maskKeyPhys, conf)
 
   /** Required indices served by the FILE vs by a CONSTANT vector. */
   private val (servedIdx, constIdx) =
@@ -147,9 +146,9 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
     conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     // pushed filters (physical names) → parquet row-group/page skipping;
     // Spark re-applies every filter as a residual, so this is purely an
-    // I/O reduction exactly like the row reader's FilterCompat use
-    VersionedPartitionReader.toParquetPredicate(
-      pushed.map(VersionedPartitionReader.toPhysicalFilter(_,
+    // I/O reduction
+    VersionedColumnarReader.toParquetPredicate(
+      pushed.map(VersionedColumnarReader.toPhysicalFilter(_,
         logicalToPhysical)), present)
       .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
     val r = new VectorizedParquetRecordReader(
@@ -169,25 +168,19 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
   }
 
   /** The per-row masked-probe, type-dispatched ONCE (the batch loop
-    * pays a megamorphic-free call). Value domains match the mask
-    * builder's ([[VersionedPartitionReader.morMask]]): plain integral →
-    * primitive long probe; everything else boxed. */
+    * pays a megamorphic-free call). Key values are compared in the
+    * domain the mask builder takes them in ([[MorMask.valueAt]]): the
+    * long domain probes the primitive table without boxing, everything
+    * else boxed; an unhandled key type fails loudly. */
   private val probeMasked: (ColumnVector, Int) => Boolean = keyType match {
+    case NullType => (_, _) => false // no mask: never probed
     case LongType | TimestampType =>
       (v, i) => maskSet.containsLong(v.getLong(i))
     case IntegerType | DateType =>
       (v, i) => maskSet.containsLong(v.getInt(i).toLong)
-    case DoubleType => (v, i) => maskSet.containsAny(v.getDouble(i))
-    case FloatType => (v, i) => maskSet.containsAny(v.getFloat(i))
-    case BooleanType => (v, i) => maskSet.containsAny(v.getBoolean(i))
-    case StringType => (v, i) => maskSet.containsAny(v.getUTF8String(i))
-    case d: DecimalType =>
-      (v, i) => maskSet.containsAny(v.getDecimal(i, d.precision, d.scale))
-    case NullType => (_, _) => false // no mask: never probed
-    // a probe that answered "not deleted" for a type it cannot compare
-    // would silently UN-delete rows — refuse the scan instead
-    case other => throw new IllegalStateException(
-      s"deletion-vector probe has no branch for key type $other")
+    case t =>
+      val at = MorMask.valueAt(t)
+      (v, i) => maskSet.containsAny(at(v, i))
   }
 
   /** Survivor row ids of the current batch (compaction path only). */
@@ -284,29 +277,15 @@ private[sources] object VersionedColumnarReader {
   /** Rows per decoded batch — Spark's vectorized-reader default. */
   val Capacity = 4096
 
-  /** Catalyst type of a parquet primitive (for the mask key when the
-    * query does not project it) — mirrors Spark's schema converter for
-    * the connector's served surface. */
-  def catalystTypeOf(p: PrimitiveType): DataType = {
-    p.getLogicalTypeAnnotation match {
-      case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-        return DecimalType(d.getPrecision, d.getScale)
-      case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-        return DateType
-      case _: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-        return TimestampType
-      case _ => ()
-    }
-    p.getPrimitiveTypeName match {
-      case PrimitiveTypeName.INT64 => LongType
-      case PrimitiveTypeName.INT32 => IntegerType
-      case PrimitiveTypeName.DOUBLE => DoubleType
-      case PrimitiveTypeName.FLOAT => FloatType
-      case PrimitiveTypeName.BOOLEAN => BooleanType
-      case PrimitiveTypeName.INT96 => TimestampType
-      case _ => StringType
-    }
-  }
+  /** Spark's own Catalyst type for a parquet column (its schema
+    * converter at the SQLConf defaults, the reader's settings) — for the
+    * mask key when the query does not project it, and for a deletion
+    * vector's key. An INT64 TIMESTAMP(NANOS) column has none and fails
+    * loudly here. */
+  def catalystTypeOf(p: PrimitiveType): DataType =
+    new ParquetToSparkSchemaConverter()
+      .convert(new MessageType("key", java.util.List.of(p: Type)))
+      .head.dataType
 
   /** Per-type survivor copier, picked once per column per file. */
   def copierFor(dt: DataType)
@@ -326,5 +305,194 @@ private[sources] object VersionedColumnarReader {
       d.putDecimal(dr, s.getDecimal(sr, dec.precision, dec.scale),
         dec.precision)
     case other => throw new IllegalStateException(s"unreachable type $other")
+  }
+
+  /** One fully-loaded Configuration per JVM; per-reader confs COPY it
+    * (property-map copy, no XML). A fresh `new Configuration()` parses
+    * the default XML resources under a static lock — at one reader per
+    * packed FILE, 32 concurrent tasks serialized on that lock and
+    * per-file init inflated ~20× under load (r15 probe: a 256-file scan
+    * cost 2.9 s of which ~4.5 s single-threaded was per-file fixed
+    * cost, nearly all of it here). */
+  private val baseConf: Configuration = {
+    val c = new Configuration()
+    c.size() // force the default-resource parse ONCE, eagerly
+    c
+  }
+  def freshConf(): Configuration = new Configuration(baseConf)
+
+  /** Rewrite a pushed filter's column names logical → physical (the
+    * column-mapping read half). Only the [[VersionedScan.supportsPushdown]]
+    * shapes can arrive here. */
+  def toPhysicalFilter(f: Filter, m: Map[String, String]): Filter = {
+    if (m.isEmpty) return f
+    def p(c: String) = m.getOrElse(c, c)
+    f match {
+      case EqualTo(c, v) => EqualTo(p(c), v)
+      case GreaterThan(c, v) => GreaterThan(p(c), v)
+      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(p(c), v)
+      case LessThan(c, v) => LessThan(p(c), v)
+      case LessThanOrEqual(c, v) => LessThanOrEqual(p(c), v)
+      case And(l, r) => And(toPhysicalFilter(l, m), toPhysicalFilter(r, m))
+      case other => other
+    }
+  }
+
+  /** Per-group deletion-vector cache, keyed on the (sorted) vector file
+    * list + key column: committed delete files are immutable, and one
+    * group's many file-readers (and bench reps) must not re-read the
+    * same vector. Values are taken in the probe's comparison domain
+    * ([[MorMask.valueAt]]). NULL keys are excluded: anti-join equality
+    * never matches NULL. */
+  private val morMaskCache =
+    new java.util.concurrent.ConcurrentHashMap[String, MorMask]()
+  /** Total keys held across cached vectors — the clear policy is
+    * BYTE-shaped, not entry-shaped: stale versions' big vectors must
+    * not pin executor memory until 4096 entries accumulate. ~32M keys
+    * ≈ a few hundred MB worst case (16 B/key in the primitive long
+    * table), well under executor headroom. */
+  private val morMaskCachedKeys = new java.util.concurrent.atomic.AtomicLong(0)
+
+  def morMask(files: Seq[String], key: String, conf: Configuration)
+      : MorMask = {
+    if (morMaskCache.size() > 4096 ||
+        morMaskCachedKeys.get() > (1L << 25)) {
+      morMaskCache.clear()
+      morMaskCachedKeys.set(0)
+    }
+    morMaskCache.computeIfAbsent(
+      files.sorted.mkString("\n") + "#" + key, _ => {
+        // each file's key column, typed by Spark's converter
+        val typed = files.flatMap(f =>
+          schemaOf(new Path(f), conf).getFields.asScala.collectFirst {
+            case p: PrimitiveType if p.getName == key =>
+              f -> catalystTypeOf(p)
+          })
+        // long-domain keys (the common case — the gated tables key on
+        // LONG ids) load into a primitive open-addressing table:
+        // ~16 B/key and a boxing-free per-row probe, vs a boxed
+        // HashSet's ~60 B/key and an allocation per probe. Mixed or
+        // other key types keep the generic set.
+        val allLong =
+          typed.nonEmpty && typed.forall(t => MorMask.isLongDomain(t._2))
+        val longs = new scala.collection.mutable.ArrayBuilder.ofLong
+        val out = scala.collection.mutable.HashSet.empty[Any]
+        typed.foreach { case (f, t) =>
+          val at = MorMask.valueAt(t)
+          // a key-only read through the data scan's own decoder
+          val r = new VersionedColumnarReader(f, "",
+            StructType(Seq(StructField(key, t))), Array.empty, Map.empty,
+            Map.empty)
+          try while (r.next()) {
+            val b = r.get()
+            val v = b.column(0)
+            var i = 0
+            while (i < b.numRows()) {
+              if (!v.isNullAt(i)) at(v, i) match {
+                case l: Long if allLong => longs += l
+                // the vector's buffers are reused batch to batch
+                case u: UTF8String => out += u.copy()
+                case other => out += other
+              }
+              i += 1
+            }
+          } finally r.close()
+        }
+        val mask: MorMask =
+          if (allLong) {
+            val arr = longs.result()
+            LongMorMask.build(arr, arr.length)
+          } else new AnyMorMask(out)
+        morMaskCachedKeys.addAndGet(mask.size)
+        mask
+      })
+  }
+
+  /** Footer-schema cache keyed on the file path — safe because
+    * committed data files are immutable; bounded by a coarse clear. */
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, MessageType]()
+
+  def schemaOf(path: Path, conf: Configuration): MessageType = {
+    if (schemaCache.size() > 65536) schemaCache.clear()
+    schemaCache.computeIfAbsent(path.toString, _ => {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    })
+  }
+
+  /** Compile the pushed Spark filters to ONE conjunctive parquet
+    * FilterPredicate over columns present in this file with a matching
+    * physical type; anything else is simply not compiled (Spark's
+    * residual filters keep correctness). */
+  def toParquetPredicate(pushed: Array[Filter],
+      present: Map[String, PrimitiveType]): Option[FilterPredicate] = {
+
+    def leaf(c: String, v: Any,
+        mk: (String, Any) => FilterPredicate): Option[FilterPredicate] =
+      present.get(c).flatMap { p =>
+        (p.getPrimitiveTypeName, v) match {
+          case (PrimitiveTypeName.INT64, l: Long) => Some(mk(c, l))
+          case (PrimitiveTypeName.INT32, i: Int) => Some(mk(c, i))
+          case (PrimitiveTypeName.DOUBLE, d: Double) => Some(mk(c, d))
+          case (PrimitiveTypeName.FLOAT, fl: Float) => Some(mk(c, fl))
+          case (PrimitiveTypeName.BINARY, s: String) => Some(mk(c, s))
+          case _ => None
+        }
+      }
+
+    def convert(f: Filter): Option[FilterPredicate] = f match {
+      case EqualTo(c, v) => leaf(c, v, {
+        case (n, l: Long) => FilterApi.eq(FilterApi.longColumn(n), Long.box(l))
+        case (n, i: Int) => FilterApi.eq(FilterApi.intColumn(n), Int.box(i))
+        case (n, d: Double) => FilterApi.eq(FilterApi.doubleColumn(n), Double.box(d))
+        case (n, fl: Float) => FilterApi.eq(FilterApi.floatColumn(n), Float.box(fl))
+        case (n, s: String) =>
+          FilterApi.eq(FilterApi.binaryColumn(n), Binary.fromString(s))
+      })
+      case GreaterThan(c, v) => leaf(c, v, {
+        case (n, l: Long) => FilterApi.gt(FilterApi.longColumn(n), Long.box(l))
+        case (n, i: Int) => FilterApi.gt(FilterApi.intColumn(n), Int.box(i))
+        case (n, d: Double) => FilterApi.gt(FilterApi.doubleColumn(n), Double.box(d))
+        case (n, fl: Float) => FilterApi.gt(FilterApi.floatColumn(n), Float.box(fl))
+        case (n, s: String) =>
+          FilterApi.gt(FilterApi.binaryColumn(n), Binary.fromString(s))
+      })
+      case GreaterThanOrEqual(c, v) => leaf(c, v, {
+        case (n, l: Long) => FilterApi.gtEq(FilterApi.longColumn(n), Long.box(l))
+        case (n, i: Int) => FilterApi.gtEq(FilterApi.intColumn(n), Int.box(i))
+        case (n, d: Double) => FilterApi.gtEq(FilterApi.doubleColumn(n), Double.box(d))
+        case (n, fl: Float) => FilterApi.gtEq(FilterApi.floatColumn(n), Float.box(fl))
+        case (n, s: String) =>
+          FilterApi.gtEq(FilterApi.binaryColumn(n), Binary.fromString(s))
+      })
+      case LessThan(c, v) => leaf(c, v, {
+        case (n, l: Long) => FilterApi.lt(FilterApi.longColumn(n), Long.box(l))
+        case (n, i: Int) => FilterApi.lt(FilterApi.intColumn(n), Int.box(i))
+        case (n, d: Double) => FilterApi.lt(FilterApi.doubleColumn(n), Double.box(d))
+        case (n, fl: Float) => FilterApi.lt(FilterApi.floatColumn(n), Float.box(fl))
+        case (n, s: String) =>
+          FilterApi.lt(FilterApi.binaryColumn(n), Binary.fromString(s))
+      })
+      case LessThanOrEqual(c, v) => leaf(c, v, {
+        case (n, l: Long) => FilterApi.ltEq(FilterApi.longColumn(n), Long.box(l))
+        case (n, i: Int) => FilterApi.ltEq(FilterApi.intColumn(n), Int.box(i))
+        case (n, d: Double) => FilterApi.ltEq(FilterApi.doubleColumn(n), Double.box(d))
+        case (n, fl: Float) => FilterApi.ltEq(FilterApi.floatColumn(n), Float.box(fl))
+        case (n, s: String) =>
+          FilterApi.ltEq(FilterApi.binaryColumn(n), Binary.fromString(s))
+      })
+      case And(l, r) =>
+        (convert(l), convert(r)) match {
+          case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
+          case (a, b) => a.orElse(b) // partial conjunction still prunes
+        }
+      case _ => None
+    }
+
+    pushed.flatMap(convert(_)) match {
+      case Array() => None
+      case ps => Some(ps.reduce(FilterApi.and))
+    }
   }
 }

@@ -202,7 +202,7 @@ private[sources] class VersionedRowLevelBatchWrite(schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    VersionedDataWriterFactory(schema, staging)
+    VersionedDataWriterFactory(VersionedDataWriter.conf(schema), staging)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val acked = messages.collect {

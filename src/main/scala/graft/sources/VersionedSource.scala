@@ -6,17 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Types => PTypes}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.Type.Repetition
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -27,10 +18,12 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.Versioned
@@ -50,16 +43,18 @@ import graft.ops.Versioned
   * pushed range/equality filters on the manifest's stats column prune
   * whole groups BEFORE any file is opened (the Iceberg scan-planning
   * path, s21's mechanism behind a standard Spark API). One
-  * InputPartition per parquet file.
+  * InputPartition per size-packed bin of one group's parquet files.
   *
-  * Execution (per partition): parquet-mr reads the file directly —
-  * column pruning via a projected read schema (only requested columns
-  * are materialized) and the pushed filters compiled to parquet
-  * FilterPredicates, so row groups whose column statistics exclude the
-  * predicate are skipped at the parquet layer. All pushed filters are
-  * ALSO retained as Spark-side residuals (pushFilters returns every
-  * filter), so connector pruning is a pure performance layer — exactly
-  * parquet's own row-group-statistics contract.
+  * Execution (per partition): Spark's own vectorized parquet reader
+  * decodes each file ([[VersionedColumnarReader]]) — column pruning via
+  * the requested schema (only requested columns are materialized) and
+  * the pushed filters compiled to parquet FilterPredicates, so row
+  * groups whose column statistics exclude the predicate are skipped at
+  * the parquet layer. All pushed filters are ALSO retained as
+  * Spark-side residuals (pushFilters returns every filter), so
+  * connector pruning is a pure performance layer — exactly parquet's
+  * own row-group-statistics contract. Writes stage their part files
+  * through Spark's own parquet write support ([[VersionedDataWriter]]).
   *
   * EVERY pending table state is served IN the scan (round 15): column
   * renames ride as a logical↔physical name mapping applied per file,
@@ -68,12 +63,13 @@ import graft.ops.Versioned
   * predates them, and pending merge-on-read deletes ride as PER-GROUP
   * DELETION VECTORS (round 16 — the Iceberg/Delta DV sidecar shape):
   * each reader loads only its OWN group's vector executor-side and
-  * masks rows row-by-row, nothing collected on the driver, no size
+  * masks rows batch by batch, nothing collected on the driver, no size
   * cap — [[Versioned.read]]'s full normalization pushed into the
   * DSv2 path ([[Versioned.connectorPlan]]), so ALTERed and MOR-deleted
   * tables read through the connector with zero data rewritten and
   * nothing refused. Column types: BIGINT / INT / DOUBLE / FLOAT /
-  * STRING / BOOLEAN / DATE — the gate discipline's surface.
+  * STRING / BOOLEAN / DATE / TIMESTAMP / DECIMAL — the gate
+  * discipline's surface ([[VersionedSource.isSupportedType]]).
   */
 class VersionedSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-versioned"
@@ -499,24 +495,19 @@ private[sources] class VersionedScan(val dir: String, val version: Int,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    if (aggAnswer.isEmpty)
-      required.fields.foreach(f =>
-        require(f.name == VersionedSource.GroupCol ||
-            VersionedSource.isSupportedType(f.dataType),
-          s"graft-versioned v1 scope: unsupported column type ${f.dataType} " +
-            s"for '${f.name}'"))
+  /** `readSchema()` is the metadata answer's BIGINT legs when an
+    * aggregate was pushed — no data column is read, so none is gated. */
+  override def createReaderFactory(): PartitionReaderFactory =
     // hadoop Configuration is not serializable as-is; the executor-side
     // reader builds a fresh default Configuration (local/HDFS defaults) —
     // object-store credentials would ride SerializableConfiguration in a
     // cluster deployment
-    new VersionedReaderFactory(required, pushed,
+    new VersionedReaderFactory(readSchema(), pushed,
       renames.map(_.swap), VersionedScan.evalDefaults(defaults),
       plan.flatMap(_.morKey),
       plan.map(VersionedScan.morVectorFiles(_,
         SparkSession.active.sessionState.newHadoopConf()))
         .getOrElse(Map.empty))
-  }
 
   /** Streaming read: the version log IS the offset log (the Delta
     * streaming-source design) — offset = committed version number, each
@@ -819,7 +810,13 @@ private[sources] object VersionedScan {
   * state to the executors (empty on unevolved tables — the common case
   * pays nothing). `morVectors` maps each data group to its deletion-
   * vector FILE paths — strings only; the keys themselves are read by
-  * the executor task, never shipped in the task binary. */
+  * the executor task, never shipped in the task binary.
+  *
+  * The ONE read-side type gate: batch, micro-batch and row-level COW
+  * scans all build their readers here, so each refuses a column outside
+  * the connector's served set at planning, before any task runs. Every
+  * file partition is then read columnar ([[VersionedColumnarReader]]);
+  * the only row partition is the answered-from-manifest aggregate. */
 private[sources] class VersionedReaderFactory(required: StructType,
     pushed: Array[Filter],
     logicalToPhysical: Map[String, String] = Map.empty,
@@ -828,21 +825,14 @@ private[sources] class VersionedReaderFactory(required: StructType,
     morVectors: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
 
-  /** Columnar for the WHOLE scan iff every required type is in the
-    * connector's served set. Deletion vectors no longer force the row
-    * path (r16): masked groups ride the vectorized reader with a
-    * per-BATCH key probe + survivor compaction
-    * ([[VersionedColumnarReader]]) — the whole-scan row fallback cost
-    * 4.4× on any table with one pending DV. Agg-pushdown scans plan a
-    * single metadata partition — row-based, consistent. */
-  private val columnarOk: Boolean =
-    required.fields.forall(f => f.name == VersionedSource.GroupCol ||
-      VersionedSource.isSupportedType(f.dataType))
+  required.fields.foreach(f =>
+    require(f.name == VersionedSource.GroupCol ||
+        VersionedSource.isSupportedType(f.dataType),
+      s"graft-versioned v1 scope: unsupported column type ${f.dataType} " +
+        s"for '${f.name}'"))
 
-  override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case _: VersionedFilePartition => columnarOk
-    case _ => false
-  }
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    p.isInstanceOf[VersionedFilePartition]
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[ColumnarBatch] = p match {
@@ -866,12 +856,8 @@ private[sources] class VersionedReaderFactory(required: StructType,
             new GenericInternalRow(values.map(v => v: Any).toArray)
           override def close(): Unit = ()
         }
-      case fp: VersionedFilePartition =>
-        new ChainedReader[InternalRow](fp.files.iterator.map(f => () =>
-          new VersionedPartitionReader(f, fp.group, required, pushed,
-            logicalToPhysical, defaultValues, morKey,
-            morVectors.getOrElse(fp.group, Seq.empty))
-            : PartitionReader[InternalRow]))
+      case other => throw new IllegalStateException(
+        s"no row read for partition $other")
     }
 }
 
@@ -897,164 +883,6 @@ private[sources] class ChainedReader[T](
   override def close(): Unit = if (cur != null) cur.close()
 }
 
-/** Executor-side reader: parquet-mr over ONE file, with a projected read
-  * schema (column pruning at the parquet layer) and the pushed filters
-  * compiled to FilterPredicates (row-group statistics skipping). */
-private[sources] class VersionedPartitionReader(file: String, group: String,
-    required: StructType, pushed: Array[Filter],
-    logicalToPhysical: Map[String, String] = Map.empty,
-    defaultValues: Map[String, Any] = Map.empty,
-    morKey: Option[String] = None,
-    morVectorFiles: Seq[String] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-
-  /** The `_group` metadata column is constant per partition (one file =
-    * one group) — precomputed once, no per-row work. */
-  private val groupValue = UTF8String.fromString(group)
-
-  /** Per-field PHYSICAL name under the snapshot's column mapping
-    * (identity on unevolved tables) + the default constant to serve
-    * when this file's schema predates the column. Resolved once per
-    * reader — the row loop pays array lookups only. */
-  private val physName: Array[String] =
-    required.fields.map(f => logicalToPhysical.getOrElse(f.name, f.name))
-  private val defaultOf: Array[Any] =
-    physName.map(n => defaultValues.getOrElse(n, null))
-
-  private val conf = VersionedPartitionReader.freshConf()
-  private val path = new Path(file)
-
-  /** The file's own schema — the projection must reuse the file's
-    * physical types verbatim, and evolution-added columns missing here
-    * are served as NULL. Cached per path: committed files are immutable
-    * (the manifest-log discipline), and the builder's own read would
-    * otherwise parse the same footer a second time — plus once more per
-    * warm bench rep. */
-  private val fileSchema: MessageType =
-    VersionedPartitionReader.schemaOf(path, conf)
-
-  private val present: Map[String, PrimitiveType] =
-    fileSchema.getFields.asScala.collect {
-      case p: PrimitiveType => p.getName -> p
-    }.toMap
-
-  /** MOR delete mask: the key's PHYSICAL name and THIS GROUP's deletion
-    * vector, loaded executor-side from the group's vector files (cached
-    * per distinct file list, so the many file-readers of one group on
-    * one executor share a single load); null when the snapshot carries
-    * no pending deletes or no vector targets this group (the common
-    * case — the row loop then pays one null check). */
-  private val maskKeyPhys: String =
-    if (morVectorFiles.isEmpty) null
-    else morKey.map(k => logicalToPhysical.getOrElse(k, k)).orNull
-  private val maskSet: MorMask =
-    if (maskKeyPhys == null) null
-    else VersionedPartitionReader.morMask(morVectorFiles, maskKeyPhys, conf)
-
-  /** Projected physical columns PRESENT in this file, in projection
-    * order — [[ValsMaterializer]] slot j holds projCols(j)'s value. The
-    * mask key must be read even when not projected by the query. */
-  private val projCols: Array[String] = {
-    val projNames =
-      if (maskKeyPhys == null) physName
-      else (physName :+ maskKeyPhys).distinct
-    projNames.filter(present.contains)
-  }
-  private val projIdx: Map[String, Int] = projCols.zipWithIndex.toMap
-
-  private val reader: ParquetReader[Array[Any]] = {
-    val projected = projCols.flatMap(present.get)
-    if (projected.nonEmpty)
-      conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        new MessageType("projected", projected.toList.asJava.asInstanceOf[
-          java.util.List[org.apache.parquet.schema.Type]]).toString)
-    // direct slot materialization (ValsReadSupport): no per-row Group
-    // tree, no per-row name lookups — the r15 hot-path fix
-    val b = ParquetReader.builder(new ValsReadSupport(), path).withConf(conf)
-    // pushed filters carry LOGICAL names; the file speaks physical
-    VersionedPartitionReader.toParquetPredicate(
-      pushed.map(VersionedPartitionReader.toPhysicalFilter(_,
-        logicalToPhysical)), present)
-      .foreach(p => b.withFilter(FilterCompat.get(p)))
-    b.build()
-  }
-
-  /** Output plumbing resolved ONCE per file: required field i comes
-    * from converter slot srcIdx(i) (≥0), the `_group` metadata constant
-    * (-1), or its evolution default / NULL (-2, column physically
-    * absent from this file). The served type set is pinned loudly here
-    * (the writer's 7 types — the converters' value domain). */
-  private val srcIdx: Array[Int] = Array.tabulate(required.length) { i =>
-    val f = required.fields(i)
-    if (f.name == VersionedSource.GroupCol) -1
-    else if (!present.contains(physName(i))) -2
-    else {
-      f.dataType match {
-        case LongType | IntegerType | DoubleType | FloatType | BooleanType
-             | DateType | StringType | TimestampType => ()
-        case _: DecimalType => ()
-        case t => throw new IllegalStateException(s"unreachable type $t")
-      }
-      projIdx(physName(i))
-    }
-  }
-
-  private val maskIdx: Int =
-    if (maskKeyPhys == null) -1 else projIdx.getOrElse(maskKeyPhys, -1)
-  /** TRUE iff the key column's converter slot holds plain boxed
-    * Long/Int — the zero-allocation [[LongMorMask]] probe domain. A
-    * decimal-annotated INT64/INT32 materializes as [[Decimal]] (r16)
-    * and must take the boxed probe. */
-  private val maskIsPlainIntegral: Boolean = maskIdx >= 0 && {
-    val p = present(maskKeyPhys)
-    (p.getPrimitiveTypeName == PrimitiveTypeName.INT64 ||
-      p.getPrimitiveTypeName == PrimitiveTypeName.INT32) &&
-      !p.getLogicalTypeAnnotation.isInstanceOf[
-        LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
-  }
-
-  private var current: Array[Any] = _
-
-  /** TRUE iff the row's delete-key value is in the mask — the per-row
-    * half of the merge-on-read anti-join ([[graft.ops.Versioned]]'s
-    * applyMorDeletes); NULL keys never match (anti-join equality).
-    * Integral keys probe the primitive [[LongMorMask]] with ZERO
-    * hashing allocation — this runs once per row of every masked
-    * group, the big-delete read's hot path. */
-  private def isMasked(v: Any): Boolean =
-    v != null && (if (maskIsPlainIntegral) v match {
-      case l: java.lang.Long => maskSet.containsLong(l)
-      case i: java.lang.Integer => maskSet.containsLong(i.toLong)
-      case other => maskSet.containsAny(other)
-    } else maskSet.containsAny(v))
-
-  override def next(): Boolean = {
-    current = reader.read()
-    if (maskIdx >= 0)
-      while (current != null && isMasked(current(maskIdx)))
-        current = reader.read()
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    // `current` is the materializer's reused slot array — copy into a
-    // fresh row before the next read overwrites it
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val s = srcIdx(i)
-      vals(i) =
-        if (s >= 0) current(s)
-        else if (s == -1) groupValue // metadata column
-        else defaultOf(i) // evolution-added column: default literal or NULL
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = reader.close()
-}
-
 /** A loaded deletion vector, probe-specialized by key type. The masked
   * read probes once per row of a masked group, so the common integral
   * case must cost no allocation ([[LongMorMask]]); everything else
@@ -1064,6 +892,31 @@ private[sources] sealed trait MorMask {
   def containsAny(v: Any): Boolean
   /** Stored key count — feeds the cache's byte-shaped clear policy. */
   def size: Long
+}
+
+private[sources] object MorMask {
+  /** Key types compared as longs — the [[LongMorMask]] domain: integral
+    * ids, DATE epoch days, TIMESTAMP micros. */
+  def isLongDomain(t: DataType): Boolean = t match {
+    case LongType | IntegerType | DateType | TimestampType => true
+    case _ => false
+  }
+
+  /** Row `i`'s key in the mask's comparison domain, as the deletion-
+    * vector load takes it and the per-batch probe compares it. A type
+    * with no branch fails loudly: answering "not deleted" for a key it
+    * cannot compare would silently UN-delete rows. */
+  def valueAt(t: DataType): (ColumnVector, Int) => Any = t match {
+    case LongType | TimestampType => (v, i) => v.getLong(i)
+    case IntegerType | DateType => (v, i) => v.getInt(i).toLong
+    case DoubleType => (v, i) => v.getDouble(i)
+    case FloatType => (v, i) => v.getFloat(i)
+    case BooleanType => (v, i) => v.getBoolean(i)
+    case StringType => (v, i) => v.getUTF8String(i)
+    case d: DecimalType => (v, i) => v.getDecimal(i, d.precision, d.scale)
+    case other => throw new IllegalStateException(
+      s"deletion-vector probe has no branch for key type $other")
+  }
 }
 
 /** Open-addressing primitive long set (linear probing, Murmur3
@@ -1164,222 +1017,25 @@ private[sources] object LongMorMask {
   }
 }
 
-/** Boxed fallback for non-integral delete keys (strings, doubles). */
-private[sources] final class AnyMorMask(set: Set[Any]) extends MorMask {
+/** Boxed fallback for non-integral delete keys (strings, doubles).
+  * Membership is Scala's cooperative `==`, which already equates -0.0
+  * and 0.0 as Spark's join keys do; NaN keys are canonicalized on build
+  * and probe alike, since `==` never matches NaN but Spark's join
+  * equality (the ops layer's anti-join) does. */
+private[sources] final class AnyMorMask(keys: Iterable[Any]) extends MorMask {
+  private val set: Set[Any] = keys.iterator.map(AnyMorMask.canonical).toSet
   override def containsLong(v: Long): Boolean = set.contains(v)
-  override def containsAny(v: Any): Boolean = set.contains(v)
+  override def containsAny(v: Any): Boolean =
+    set.contains(AnyMorMask.canonical(v))
   override def size: Long = set.size.toLong
 }
 
-private[sources] object VersionedPartitionReader {
-
-  /** One fully-loaded Configuration per JVM; per-reader confs COPY it
-    * (property-map copy, no XML). A fresh `new Configuration()` parses
-    * the default XML resources under a static lock — at one reader per
-    * packed FILE, 32 concurrent tasks serialized on that lock and
-    * per-file init inflated ~20× under load (r15 probe: a 256-file scan
-    * cost 2.9 s of which ~4.5 s single-threaded was per-file fixed
-    * cost, nearly all of it here). */
-  private val baseConf: Configuration = {
-    val c = new Configuration()
-    c.size() // force the default-resource parse ONCE, eagerly
-    c
-  }
-  def freshConf(): Configuration = new Configuration(baseConf)
-
-  /** Rewrite a pushed filter's column names logical → physical (the
-    * column-mapping read half). Only the [[VersionedScan.supportsPushdown]]
-    * shapes can arrive here. */
-  def toPhysicalFilter(f: Filter, m: Map[String, String]): Filter = {
-    if (m.isEmpty) return f
-    def p(c: String) = m.getOrElse(c, c)
-    f match {
-      case EqualTo(c, v) => EqualTo(p(c), v)
-      case GreaterThan(c, v) => GreaterThan(p(c), v)
-      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(p(c), v)
-      case LessThan(c, v) => LessThan(p(c), v)
-      case LessThanOrEqual(c, v) => LessThanOrEqual(p(c), v)
-      case And(l, r) => And(toPhysicalFilter(l, m), toPhysicalFilter(r, m))
-      case other => other
-    }
-  }
-
-  /** Per-group deletion-vector cache, keyed on the (sorted) vector file
-    * list + key column: committed delete files are immutable, and one
-    * group's many file-readers (and bench reps) must not re-read the
-    * same vector. Values are normalized to the reader's comparison
-    * domain exactly as [[VersionedPartitionReader.isMasked]] extracts
-    * row values (INT32 DATE = epoch days, BINARY = UTF8String). NULL
-    * keys are excluded: anti-join equality never matches NULL. */
-  private val morMaskCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MorMask]()
-  /** Total keys held across cached vectors — the clear policy is
-    * BYTE-shaped, not entry-shaped: stale versions' big vectors must
-    * not pin executor memory until 4096 entries accumulate. ~32M keys
-    * ≈ a few hundred MB worst case (16 B/key in the primitive long
-    * table), well under executor headroom. */
-  private val morMaskCachedKeys = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def morMask(files: Seq[String], key: String, conf: Configuration)
-      : MorMask = {
-    if (morMaskCache.size() > 4096 ||
-        morMaskCachedKeys.get() > (1L << 25)) {
-      morMaskCache.clear()
-      morMaskCachedKeys.set(0)
-    }
-    morMaskCache.computeIfAbsent(
-      files.sorted.mkString("\n") + "#" + key, _ => {
-        // INTEGRAL keys (the common case — the gated tables key on
-        // LONG ids) load into a primitive open-addressing table:
-        // ~16 B/key and a boxing-free per-row probe, vs a boxed
-        // HashSet's ~60 B/key and an allocation per probe. Mixed or
-        // non-integral key types keep the generic set.
-        val allLong = {
-          val types = files.flatMap(f =>
-            schemaOf(new Path(f), conf).getFields.asScala.collectFirst {
-              case p: PrimitiveType if p.getName == key => p
-            })
-          // decimal-annotated INT64/INT32 materializes as Decimal (r16)
-          // — it must keep the boxed set, or its keys would be silently
-          // dropped from the primitive table and rows would UN-delete
-          types.nonEmpty && types.forall(p =>
-            (p.getPrimitiveTypeName == PrimitiveTypeName.INT64 ||
-              p.getPrimitiveTypeName == PrimitiveTypeName.INT32) &&
-              !p.getLogicalTypeAnnotation.isInstanceOf[
-                LogicalTypeAnnotation.DecimalLogicalTypeAnnotation])
-        }
-        val longs = new scala.collection.mutable.ArrayBuilder.ofLong
-        val out = scala.collection.mutable.HashSet.empty[Any]
-        files.foreach { f =>
-          val path = new Path(f)
-          val fld = schemaOf(path, conf).getFields.asScala.collectFirst {
-            case p: PrimitiveType if p.getName == key => p
-          }
-          fld.foreach { p =>
-            val c = VersionedPartitionReader.freshConf()
-            c.set(
-              org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-              new MessageType("projected",
-                java.util.List.of(p: org.apache.parquet.schema.Type))
-                .toString)
-            // single-column projection → converter slot 0; value domain
-            // matches the partition reader's (Long/Int boxed,
-            // UTF8String for BINARY)
-            val r = ParquetReader.builder(new ValsReadSupport(), path)
-              .withConf(c).build()
-            try {
-              var arr = r.read()
-              while (arr != null) {
-                val v = arr(0)
-                if (v != null) {
-                  if (allLong) v match {
-                    case l: Long => longs += l
-                    case i: Int => longs += i.toLong
-                    case _ => ()
-                  }
-                  else out += v
-                }
-                arr = r.read()
-              }
-            } finally r.close()
-          }
-        }
-        val mask: MorMask =
-          if (allLong) {
-            val arr = longs.result()
-            LongMorMask.build(arr, arr.length)
-          } else new AnyMorMask(out.toSet)
-        morMaskCachedKeys.addAndGet(mask.size)
-        mask
-      })
-  }
-
-  /** Footer-schema cache keyed on the file path — safe because
-    * committed data files are immutable; bounded by a coarse clear. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MessageType]()
-
-  def schemaOf(path: Path, conf: Configuration): MessageType = {
-    if (schemaCache.size() > 65536) schemaCache.clear()
-    schemaCache.computeIfAbsent(path.toString, _ => {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    })
-  }
-
-  /** Compile the pushed Spark filters to ONE conjunctive parquet
-    * FilterPredicate over columns present in this file with a matching
-    * physical type; anything else is simply not compiled (Spark's
-    * residual filters keep correctness). */
-  def toParquetPredicate(pushed: Array[Filter],
-      present: Map[String, PrimitiveType]): Option[FilterPredicate] = {
-
-    def leaf(c: String, v: Any,
-        mk: (String, Any) => FilterPredicate): Option[FilterPredicate] =
-      present.get(c).flatMap { p =>
-        (p.getPrimitiveTypeName, v) match {
-          case (PrimitiveTypeName.INT64, l: Long) => Some(mk(c, l))
-          case (PrimitiveTypeName.INT32, i: Int) => Some(mk(c, i))
-          case (PrimitiveTypeName.DOUBLE, d: Double) => Some(mk(c, d))
-          case (PrimitiveTypeName.FLOAT, fl: Float) => Some(mk(c, fl))
-          case (PrimitiveTypeName.BINARY, s: String) => Some(mk(c, s))
-          case _ => None
-        }
-      }
-
-    def convert(f: Filter): Option[FilterPredicate] = f match {
-      case EqualTo(c, v) => leaf(c, v, {
-        case (n, l: Long) => FilterApi.eq(FilterApi.longColumn(n), Long.box(l))
-        case (n, i: Int) => FilterApi.eq(FilterApi.intColumn(n), Int.box(i))
-        case (n, d: Double) => FilterApi.eq(FilterApi.doubleColumn(n), Double.box(d))
-        case (n, fl: Float) => FilterApi.eq(FilterApi.floatColumn(n), Float.box(fl))
-        case (n, s: String) =>
-          FilterApi.eq(FilterApi.binaryColumn(n), Binary.fromString(s))
-      })
-      case GreaterThan(c, v) => leaf(c, v, {
-        case (n, l: Long) => FilterApi.gt(FilterApi.longColumn(n), Long.box(l))
-        case (n, i: Int) => FilterApi.gt(FilterApi.intColumn(n), Int.box(i))
-        case (n, d: Double) => FilterApi.gt(FilterApi.doubleColumn(n), Double.box(d))
-        case (n, fl: Float) => FilterApi.gt(FilterApi.floatColumn(n), Float.box(fl))
-        case (n, s: String) =>
-          FilterApi.gt(FilterApi.binaryColumn(n), Binary.fromString(s))
-      })
-      case GreaterThanOrEqual(c, v) => leaf(c, v, {
-        case (n, l: Long) => FilterApi.gtEq(FilterApi.longColumn(n), Long.box(l))
-        case (n, i: Int) => FilterApi.gtEq(FilterApi.intColumn(n), Int.box(i))
-        case (n, d: Double) => FilterApi.gtEq(FilterApi.doubleColumn(n), Double.box(d))
-        case (n, fl: Float) => FilterApi.gtEq(FilterApi.floatColumn(n), Float.box(fl))
-        case (n, s: String) =>
-          FilterApi.gtEq(FilterApi.binaryColumn(n), Binary.fromString(s))
-      })
-      case LessThan(c, v) => leaf(c, v, {
-        case (n, l: Long) => FilterApi.lt(FilterApi.longColumn(n), Long.box(l))
-        case (n, i: Int) => FilterApi.lt(FilterApi.intColumn(n), Int.box(i))
-        case (n, d: Double) => FilterApi.lt(FilterApi.doubleColumn(n), Double.box(d))
-        case (n, fl: Float) => FilterApi.lt(FilterApi.floatColumn(n), Float.box(fl))
-        case (n, s: String) =>
-          FilterApi.lt(FilterApi.binaryColumn(n), Binary.fromString(s))
-      })
-      case LessThanOrEqual(c, v) => leaf(c, v, {
-        case (n, l: Long) => FilterApi.ltEq(FilterApi.longColumn(n), Long.box(l))
-        case (n, i: Int) => FilterApi.ltEq(FilterApi.intColumn(n), Int.box(i))
-        case (n, d: Double) => FilterApi.ltEq(FilterApi.doubleColumn(n), Double.box(d))
-        case (n, fl: Float) => FilterApi.ltEq(FilterApi.floatColumn(n), Float.box(fl))
-        case (n, s: String) =>
-          FilterApi.ltEq(FilterApi.binaryColumn(n), Binary.fromString(s))
-      })
-      case And(l, r) =>
-        (convert(l), convert(r)) match {
-          case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-          case (a, b) => a.orElse(b) // partial conjunction still prunes
-        }
-      case _ => None
-    }
-
-    pushed.flatMap(convert(_)) match {
-      case Array() => None
-      case ps => Some(ps.reduce(FilterApi.and))
-    }
+private[sources] object AnyMorMask {
+  private case object NaN
+  def canonical(v: Any): Any = v match {
+    case d: Double if d.isNaN => NaN
+    case f: Float if f.isNaN => NaN
+    case other => other
   }
 }
 
@@ -1489,7 +1145,8 @@ private[sources] class VersionedStreamingWrite(schema: StructType,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
-    VersionedStreamingWriterFactory(schema, s"$dir/_staging/s$queryId")
+    VersionedStreamingWriterFactory(VersionedDataWriter.conf(schema),
+      s"$dir/_staging/s$queryId")
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -1523,11 +1180,11 @@ private[sources] object VersionedStreamingWrite {
 }
 
 private[sources] case class VersionedStreamingWriterFactory(
-    schema: StructType, stagingPrefix: String)
+    writeConf: Map[String, String], stagingPrefix: String)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new VersionedDataWriter(schema,
+    new VersionedDataWriter(writeConf,
       s"$stagingPrefix-e$epochId/part-$partitionId-$taskId.parquet")
 }
 
@@ -1544,7 +1201,7 @@ private[sources] class VersionedBatchWrite(schema: StructType, dir: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    VersionedDataWriterFactory(schema, staging)
+    VersionedDataWriterFactory(VersionedDataWriter.conf(schema), staging)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // compare by file NAME (unique per partition+task attempt) — the
@@ -1607,68 +1264,28 @@ private[sources] object VersionedBatchWrite {
 private[sources] case class VersionedCommitMessage(file: Option[String],
     nRows: Long) extends WriterCommitMessage
 
-private[sources] case class VersionedDataWriterFactory(schema: StructType,
-    staging: String) extends DataWriterFactory {
+private[sources] case class VersionedDataWriterFactory(
+    writeConf: Map[String, String], staging: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new VersionedDataWriter(schema,
+    new VersionedDataWriter(writeConf,
       s"$staging/part-$partitionId-$taskId.parquet")
 }
 
-/** Per-partition parquet-mr writer; the file is created lazily on the
-  * first row, so empty partitions stage nothing. */
-private[sources] class VersionedDataWriter(schema: StructType, file: String)
-  extends DataWriter[InternalRow] {
 
-  private val messageType = VersionedDataWriter.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(messageType)
-  /** Fixed-len byte width per big-decimal field, hoisted out of the row
-    * loop (it is a constant of the declared precision; review r16). */
-  private val decWidth: Array[Int] = schema.fields.map(_.dataType match {
-    case d: DecimalType if d.precision > 18 =>
-      VersionedDataWriter.minBytesForPrecision(d.precision)
-    case _ => 0
-  })
-  private var writer: ParquetWriter[Group] = _
+/** Per-partition writer through Spark's own [[ParquetWriteSupport]] — the
+  * row encoder `df.write.parquet` uses, so staged files carry exactly
+  * the layout Spark's readers expect; the file is created lazily on the
+  * first row, so empty partitions stage nothing. */
+private[sources] class VersionedDataWriter(writeConf: Map[String, String],
+    file: String) extends DataWriter[InternalRow] {
+
+  private var writer: ParquetWriter[InternalRow] = _
   private var rows = 0L
 
-  private def ensureWriter(): Unit = if (writer == null) {
-    val conf = VersionedPartitionReader.freshConf()
-    GroupWriteSupport.setSchema(messageType, conf)
-    writer = ExampleParquetWriter.builder(new Path(file)).withConf(conf).build()
-  }
-
   override def write(row: InternalRow): Unit = {
-    ensureWriter()
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) {
-        val n = schema.fields(i).name
-        schema.fields(i).dataType match {
-          case LongType => g.add(n, row.getLong(i))
-          case IntegerType => g.add(n, row.getInt(i))
-          case DoubleType => g.add(n, row.getDouble(i))
-          case FloatType => g.add(n, row.getFloat(i))
-          case BooleanType => g.add(n, row.getBoolean(i))
-          case DateType => g.add(n, row.getInt(i)) // epoch days = parquet DATE
-          case StringType =>
-            g.add(n, Binary.fromString(row.getUTF8String(i).toString))
-          case TimestampType => g.add(n, row.getLong(i)) // UTC micros = INT64
-          case d: DecimalType if d.precision <= 18 =>
-            g.add(n, row.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-          case d: DecimalType =>
-            g.add(n, Binary.fromConstantByteArray(
-              VersionedDataWriter.fixedLenBytes(
-                row.getDecimal(i, d.precision, d.scale)
-                  .toJavaBigDecimal.unscaledValue(),
-                decWidth(i))))
-          case t => throw new IllegalStateException(s"unreachable type $t")
-        }
-      }
-      i += 1
-    }
-    writer.write(g)
+    if (writer == null) writer = VersionedDataWriter.open(file, writeConf)
+    writer.write(row)
     rows += 1
   }
 
@@ -1687,68 +1304,32 @@ private[sources] class VersionedDataWriter(schema: StructType, file: String)
 
 private[sources] object VersionedDataWriter {
 
-  /** StructType → parquet MessageType with the standard logical
-    * annotations (UTF8 strings, DATE int32) — the same physical layout
-    * Spark's own writer produces for these types, so Versioned.read and
-    * the read connector serve connector-written groups identically. */
-  def toMessageType(schema: StructType): MessageType = {
-    val b = PTypes.buildMessage()
-    schema.fields.foreach { f =>
-      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
-      val prim = f.dataType match {
-        case LongType => PTypes.primitive(PrimitiveTypeName.INT64, rep)
-        case IntegerType => PTypes.primitive(PrimitiveTypeName.INT32, rep)
-        case DoubleType => PTypes.primitive(PrimitiveTypeName.DOUBLE, rep)
-        case FloatType => PTypes.primitive(PrimitiveTypeName.FLOAT, rep)
-        case BooleanType => PTypes.primitive(PrimitiveTypeName.BOOLEAN, rep)
-        case DateType => PTypes.primitive(PrimitiveTypeName.INT32, rep)
-          .as(LogicalTypeAnnotation.dateType())
-        case StringType => PTypes.primitive(PrimitiveTypeName.BINARY, rep)
-          .as(LogicalTypeAnnotation.stringType())
-        // UTC-adjusted micros — the layout Spark's own writer produces
-        // for TimestampType with outputTimestampType=TIMESTAMP_MICROS
-        case TimestampType => PTypes.primitive(PrimitiveTypeName.INT64, rep)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        // Spark's modern decimal layout: INT64 unscaled while the
-        // precision fits, minimal fixed-len binary past 18 digits
-        case d: DecimalType if d.precision <= 18 =>
-          PTypes.primitive(PrimitiveTypeName.INT64, rep)
-            .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case d: DecimalType =>
-          PTypes.primitive(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY, rep)
-            .length(minBytesForPrecision(d.precision))
-            .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case t => throw new IllegalArgumentException(
-          s"graft-versioned write: unsupported type $t for '${f.name}'")
-      }
-      b.addField(prim.named(f.name))
-    }
-    b.named("graft_versioned")
+  /** The write configuration, built once on the driver: the row schema
+    * (field metadata dropped, so a footer serves the plain Catalyst
+    * types) plus the format choices pinned as constants rather than read
+    * from the session: the standard (non-legacy) decimal layout and
+    * UTC-adjusted INT64 TIMESTAMP(MICROS). Spark's schema converter reads
+    * the last two keys unconditionally; neither matters here (no field
+    * carries an id, none is a variant). */
+  def conf(schema: StructType): Map[String, String] = Map(
+    ParquetWriteSupport.SPARK_ROW_SCHEMA ->
+      StructType(schema.map(_.copy(metadata = Metadata.empty))).json,
+    SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key -> "false",
+    SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "TIMESTAMP_MICROS",
+    SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key -> "false",
+    SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key -> "false")
+
+  private class Builder(path: Path)
+      extends ParquetWriter.Builder[InternalRow, Builder](path) {
+    override def self(): Builder = this
+    override def getWriteSupport(conf: Configuration)
+        : WriteSupport[InternalRow] = new ParquetWriteSupport()
   }
 
-  /** Smallest two's-complement byte width holding any `precision`-digit
-    * unscaled decimal (Spark's fixed-len decimal sizing rule). */
-  def minBytesForPrecision(precision: Int): Int = {
-    var numBytes = 1
-    while (math.pow(2.0, 8 * numBytes - 1) < math.pow(10.0, precision))
-      numBytes += 1
-    numBytes
-  }
-
-  /** Unscaled value as the exact `width`-byte two's-complement array the
-    * FIXED_LEN_BYTE_ARRAY layout stores (sign-extended left padding). */
-  def fixedLenBytes(unscaled: java.math.BigInteger, width: Int): Array[Byte] = {
-    val minimal = unscaled.toByteArray
-    require(minimal.length <= width,
-      s"decimal unscaled value needs ${minimal.length} bytes > width $width")
-    if (minimal.length == width) minimal
-    else {
-      val out = new Array[Byte](width)
-      val pad: Byte = if (unscaled.signum() < 0) -1 else 0
-      java.util.Arrays.fill(out, 0, width - minimal.length, pad)
-      System.arraycopy(minimal, 0, out, width - minimal.length, minimal.length)
-      out
-    }
+  def open(file: String, writeConf: Map[String, String])
+      : ParquetWriter[InternalRow] = {
+    val conf = VersionedColumnarReader.freshConf()
+    writeConf.foreach { case (k, v) => conf.set(k, v) }
+    new Builder(new Path(file)).withConf(conf).build()
   }
 }

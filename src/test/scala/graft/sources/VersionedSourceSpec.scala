@@ -115,7 +115,7 @@ class VersionedSourceSpec extends SparkSpec {
     val prim = present.asScala.collect {
       case p: org.apache.parquet.schema.PrimitiveType => p.getName -> p
     }.toMap
-    val pred = VersionedPartitionReader.toParquetPredicate(
+    val pred = VersionedColumnarReader.toParquetPredicate(
       Array(GreaterThanOrEqual("k", 5L), EqualTo("tag", "s3"),
         LessThan("x", 9.5), EqualTo("missing_col", 1L)), prim)
     assert(pred.isDefined)

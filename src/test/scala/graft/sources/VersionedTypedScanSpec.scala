@@ -134,36 +134,6 @@ class VersionedTypedScanSpec extends SparkSpec {
     assert(conn.count() == want.size.toLong)
   }
 
-  test("deletion vectors keyed on TIMESTAMP and DECIMAL columns mask " +
-      "identically through columnar and ops reads") {
-    val dir = tmp("morTyped")
-    Versioned.commit(typedFrame(0, 400), dir, statsCol = Some("k"))
-    // timestamp-keyed delete: drop the first 50 seconds
-    val delTs = typedFrame(0, 50).select("ts")
-    Versioned.deleteCommitMor(delTs, dir, "ts")
-    val afterTs = load(dir)
-    assert(scanOf(afterTs).supportsColumnar)
-    // ops-layer reads put the MOR key column FIRST (the using-column
-    // anti-join's output order) — align explicitly; values must match
-    assert(afterTs.orderBy("k").collect().toSeq ==
-      Versioned.read(spark, dir).select(afterTs.columns.map(col): _*)
-        .orderBy("k").collect().toSeq)
-    assert(afterTs.count() == 350)
-    // decimal-keyed delete on a fresh table (applyDeletesCommit re-keys
-    // stats onto the delete key and its stats reader is BIGINT-only — a
-    // pre-existing ops-layer scope line, irrelevant to the scan)
-    val dirD = tmp("morDec")
-    Versioned.commit(typedFrame(0, 400), dirD, statsCol = Some("k"))
-    val delD = typedFrame(50, 100).select("d1")
-    Versioned.deleteCommitMor(delD, dirD, "d1")
-    val afterD = load(dirD)
-    assert(scanOf(afterD).supportsColumnar)
-    assert(afterD.orderBy("k").collect().toSeq ==
-      Versioned.read(spark, dirD).select(afterD.columns.map(col): _*)
-        .orderBy("k").collect().toSeq)
-    assert(afterD.count() == 350)
-  }
-
   test("BIGINT delete keys against a DECIMAL key column mask the same " +
       "rows through the connector and the ops read") {
     val dir = tmp("morDecLong")
@@ -190,19 +160,55 @@ class VersionedTypedScanSpec extends SparkSpec {
     assert(!mask.containsAny(Decimal(BigDecimal(Long.MaxValue) + 1, 38, 0)))
   }
 
-  test("INT64 timestamp scaling floors pre-epoch NANOS and refuses a " +
-      "MILLIS overflow") {
-    val out = new Array[Any](1)
-    new TimestampScaleSlotConverter(out, 0, 1L, 1000L).addLong(-1L)
-    assert(out(0) == -1L, "-1 ns is 1 µs before the epoch, not the epoch")
-    new TimestampScaleSlotConverter(out, 0, 1L, 1000L).addLong(-1500L)
-    assert(out(0) == -2L)
-    new TimestampScaleSlotConverter(out, 0, 1000L, 1L).addLong(-7L)
-    assert(out(0) == -7000L)
-    intercept[ArithmeticException] {
-      new TimestampScaleSlotConverter(out, 0, 1000L, 1L)
-        .addLong(Long.MaxValue / 10)
+  test("deletion vectors keyed by INT64 TIMESTAMP(MILLIS) mask exactly; " +
+      "NANOS ones fail loudly") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types => PTypes}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+    val base = tmp("dvUnit")
+    // data: micros incl. pre-epoch and a sub-millisecond instant
+    val micros = Seq(-2000000L, -1000L, 0L, 1000L, 1500L, 7000L)
+    micros.toDF("m").select(timestamp_micros(col("m")).as("ts"))
+      .coalesce(1).write.parquet(s"$base/data")
+    val data = new java.io.File(s"$base/data").listFiles().map(_.getPath)
+      .find(_.endsWith(".parquet")).get
+    // parquet-mr's example writer, since Spark cannot write NANOS
+    def dvFile(name: String, unit: LogicalTypeAnnotation.TimeUnit,
+        ticks: Seq[Long]): String = {
+      val schema = PTypes.buildMessage()
+        .addField(PTypes.optional(PrimitiveTypeName.INT64)
+          .as(LogicalTypeAnnotation.timestampType(true, unit)).named("ts"))
+        .named("dv")
+      val f = s"$base/$name.parquet"
+      val w = ExampleParquetWriter.builder(new HPath(f)).withType(schema)
+        .build()
+      val groups = new SimpleGroupFactory(schema)
+      try ticks.foreach(t => w.write(groups.newGroup().append("ts", t)))
+      finally w.close()
+      f
     }
+    def survivors(dv: String): Seq[Long] = {
+      val r = new VersionedColumnarReader(data, "c1",
+        StructType(Seq(StructField("ts", TimestampType))), Array.empty,
+        Map.empty, Map.empty, Some("ts"), Seq(dv))
+      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+      try while (r.next()) {
+        val b = r.get()
+        (0 until b.numRows()).foreach(i => out += b.column(0).getLong(i))
+      } finally r.close()
+      out.toSeq.sorted
+    }
+    // -2 s, -1 ms and +1 ms are deleted; 1.5 ms is not a whole millisecond
+    val millis = dvFile("millis", LogicalTypeAnnotation.TimeUnit.MILLIS,
+      Seq(-2000L, -1L, 1L))
+    assert(survivors(millis) == Seq(0L, 1500L, 7000L))
+    val nanos = dvFile("nanos", LogicalTypeAnnotation.TimeUnit.NANOS,
+      Seq(-2000000000L, -1000000L, 1000000L))
+    val err = intercept[Exception](survivors(nanos))
+    assert(err.getMessage.contains("NANOS"), err.getMessage)
   }
 
   test("a deletion-vector probe of an unhandled key type fails loudly") {
@@ -222,5 +228,160 @@ class VersionedTypedScanSpec extends SparkSpec {
         Map.empty, Some("k"), Seq(deletes))
     }
     assert(err.getMessage.contains("ShortType"))
+  }
+
+  test("NaN, -0.0 and 0.0 delete keys mask like the ops-layer anti-join") {
+    val dir = tmp("morNaN")
+    Versioned.commit(Seq(Double.NaN, -0.0, 0.0, 1.5, -2.5, Double.NaN)
+      .zipWithIndex.toDF("k", "v"), dir)
+    Versioned.deleteCommitMor(Seq(Double.NaN, 0.0).toDF("k"), dir, "k")
+    val conn = load(dir)
+    assert(scanOf(conn).supportsColumnar)
+    assert(conn.orderBy("v").collect().toSeq ==
+      Versioned.read(spark, dir).select(conn.columns.map(col): _*)
+        .orderBy("v").collect().toSeq)
+    // Spark's join equality: NaN matches NaN, and 0.0 matches -0.0
+    assert(conn.select("v").as[Int].collect().sorted.toSeq == Seq(3, 4))
+  }
+
+  /** Key column of one SQL type over `id`; every 50th key is NULL. */
+  private def keyed(sqlType: String, lo: Long, hi: Long) = {
+    val id = col("id")
+    val k = sqlType match {
+      case "DATE" => date_add(lit("2020-01-01").cast("date"), id.cast("int"))
+      case "STRING" => concat(lit("k"), id.cast("string"))
+      case "DOUBLE" => id.cast("double") / 4.0
+      case "TIMESTAMP" => timestamp_seconds(id * 37L - 5000L)
+      case d if d.startsWith("DECIMAL") => (id.cast(d) / 4).cast(d)
+      case t => id.cast(t)
+    }
+    spark.range(lo, hi).select(
+      when(id % 50 =!= 49, k).as("k"), id.as("v"))
+  }
+
+  Seq(
+    ("BIGINT", "ops"), ("INT", "ops"), ("DATE", "ops"), ("STRING", "ops"),
+    ("DOUBLE", "ops"), ("TIMESTAMP", "ops"), ("TIMESTAMP", "connector"),
+    ("DECIMAL(9,2)", "ops"), ("DECIMAL(18,4)", "ops"),
+    ("DECIMAL(28,6)", "ops")
+  ).foreach { case (sqlType, writer) =>
+    test(s"deletion vectors keyed on $sqlType ($writer-written) mask like " +
+        "Versioned.read") {
+      val dir = tmp("morKey")
+      Seq((0L, 100L), (100L, 200L), (200L, 300L)).foreach { case (lo, hi) =>
+        val df = keyed(sqlType, lo, hi)
+        if (writer == "ops") Versioned.commit(df, dir)
+        else df.write.format("graft-versioned").option("path", dir)
+          .mode("append").save()
+      }
+      Versioned.deleteCommitMor(
+        keyed(sqlType, 0L, 300L).filter(col("v") % 3 === 0).select("k"),
+        dir, "k")
+      val conn = load(dir)
+      assert(conn.schema("k").dataType.sql == sqlType)
+      assert(scanOf(conn).supportsColumnar)
+      assert(conn.orderBy("v").collect().toSeq ==
+        Versioned.read(spark, dir).select(conn.columns.map(col): _*)
+          .orderBy("v").collect().toSeq)
+      // NULL keys never match; every other multiple of 3 is deleted
+      val want = (0L until 300L).filter(v => v % 50 == 49 || v % 3 != 0)
+      assert(conn.select("v").as[Long].collect().sorted.toSeq == want)
+    }
+  }
+
+  test("an unsupported column type refuses a streaming read at planning") {
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    val base = tmp("gate")
+    Versioned.commit(spark.range(0, 10).select(col("id").as("k"),
+      array(col("id").cast("double")).as("vec")), s"$base/table")
+    val e = intercept[StreamingQueryException] {
+      val q = spark.readStream.format("graft-versioned")
+        .option("path", s"$base/table").load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally { if (q.isActive) q.stop() }
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("v1 scope: unsupported column type")),
+      msgs.mkString(" | "))
+  }
+
+  test("the micro-batch scan reads columnar") {
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.Trigger
+    val base = tmp("mbColumnar")
+    Versioned.commit(typedFrame(0, 200), s"$base/table")
+    Versioned.commit(typedFrame(200, 300), s"$base/table")
+    val q = spark.readStream.format("graft-versioned")
+      .option("path", s"$base/table").load()
+      .writeStream.format("memory").queryName("typed_mb_columnar")
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally { if (q.isActive) q.stop() }
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan
+    val scan = plan.collectFirst { case s: MicroBatchScanExec => s }
+      .getOrElse(fail(s"no MicroBatchScanExec in $plan"))
+    assert(scan.supportsColumnar, "micro-batch scan fell off the " +
+      "vectorized path")
+    assert(spark.table("typed_mb_columnar").orderBy("k").collect().toSeq ==
+      typedFrame(0, 300).orderBy("k").collect().toSeq)
+  }
+
+  test("the row-level UPDATE and MERGE scans read columnar") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val warehouse = tmp("rlColumnar")
+    spark.conf.set("spark.sql.catalog.tscat", classOf[VersionedCatalog].getName)
+    spark.conf.set("spark.sql.catalog.tscat.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS tscat.ns")
+    val t = "tscat.ns.typed"
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT, ts TIMESTAMP, " +
+      "d1 DECIMAL(10,2), d2 DECIMAL(28,6)) TBLPROPERTIES ('statsCol'='k')")
+    Seq((0L, 100L), (100L, 200L)).foreach { case (lo, hi) =>
+      typedFrame(lo, hi).createOrReplaceTempView("typed_src")
+      spark.sql(s"INSERT INTO $t SELECT * FROM typed_src")
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    def rowLevelScans(sql: String): Seq[BatchScanExec] = {
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        spark.sql(sql)
+        org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(p =>
+        helper.collect(p) {
+          case s: BatchScanExec if s.scan.isInstanceOf[VersionedRowLevelScan] => s
+        })
+    }
+    val upd = rowLevelScans(s"UPDATE $t SET v = -v WHERE k >= 120 AND k < 130")
+    assert(upd.nonEmpty && upd.forall(_.supportsColumnar),
+      s"UPDATE scan not columnar: $upd")
+    typedFrame(190, 210).createOrReplaceTempView("typed_merge")
+    val mrg = rowLevelScans(s"""MERGE INTO $t AS tgt USING typed_merge AS s
+      ON tgt.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = 0
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(mrg.nonEmpty && mrg.forall(_.supportsColumnar),
+      s"MERGE scan not columnar: $mrg")
+    val got = spark.table(t).orderBy("k").collect().toSeq
+    val want = typedFrame(0, 210).select(col("k"),
+      when(col("k") >= 120L && col("k") < 130L, -col("v"))
+        .when(col("k") >= 190L && col("k") < 200L, lit(0L))
+        .otherwise(col("v")).as("v"), col("ts"), col("d1"), col("d2"))
+      .orderBy("k").collect().toSeq
+    assert(got == want)
   }
 }
