@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   *       keys is the regime where the old one-task plan serialized
   *       every key through a single writer);
   *   (b) the MASKED read vs the pre-delete UNMASKED read, through BOTH
-  *       read paths — the ops layer (anti-join shuffle) and the
-  *       connector (per-row executor-side hash probe against the
+  *       read surfaces — `Versioned.read` and the connector's format
+  *       lookup, one scan (per-row executor-side hash probe against the
   *       group's own vector) — the per-row mask overhead that decides
   *       whether positional bitmaps (r14 "What's missing" #3) are worth
-  *       building.
+  *       building. Every read is checked against `spark.range`
+  *       arithmetic over the keys that exist and survive.
   *
   * Prints ONE JSON line; append the numbers to PERF.md's rehearsal
   * section. Usage:
@@ -82,9 +83,18 @@ object DvRehearsal {
         .option("versionAsOf", v.toString).load()
         .agg(sum("v")).head().getLong(0)
 
+    // the committed keys are [0, per * nGroups); `keep` picks survivors
+    def want(keep: org.apache.spark.sql.Column): Long =
+      spark.range(0, per * nGroups).filter(keep)
+        .agg(sum(col("id") % 97)).head().getLong(0)
+    def check(what: String, got: Long, expected: Long): Unit =
+      require(got == expected, s"$what read: $got, expected $expected")
+
     val (opsPreSec, opsPreSum) = bestOf(reps)(opsRead(vPre))
     val (connPreSec, connPreSum) = bestOf(reps)(connRead(vPre))
-    require(opsPreSum == connPreSum, s"pre-read disagree: $opsPreSum vs $connPreSum")
+    val wantPre = want(lit(true))
+    check("ops pre", opsPreSum, wantPre)
+    check("connector pre", connPreSum, wantPre)
 
     // the delete: every mod-th key — touches EVERY group's range
     val mod = math.max(2L, math.round(1.0 / frac))
@@ -97,9 +107,9 @@ object DvRehearsal {
 
     val (opsPostSec, opsPostSum) = bestOf(reps)(opsRead(vPost))
     val (connPostSec, connPostSum) = bestOf(reps)(connRead(vPost))
-    require(opsPostSum == connPostSum,
-      s"post-read disagree: $opsPostSum vs $connPostSum")
-    require(opsPostSum < opsPreSum, "mask did not reduce the aggregate")
+    val wantPost = want(col("id") % mod =!= 0)
+    check("ops masked", opsPostSum, wantPost)
+    check("connector masked", connPostSum, wantPost)
 
     def pct(post: Double, pre: Double): Double =
       math.round((post / pre - 1.0) * 1000.0) / 10.0

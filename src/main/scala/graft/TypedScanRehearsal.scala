@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * connector scan refuse outright (the v1 type gate), so the only
   * honest A/B is connector-vs-native-parquet PARITY on the same files
   * (the same gate the r15 connector overhaul was graded on), plus the
-  * ops-layer read as the second reference.
+  * ops-layer read (the same scan, built without the format lookup).
+  * Every read is checked against the aggregate of the generating frame.
   *
   * Prints ONE JSON line. Usage:
   *   runMain graft.TypedScanRehearsal <workDir> [nRows] [nGroups] [reps]
@@ -55,16 +56,13 @@ object TypedScanRehearsal {
     // timestamp lands as Spark's INT96 default; decimals as INT64
     // (p<=18) and FIXED_LEN_BYTE_ARRAY (p>18) — all three physical
     // decimal/timestamp layouts the reader serves
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      col("id").as("k"),
+      timestamp_micros(lit(1700000000000000L) + col("id")).as("ts"),
+      (col("id").cast("decimal(18,4)") / 7).cast("decimal(18,4)").as("d1"),
+      (col("id").cast("decimal(28,6)") * 3).cast("decimal(28,6)").as("d2"))
     (0 until nGroups).foreach { g =>
-      Versioned.commit(
-        spark.range(g * per, (g + 1) * per).select(
-          col("id").as("k"),
-          timestamp_micros(lit(1700000000000000L) + col("id")).as("ts"),
-          (col("id").cast("decimal(18,4)") / 7).cast("decimal(18,4)")
-            .as("d1"),
-          (col("id").cast("decimal(28,6)") * 3).cast("decimal(28,6)")
-            .as("d2")),
-        dir, statsCol = Some("k"))
+      Versioned.commit(rows(g * per, (g + 1) * per), dir, statsCol = Some("k"))
     }
     // the aggregate touches every typed column, so column decode — not
     // the agg — dominates; count(ts) + sum of both decimals
@@ -84,17 +82,17 @@ object TypedScanRehearsal {
 
     val groupsExist = new java.io.File(s"$dir/data").listFiles() != null
     require(groupsExist, s"no data groups under $dir/data")
-    val native = { val (s, v) = bestOf(reps)(nativeRead()); Some((s, v)) }
+    val (nativeSec, nativeSum) = bestOf(reps)(nativeRead())
     val (connSec, connSum) = bestOf(reps)(connRead())
     val (opsSec, opsSum) = bestOf(reps)(opsRead())
-    require(connSum == opsSum, s"typed read disagrees: $connSum vs $opsSum")
-    native.foreach { case (_, v) =>
-      require(v == connSum, s"native read disagrees: $v vs $connSum") }
+    val want = aggOf(rows(0, per * nGroups))
+    Seq("connector" -> connSum, "ops" -> opsSum, "native" -> nativeSum)
+      .foreach { case (what, got) =>
+        require(got == want, s"$what read disagrees: $got vs $want") }
     // the table holds per*nGroups rows (integer division) — report that
     println(s"""{"metric":"typed_scan_rehearsal","rows":${per * nGroups},""" +
       s""""groups":$nGroups,"conn_sec":${f"$connSec%.2f"},""" +
-      s""""ops_sec":${f"$opsSec%.2f"}""" +
-      native.map { case (s, _) =>
-        s""","native_parquet_sec":${f"$s%.2f"}""" }.getOrElse("") + "}")
+      s""""ops_sec":${f"$opsSec%.2f"},""" +
+      s""""native_parquet_sec":${f"$nativeSec%.2f"}}""")
   }
 }

@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * scale, where a [[Versioned]] verb moves a few thousand rows); this
   * object reads the same footer Spark's non-merge inference would read
   * and hands the schema to `spark.read.schema(...)`, so Spark jobs only
-  * move data. Shared by the ops layer, the DSv2 connector and the MV
-  * rewrite rule. */
+  * move data. The connector plans every snapshot read from its group
+  * schemas; the ops layer's group rewrites and delete-key reads and the
+  * MV rewrite rule read parquet through [[read]]. */
 object ParquetFooters {
 
   /** Per-root resolution: which file Spark's inference would pick under

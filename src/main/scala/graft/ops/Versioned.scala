@@ -291,11 +291,6 @@ object Versioned {
       }.toMap)
       .getOrElse(Map.empty)
 
-  /** Apply a version's column mapping to a frame read from its physical
-    * files — the last step of every read path. */
-  private def applyRenames(df: DataFrame, m: Map[String, String]): DataFrame =
-    m.foldLeft(df) { case (d, (p, l)) => d.withColumnRenamed(p, l) }
-
   /** Translate a LOGICAL-schema batch back to the table's PHYSICAL
     * column names before writing its file group (Delta column mapping's
     * write half: files always carry the original physical names, so a
@@ -397,33 +392,17 @@ object Versioned {
     (dgs, dk)
   }
 
-  /** Anti-join `df` against version `v`'s accumulated equality-delete
-    * files — the merge-on-read half of every snapshot read. The delete
-    * frame is the union of the (small) delete files; one key-shuffle of
-    * the read (or a broadcast when the delete set is small, which AQE
-    * picks up at runtime). */
-  private def applyMorDeletes(spark: SparkSession, dir: String, v: Int,
-      df: DataFrame): DataFrame = {
-    morDeleteKeys(spark, dir, v) match {
-      case None => df
-      case Some((dels, dk)) => df.join(dels, Seq(dk), "left_anti")
-    }
-  }
-
-  /** The union frame of a version's delete-file keys (one column, the
-    * delete key), or None when the version carries no MOR deletes.
-    * Delete dirs are read ONE AT A TIME then unioned: a history may mix
-    * the flat legacy layout and the per-group `__tg=`-partitioned
-    * deletion-vector layout ([[deleteCommitMor]]), and parquet partition
-    * discovery cannot span both under one multi-root read. */
-  private def morDeleteKeys(spark: SparkSession, dir: String, v: Int)
-      : Option[(DataFrame, String)] = {
-    import org.apache.spark.sql.functions.col
-    val (dgs, dk) = readDeletes(dir, v)
-    if (dgs.isEmpty) None
-    else Some((dgs.map(g => readGroups(spark, dir, Seq(g)).select(col(dk.get)))
-      .reduce(_ unionAll _).distinct(), dk.get))
-  }
+  /** The distinct keys of delete groups `dgs` (one column, `dk`) — the
+    * planning input of [[applyDeletesCommit]] and the change feed's
+    * delete steps. Delete dirs are read ONE AT A TIME then unioned: a
+    * history may mix the flat legacy layout and the per-group
+    * `__tg=`-partitioned deletion-vector layout ([[deleteCommitMor]]),
+    * and parquet partition discovery cannot span both under one
+    * multi-root read. */
+  private def deleteKeys(spark: SparkSession, dir: String, dgs: Seq[String],
+      dk: String): DataFrame =
+    dgs.map(g => readGroups(spark, dir, Seq(g)).select(dk))
+      .reduce(_ unionAll _).distinct()
 
   private def requireNoMorDeletes(dir: String, v: Int, verb: String): Unit =
     require(readDeletes(dir, v)._1.isEmpty,
@@ -435,7 +414,10 @@ object Versioned {
     * is empty or the column is all-null. Read from the written footers'
     * column statistics; only a group the footers cannot answer for (a
     * non-BIGINT column, chunks without statistics) pays an aggregation
-    * job. */
+    * job, over the column cast to BIGINT — the cast every stats consumer
+    * ([[touchedGroups]], [[deleteCommitMor]]'s routing) applies to the
+    * keys it plans. A column without an order-preserving BIGINT image
+    * (strings, dates) records none: its group is planned conservatively. */
   private def writtenStats(spark: SparkSession, dir: String, group: String,
       statsCol: String): Option[(Long, Long)] = {
     val root = resolveGroup(dir, group)
@@ -444,11 +426,18 @@ object Versioned {
     field.flatMap(f => ParquetFooters.longMinMax(
         ParquetFooters.dataFooters(root, spark.sparkContext.hadoopConfiguration),
         f.name, f.dataType))
-      .getOrElse {
-        val row = readGroups(spark, dir, Seq(group))
-          .selectExpr(s"min($statsCol)", s"max($statsCol)").head()
-        if (row.isNullAt(0)) None else Some((row.getLong(0), row.getLong(1)))
-      }
+      .getOrElse(field.map(_.dataType) match {
+        case Some(_: org.apache.spark.sql.types.NumericType |
+            org.apache.spark.sql.types.TimestampType) =>
+          import org.apache.spark.sql.functions.{col, max, min}
+          val c = col(statsCol).try_cast("long")
+          val row = readGroups(spark, dir, Seq(group)).select(min(c), max(c))
+            .head()
+          if (row.isNullAt(0)) None else Some((row.getLong(0), row.getLong(1)))
+        case Some(_) => None
+        case None => throw new IllegalArgumentException(
+          s"stats column $statsCol is not in group $group at $dir")
+      })
   }
 
   /** EXACT row count of a freshly-written file group, summed from its
@@ -726,17 +715,8 @@ object Versioned {
     * ignored; fails when `ts` precedes every retained stamped commit
     * (exactly Delta's behaviour). */
   def readAsOfTimestamp(spark: SparkSession, dir: String, ts: Long)
-      : DataFrame = {
-    val stamped = (1 to latestVersion(dir))
-      .flatMap(v => readTs(dir, v).map(v -> _))
-    val eligible = stamped.filter(_._2 <= ts)
-    require(eligible.nonEmpty,
-      s"no retained commit at or before ts=$ts at $dir (stamped: $stamped)")
-    // tie-break toward the HIGHEST version: two commits can share a
-    // stamp (the F9 pinned-clock discipline makes that routine in
-    // replays) and plain maxBy(ts) would return the OLDEST of them
-    read(spark, dir, eligible.maxBy(e => (e._2, e._1))._1)
-  }
+      : DataFrame =
+    read(spark, dir, versionAtTimestamp(dir, ts))
 
   /** Statistics-pruned snapshot read: plan only the file groups whose
     * recorded [min,max] of `statsCol` intersects [lo,hi] (a group
@@ -752,16 +732,9 @@ object Versioned {
     val stats = readStats(dir, v)
     val planned = groups.filter(g =>
       stats.get(g).forall { case (glo, ghi) => ghi >= lo && glo <= hi })
-    val df =
-      if (planned.isEmpty)
-        read(spark, dir, v).filter(col(statsCol) >= lo && col(statsCol) <= hi)
-          .filter(org.apache.spark.sql.functions.lit(false))
-      else
-        applyRenames(applyMorDeletes(spark, dir, v,
-            normalizedGroupsRead(spark, dir, v, planned)),
-          readRenames(dir, v))
-          .filter(col(statsCol) >= lo && col(statsCol) <= hi)
-    (df, planned.size, groups.size)
+    (groupsRead(spark, dir, v, planned)
+      .filter(col(statsCol) >= lo && col(statsCol) <= hi),
+      planned.size, groups.size)
   }
 
   /** Box-pruned snapshot read over TWO-dimensional manifest statistics
@@ -773,7 +746,7 @@ object Versioned {
   def boxPrunedRead(spark: SparkSession, dir: String, aCol: String,
       bCol: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long,
       version: Int = 0): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val v = if (version == 0) latestVersion(dir) else version
     readStatsCol2(dir, v).foreach { case (ra, rb) =>
       require(ra == aCol && rb == bCol,
@@ -786,15 +759,10 @@ object Versioned {
     val planned = groups.filter(g => stats2.get(g).forall {
       case (gaLo, gaHi, gbLo, gbHi) =>
         gaHi >= aLo && gaLo <= aHi && gbHi >= bLo && gbLo <= bHi })
-    val residual = (d: DataFrame) => d.filter(
+    (groupsRead(spark, dir, v, planned).filter(
       col(aCol) >= aLo && col(aCol) <= aHi &&
-        col(bCol) >= bLo && col(bCol) <= bHi)
-    val df =
-      if (planned.isEmpty) residual(read(spark, dir, v)).filter(lit(false))
-      else residual(applyRenames(applyMorDeletes(spark, dir, v,
-          normalizedGroupsRead(spark, dir, v, planned)),
-        readRenames(dir, v)))
-    (df, planned.size, groups.size)
+        col(bCol) >= bLo && col(bCol) <= bHi),
+      planned.size, groups.size)
   }
 
   /** The file groups of version `v` whose recorded [min,max] of the
@@ -945,8 +913,8 @@ object Versioned {
   /** MERGE-ON-READ equality delete (the Iceberg v2 equality-delete-file /
     * Delta deletion-vector design, public): instead of rewriting ANY data
     * group, commit a SMALL file of deleted keys; every subsequent read of
-    * the snapshot anti-joins it out ([[read]] applies this
-    * automatically). This is the third point on the delete
+    * the snapshot masks those keys out ([[read]]'s scan loads each
+    * group's deletion vector). This is the third point on the delete
     * write-amplification spectrum —
     * [[deleteCommit]] rewrites the table, [[deleteCommitCow]] rewrites
     * the touched groups, this rewrites NOTHING (cost O(deleted keys)) and
@@ -981,10 +949,10 @@ object Versioned {
     // would otherwise build a mask the connector's typed probe misses.
     // A key whose cast does not compare equal to itself under Spark's
     // coercion (5.5 into BIGINT, 'x' into BIGINT) matches no table value
-    // in the read's anti-join either, so it is dropped, never truncated
-    // into a match. Only NULL keys are dropped (anti-join equality never
-    // matches NULL); a NaN key matches NaN rows in that anti-join, so it
-    // is kept — `na.drop()` would drop NaN with the NULLs.
+    // under join equality either, so it is dropped, never truncated into
+    // a match. Only NULL keys are dropped (join equality never matches
+    // NULL); a NaN key matches NaN rows under join equality, so it is
+    // kept — `na.drop()` would drop NaN with the NULLs.
     val given = deletes.col(key)
     val tableKeyType = ParquetFooters.schema(spark,
         groups.map(resolveGroup(dir, _))).fields
@@ -1053,8 +1021,7 @@ object Versioned {
       // was routed. A data group appended LATER is outside the
       // scope and the connector must mask it with the FULL key
       // union (appends carry delete files forward — a re-inserted
-      // key stays deleted until applyDeletesCommit, exactly like
-      // the ops-layer anti-join; review r16)
+      // key stays deleted until applyDeletesCommit; review r16)
       Files.write(Paths.get(dgroupDir, "_scope"),
         groups.mkString("\n").getBytes(
           java.nio.charset.StandardCharsets.UTF_8))
@@ -1076,20 +1043,19 @@ object Versioned {
     * maintenance verb (Iceberg rewrite_data_files on deletes / Delta
     * PURGE): plan the data groups whose manifest stats could contain a
     * deleted key (the [[touchedGroups]] broadcast range-join over the
-    * UNION of the delete files), rewrite only those with the anti-join
-    * applied, carry the rest by name, and publish a delete-free version.
+    * UNION of the delete files), rewrite only those through the masked
+    * read, carry the rest by name, and publish a delete-free version.
     * Requires the delete key to be the stats column (or the table to
     * carry no stats, in which case everything rewrites — the only
     * correct plan). Returns (version, rewrittenGroups, carriedGroups). */
   def applyDeletesCommit(spark: SparkSession, dir: String)
       : (Int, Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions.col
     val parent = latestVersion(dir)
     require(parent > 0, s"nothing to apply at $dir")
     requireNoRenames(dir, parent, "applyDeletesCommit")
     requireNoDefaults(dir, parent, "applyDeletesCommit")
     requireNoDrops(dir, parent, "applyDeletesCommit")
-    val Some((delKeys, dk)) = morDeleteKeys(spark, dir, parent): @unchecked
+    val (dgs, Some(dk)) = readDeletes(dir, parent): @unchecked
     // the manifest stats can only plan the fold when they describe the
     // DELETE KEY's column; stats on any other column (or unlabeled
     // legacy stats) make every group conservatively touched — comparing
@@ -1097,7 +1063,8 @@ object Versioned {
     // fast path and RESURRECT every deleted row
     val statsUsable = readStatsCol(dir, parent).contains(dk)
     val (touched, carried) =
-      if (statsUsable) touchedGroups(delKeys, dk, dir, parent)
+      if (statsUsable)
+        touchedGroups(deleteKeys(spark, dir, dgs, dk), dk, dir, parent)
       else (readManifest(dir, parent), Seq.empty[String])
     if (touched.isEmpty) {
       // no group can contain a deleted key: just drop the delete files
@@ -1109,8 +1076,7 @@ object Versioned {
           s"applyDeletesCommit at $dir lost the race for version $v")
       (v, Seq.empty, carried)
     } else {
-      val purged = readGroups(spark, dir, touched)
-        .join(delKeys, Seq(dk), "left_anti")
+      val purged = groupsRead(spark, dir, parent, touched)
       // in the pruned path the recorded stats column IS dk (checked
       // above); in the conservative path nothing is carried, so fresh
       // dk stats are consistent either way
@@ -1659,8 +1625,8 @@ object Versioned {
       requireNoRenames(dir, v, s"change feed (v$v in range)"))
     // an ADD COLUMN inside the range changes the feed's schema shape
     // mid-stream — blocked, the CDF-across-schema-change restriction
-    // (a feed entirely after the ALTER is fine: post-ALTER appends are
-    // physically complete and diff steps read through [[read]])
+    // (a feed entirely after the ALTER is fine: every step reads
+    // through the version's own scan)
     val feedDefaults = readDefaults(dir, toVersion)
     val feedDrops = readDrops(dir, toVersion)
     (math.max(1, fromVersion) to toVersion).foreach { v =>
@@ -1679,26 +1645,10 @@ object Versioned {
           val added =
             readManifest(dir, v).toSet -- (
               if (v == 1) Set.empty[String] else readManifest(dir, v - 1).toSet)
-          // carried MOR delete files can mask rows of the appended group
-          // (the key was deleted before the append) — apply them so the
-          // feed only emits rows the snapshot actually shows. Under the
-          // feed's (constant) schema actions the groups normalize
-          // PER-GROUP exactly like read(): a shallow clone's v1
-          // references pre-ALTER source groups by path that lack a
-          // defaulted column while post-ALTER groups carry it — a raw
-          // multi-path read would crash or null where read() fills.
-          val sortedAdded = added.toSeq.sorted
-          val stepBase =
-            if (feedDefaults.isEmpty && feedDrops.isEmpty)
-              readGroups(spark, dir, sortedAdded)
-            else {
-              val frames = sortedAdded.map(g => withoutDrops(withDefaults(
-                readGroups(spark, dir, Seq(g)), feedDefaults),
-                feedDrops))
-              val canonical = frames.head.columns.toSeq
-              balancedUnion(frames.map(_.select(canonical.map(col): _*)))
-            }
-          applyMorDeletes(spark, dir, v, stepBase)
+          // the added groups through version v's own scan: carried MOR
+          // delete files mask keys deleted before the append, and pending
+          // defaults/drops normalize each group as every read does
+          groupsRead(spark, dir, v, added.toSeq)
             .withColumn("_change_type", lit("insert"))
         } else {
           // MOR-delete fast path: data groups unchanged, delete files
@@ -1710,11 +1660,9 @@ object Versioned {
           val newDels = cd.filterNot(pd.toSet)
           if (newDels.nonEmpty && cd.take(pd.size) == pd &&
               readManifest(dir, v) == readManifest(dir, v - 1)) {
-            // per-dir reads: delete dirs may be flat or __tg=-partitioned
-            val keys = newDels.map(g =>
-                readGroups(spark, dir, Seq(g)).select(col(cdk.get)))
-              .reduce(_ unionAll _).distinct()
-            read(spark, dir, v - 1).join(keys, Seq(cdk.get), "left_semi")
+            read(spark, dir, v - 1)
+              .join(deleteKeys(spark, dir, newDels, cdk.get), Seq(cdk.get),
+                "left_semi")
               .withColumn("_change_type", lit("delete"))
           } else snapshotDiff(read(spark, dir, v - 1), read(spark, dir, v), key)
         }
@@ -1792,27 +1740,11 @@ object Versioned {
     (expired.size, orphans.length)
   }
 
-  /** [[read]] with parquet schema merging — SCHEMA EVOLUTION across
-    * commits: a later append may carry ADDED columns; the merged read
-    * reconciles all groups' footers and null-fills columns an older
-    * group never wrote (exactly the s15 mechanism, now over the
-    * version log's planned file set). Readers of OLD versions still see
-    * that version's schema — evolution is additive, never retroactive. */
+  /** [[read]] — kept as the SCHEMA EVOLUTION verb's name: every read
+    * serves the union of the version's group schemas, null-filling
+    * columns an older group never wrote. */
   def readMerged(spark: SparkSession, dir: String, version: Int = 0)
-      : DataFrame = {
-    val v = if (version == 0) latestVersion(dir) else version
-    val groups = readManifest(dir, v)
-    require(groups.nonEmpty, s"version $v has an empty manifest")
-    // mergeSchema reconciles raw footers — it would resurrect a
-    // metadata-only dropped column and null-fill where a pending
-    // default fills: the two sanctioned read verbs must never disagree
-    requireNoDefaults(dir, v, "readMerged")
-    requireNoDrops(dir, v, "readMerged")
-    applyRenames(applyMorDeletes(spark, dir, v,
-      spark.read.option("mergeSchema", "true")
-        .parquet(groups.map(resolveGroup(dir, _)): _*)),
-      readRenames(dir, v))
-  }
+      : DataFrame = read(spark, dir, version)
 
   /** File-group count of a version's manifest (layout observability). */
   def groupCount(dir: String, version: Int = 0): Int = {
@@ -1829,53 +1761,24 @@ object Versioned {
   }
 
   /** Read a specific version (time travel), or the latest when `version`
-    * is 0. Plans only the file groups in that version's manifest and
-    * applies its pending merge-on-read deletes ([[deleteCommitMor]]) —
-    * readers always see the logical snapshot. */
-  /** Read `groups` of version `v` with the version's full schema
-    * normalization — per-group initial-default fill / dropped-column
-    * projection (Iceberg initial-default / parquet schema-evolution
-    * semantics: only groups whose physical schema predates an added
-    * column read its default, a post-ALTER group's genuine NULLs are
-    * never overwritten, and dropped columns are projected out last).
-    * The per-group frames union pairwise (log-depth plan, the change
-    * feed's balancedUnion discipline). Shared by [[read]] and the
-    * pruning reads so EVERY sanctioned read verb shows the same rows —
-    * a pruned read that bypassed this would resurrect dropped columns
-    * and null where read() fills. */
-  private def normalizedGroupsRead(spark: SparkSession, dir: String,
-      v: Int, groups: Seq[String]): DataFrame = {
-    val defaults = readDefaults(dir, v)
-    val drops = readDrops(dir, v)
-    if (defaults.isEmpty && drops.isEmpty) readGroups(spark, dir, groups)
-    else {
-      val canonical = withoutDrops(withDefaults(
-        readGroups(spark, dir, groups.take(1)), defaults),
-        drops).columns.toSeq
-      balancedUnion(groups.map(g =>
-        withoutDrops(withDefaults(
-          readGroups(spark, dir, Seq(g)), defaults), drops)
-          .select(canonical.map(org.apache.spark.sql.functions.col): _*)))
-    }
-  }
+    * is 0, through the connector's scan pinned to that version
+    * ([[graft.sources.VersionedRead]]): only the manifest's file groups
+    * are planned, in table column order, with every pending state
+    * served per file — renames, initial defaults (only groups whose
+    * physical schema predates the column read it), drops, and
+    * merge-on-read deletes ([[deleteCommitMor]]). The schema is the
+    * union of the groups' schemas; a TRUNCATE tombstone serves its
+    * recorded schema, empty. A table without that version's manifest
+    * (never committed, or vacuumed) fails loudly. */
+  def read(spark: SparkSession, dir: String, version: Int = 0): DataFrame =
+    graft.sources.VersionedRead.frame(spark, dir, connectorPlan(dir, version))
 
-  def read(spark: SparkSession, dir: String, version: Int = 0): DataFrame = {
-    val v = if (version == 0) latestVersion(dir) else version
-    val groups = readManifest(dir, v)
-    if (groups.isEmpty) {
-      // an EMPTY snapshot is legal exactly when it records its schema —
-      // the TRUNCATE tombstone ([[truncateCommit]]); serve a typed empty
-      // frame (history before it still time-travels normally)
-      val ddl = readSchemaDdl(dir, v).getOrElse(throw new
-        IllegalArgumentException(
-          s"version $v has an empty manifest and no recorded schema"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
-    applyRenames(applyMorDeletes(spark, dir, v,
-      normalizedGroupsRead(spark, dir, v, groups)), readRenames(dir, v))
-  }
+  /** [[read]] of version `v` narrowed to `groups` — the pruned reads,
+    * the change feed's append steps and the delete fold's rewrite. */
+  private def groupsRead(spark: SparkSession, dir: String, v: Int,
+      groups: Seq[String]): DataFrame =
+    graft.sources.VersionedRead.frame(spark, dir, connectorPlan(dir, v),
+      Some(groups))
 
   /** TRUNCATE as a first-class verb (SQL `TRUNCATE TABLE` via the
     * connector's TruncatableTable): publish an EMPTY TOMBSTONE snapshot —
@@ -1959,10 +1862,10 @@ object Versioned {
       // ONLY when the caller opted in (`omitDefaultedOk` — the RUNNING
       // streaming sink, whose writer schema was fixed at query start),
       // a staged group may OMIT a column that carries a registered
-      // DEFAULT: both read paths fill defaults PER GROUP by physical
-      // absence ([[normalizedGroupsRead]] / the connector's per-file
-      // reader), so the group reads complete anyway — that is what lets
-      // a live stream survive a mid-stream ALTER ADD COLUMN. BATCH
+      // DEFAULT: the scan fills defaults PER GROUP by physical absence
+      // (the connector's per-file reader), so the group reads complete
+      // anyway — that is what lets a live stream survive a mid-stream
+      // ALTER ADD COLUMN. BATCH
       // appends stay strict (review r15): Spark's analysis includes the
       // new column for them, so an omission there is schema drift and
       // must refuse loudly, keeping the post-ALTER-groups-are-complete
@@ -2300,10 +2203,9 @@ object Versioned {
     * literal fill for groups whose physical schema predates the column;
     * drop = projected out of the served schema; MOR deletes = per-group
     * deletion vectors each reader loads executor-side and applies
-    * row-by-row, nothing collected on the driver) —
-    * exactly [[read]]'s normalization, pushed into the DSv2 scan so
-    * ALTERed and MOR-deleted tables read through the external surface
-    * with ZERO data rewritten and nothing refused. */
+    * row-by-row, nothing collected on the driver), so ALTERed and
+    * MOR-deleted tables read with ZERO data rewritten and nothing
+    * refused. Every snapshot read ([[read]] included) plans from it. */
   def connectorPlan(dir: String, version: Int = 0): ConnectorPlan = {
     val v = if (version == 0) latestVersion(dir) else version
     val groups = readManifest(dir, v)

@@ -209,6 +209,9 @@ object Mv {
       if (done.isFile && java.nio.file.Files.exists(sidecar))
         new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8").trim.toInt
       else {
+        // the build aggregates the base snapshot — an entry still
+        // registered for it would answer the build from the old MV
+        registry.remove(canonical(tableDir))
         val head = graft.ops.Versioned.latestVersion(tableDir)
         require(head > 0, s"nothing to materialize at $tableDir")
         partialsOf(graft.ops.Versioned.read(spark, tableDir, head),

@@ -100,17 +100,13 @@ class VersionedCatalog extends TableCatalog with SupportsNamespaces {
   private def loadAt(ident: Identifier, version: Int): Table = {
     val dir = tableDir(ident)
     val schema: StructType =
-      if (Versioned.latestVersion(dir) > 0) {
-        val p = Versioned.connectorPlan(dir, version)
+      if (Versioned.latestVersion(dir) > 0)
         // the LOGICAL schema: union of per-group schemas (a later append
         // may have added columns), under the version's pending renames /
-        // drops / defaults — ALTERed tables serve their evolved shape;
-        // a TRUNCATE tombstone serves its recorded DDL
-        if (p.isTombstone) DataType.fromDDL(p.schemaDdl.get)
-          .asInstanceOf[StructType]
-        else VersionedSource.evolvedSchema(SparkSession.active,
-          p.groups.map(_._2), p.renames, p.drops, p.defaults)
-      } else if (Files.exists(schemaSidecar(dir))) {
+        // drops / defaults; a TRUNCATE tombstone serves its recorded DDL
+        VersionedSource.servedSchema(SparkSession.active,
+          Versioned.connectorPlan(dir, version))
+      else if (Files.exists(schemaSidecar(dir))) {
         require(version == 0,
           s"$catalogName.${ident} has no commits — nothing to time travel to")
         DataType.fromJson(new String(Files.readAllBytes(schemaSidecar(dir)),

@@ -51,6 +51,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    is added to the decode set when the query itself does not
   *    project it.
   *
+  * Every top-level column the file holds is decoded by the reader,
+  * arrays, maps and structs included (Spark's nested vectorized path).
   * Files are written by Spark with standard annotations; INT96
   * timestamps ride the vectorized reader's CORRECTED rebase. */
 private[sources] class VersionedColumnarReader(file: String, group: String,
@@ -65,10 +67,8 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
   private val path = new Path(file)
   private val fileSchema: MessageType =
     VersionedColumnarReader.schemaOf(path, conf)
-  private val present: Map[String, PrimitiveType] =
-    fileSchema.getFields.asScala.collect {
-      case p: PrimitiveType => p.getName -> p
-    }.toMap
+  private val present: Map[String, Type] =
+    fileSchema.getFields.asScala.map(f => f.getName -> f).toMap
 
   private val physName: Array[String] =
     required.fields.map(f => logicalToPhysical.getOrElse(f.name, f.name))
@@ -99,7 +99,8 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
   private val requestedSchema =
     if (!needExtraKey) servedSchema
     else StructType(servedSchema.fields :+ StructField(maskKeyPhys,
-      VersionedColumnarReader.catalystTypeOf(present(maskKeyPhys))))
+      VersionedColumnarReader.catalystTypeOf(
+        present(maskKeyPhys).asPrimitiveType)))
 
   /** Key column's slot in the decoded batch + its Catalyst type. */
   private val keyBatchIdx: Int =
@@ -191,7 +192,7 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
     * as-is in the compacted batch). Allocated on first masked batch. */
   private var compactVecs: Array[OnHeapColumnVector] = _
   private var compactBatch: ColumnarBatch = _
-  private var copiers: Array[(ColumnVector, Int, WritableColumnVector, Int) => Unit] = _
+  private var copiers: Array[(ColumnVector, Int, WritableColumnVector) => Unit] = _
 
   private var outBatch: ColumnarBatch = _ // zero-copy reorder wrapper
   private var currentOut: ColumnarBatch = _
@@ -236,7 +237,7 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
       compactVecs = OnHeapColumnVector.allocateColumns(
         VersionedColumnarReader.Capacity, servedSchema)
       copiers = servedSchema.fields.map(f =>
-        VersionedColumnarReader.copierFor(f.dataType))
+        VersionedColumnarReader.appenderFor(f.dataType))
       val cols = new Array[ColumnVector](required.length)
       var i = 0
       while (i < required.length) {
@@ -255,11 +256,7 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
       val src = b.column(c)
       val cp = copiers(c)
       var r = 0
-      while (r < kept) {
-        val s = sel(r)
-        if (src.isNullAt(s)) dst.putNull(r) else cp(src, s, dst, r)
-        r += 1
-      }
+      while (r < kept) { cp(src, sel(r), dst); r += 1 }
       c += 1
     }
     compactBatch.setNumRows(kept)
@@ -287,24 +284,83 @@ private[sources] object VersionedColumnarReader {
       .convert(new MessageType("key", java.util.List.of(p: Type)))
       .head.dataType
 
-  /** Per-type survivor copier, picked once per column per file. */
-  def copierFor(dt: DataType)
-      : (ColumnVector, Int, WritableColumnVector, Int) => Unit = dt match {
-    case LongType | TimestampType =>
-      (s, sr, d, dr) => d.putLong(dr, s.getLong(sr))
-    case IntegerType | DateType =>
-      (s, sr, d, dr) => d.putInt(dr, s.getInt(sr))
-    case DoubleType => (s, sr, d, dr) => d.putDouble(dr, s.getDouble(sr))
-    case FloatType => (s, sr, d, dr) => d.putFloat(dr, s.getFloat(sr))
-    case BooleanType => (s, sr, d, dr) => d.putBoolean(dr, s.getBoolean(sr))
-    case StringType => (s, sr, d, dr) => {
-      val u = s.getUTF8String(sr)
-      d.putByteArray(dr, u.getBytes)
+  /** Per-type survivor copier, picked once per column per file: appends
+    * row `i` of a decoded vector to `dst`, nulls included. Arrays, maps
+    * and structs recurse into their children; a decoded nested vector is
+    * one of Spark's writable vectors, whose offsets address them. */
+  def appenderFor(dt: DataType)
+      : (ColumnVector, Int, WritableColumnVector) => Unit = {
+    val value: (ColumnVector, Int, WritableColumnVector) => Unit = dt match {
+      case BooleanType => (s, i, d) => d.appendBoolean(s.getBoolean(i))
+      case ByteType => (s, i, d) => d.appendByte(s.getByte(i))
+      case ShortType => (s, i, d) => d.appendShort(s.getShort(i))
+      case IntegerType | DateType | _: YearMonthIntervalType =>
+        (s, i, d) => d.appendInt(s.getInt(i))
+      case LongType | TimestampType | TimestampNTZType |
+          _: DayTimeIntervalType =>
+        (s, i, d) => d.appendLong(s.getLong(i))
+      case FloatType => (s, i, d) => d.appendFloat(s.getFloat(i))
+      case DoubleType => (s, i, d) => d.appendDouble(s.getDouble(i))
+      case _: StringType => (s, i, d) => {
+        val b = s.getUTF8String(i).getBytes
+        d.appendByteArray(b, 0, b.length)
+      }
+      case BinaryType => (s, i, d) => {
+        val b = s.getBinary(i)
+        d.appendByteArray(b, 0, b.length)
+      }
+      // the storage putDecimal picks by precision
+      case t: DecimalType => (s, i, d) => {
+        val v = s.getDecimal(i, t.precision, t.scale)
+        if (t.precision <= Decimal.MAX_INT_DIGITS)
+          d.appendInt(v.toUnscaledLong.toInt)
+        else if (t.precision <= Decimal.MAX_LONG_DIGITS)
+          d.appendLong(v.toUnscaledLong)
+        else {
+          val b = v.toJavaBigDecimal.unscaledValue.toByteArray
+          d.appendByteArray(b, 0, b.length)
+        }
+      }
+      case ArrayType(et, _) =>
+        val elem = appenderFor(et)
+        (s, i, d) => {
+          val w = s.asInstanceOf[WritableColumnVector]
+          val (off, n) = (w.getArrayOffset(i), w.getArrayLength(i))
+          d.appendArray(n)
+          var j = 0
+          while (j < n) { elem(w.arrayData(), off + j, d.arrayData()); j += 1 }
+        }
+      case MapType(kt, vt, _) =>
+        val (keys, vals) = (appenderFor(kt), appenderFor(vt))
+        (s, i, d) => {
+          val w = s.asInstanceOf[WritableColumnVector]
+          val (off, n) = (w.getArrayOffset(i), w.getArrayLength(i))
+          d.appendArray(n)
+          var j = 0
+          while (j < n) {
+            keys(w.getChild(0), off + j, d.getChild(0))
+            vals(w.getChild(1), off + j, d.getChild(1))
+            j += 1
+          }
+        }
+      case st: StructType =>
+        val fields = st.fields.map(f => appenderFor(f.dataType))
+        (s, i, d) => {
+          d.appendStruct(false)
+          var k = 0
+          while (k < fields.length) {
+            fields(k)(s.getChild(k), i, d.getChild(k)); k += 1
+          }
+        }
+      case other => throw new IllegalStateException(
+        s"no survivor copy for column type $other")
     }
-    case dec: DecimalType => (s, sr, d, dr) =>
-      d.putDecimal(dr, s.getDecimal(sr, dec.precision, dec.scale),
-        dec.precision)
-    case other => throw new IllegalStateException(s"unreachable type $other")
+    dt match {
+      case _: StructType =>
+        (s, i, d) => if (s.isNullAt(i)) d.appendStruct(true) else value(s, i, d)
+      case _ =>
+        (s, i, d) => if (s.isNullAt(i)) d.appendNull() else value(s, i, d)
+    }
   }
 
   /** One fully-loaded Configuration per JVM; per-reader confs COPY it
@@ -426,11 +482,11 @@ private[sources] object VersionedColumnarReader {
     * physical type; anything else is simply not compiled (Spark's
     * residual filters keep correctness). */
   def toParquetPredicate(pushed: Array[Filter],
-      present: Map[String, PrimitiveType]): Option[FilterPredicate] = {
+      present: Map[String, Type]): Option[FilterPredicate] = {
 
     def leaf(c: String, v: Any,
         mk: (String, Any) => FilterPredicate): Option[FilterPredicate] =
-      present.get(c).flatMap { p =>
+      present.get(c).collect { case p: PrimitiveType => p }.flatMap { p =>
         (p.getPrimitiveTypeName, v) match {
           case (PrimitiveTypeName.INT64, l: Long) => Some(mk(c, l))
           case (PrimitiveTypeName.INT32, i: Int) => Some(mk(c, i))

@@ -9,22 +9,22 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.Versioned
 
@@ -64,12 +64,14 @@ import graft.ops.Versioned
   * DELETION VECTORS (round 16 — the Iceberg/Delta DV sidecar shape):
   * each reader loads only its OWN group's vector executor-side and
   * masks rows batch by batch, nothing collected on the driver, no size
-  * cap — [[Versioned.read]]'s full normalization pushed into the
-  * DSv2 path ([[Versioned.connectorPlan]]), so ALTERed and MOR-deleted
-  * tables read through the connector with zero data rewritten and
-  * nothing refused. Column types: BIGINT / INT / DOUBLE / FLOAT /
-  * STRING / BOOLEAN / DATE / TIMESTAMP / DECIMAL — the gate
-  * discipline's surface ([[VersionedSource.isSupportedType]]).
+  * cap. The version's planning state comes from
+  * [[Versioned.connectorPlan]], so ALTERed and MOR-deleted tables read
+  * with zero data rewritten and nothing refused. This scan is the only
+  * reader of Versioned snapshots: the ops layer's reads
+  * ([[Versioned.read]] and its pruned and change-feed variants) are
+  * frames over the same relation ([[VersionedRead]]). Column types:
+  * every type Spark's vectorized parquet reader decodes
+  * ([[VersionedSource.isSupportedType]]).
   */
 class VersionedSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-versioned"
@@ -77,13 +79,8 @@ class VersionedSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (dir, version) = VersionedSource.pathAndVersion(options)
-    val p = Versioned.connectorPlan(dir, version)
-    // a TRUNCATE tombstone has no groups to infer from — its schema is
-    // the recorded logical DDL
-    if (p.isTombstone) return StructType.fromDDL(p.schemaDdl.get)
-    // driver-side planning only; executors never touch this path
-    VersionedSource.evolvedSchema(SparkSession.active, p.groups.map(_._2),
-      p.renames, p.drops, p.defaults)
+    VersionedSource.servedSchema(SparkSession.active,
+      Versioned.connectorPlan(dir, version))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -109,20 +106,12 @@ private[sources] object VersionedSource {
     (dir, v)
   }
 
-  val supportedTypes: Set[DataType] = Set(LongType, IntegerType, DoubleType,
-    FloatType, StringType, BooleanType, DateType, TimestampType)
-
-  /** The connector's served type set (r16: TIMESTAMP and DECIMAL join —
-    * previously one such column anywhere in a required schema dropped
-    * the whole scan off the vectorized path, and the scan gate refused
-    * it outright; decimal measures and event timestamps are
-    * bread-and-butter lakehouse columns). DecimalType is parametric, so
-    * membership is a predicate, not a Set. TimestampNTZ stays out:
-    * Versioned's own write paths produce UTC-adjusted instants only. */
-  def isSupportedType(t: DataType): Boolean = t match {
-    case _: DecimalType => true
-    case other => supportedTypes.contains(other)
-  }
+  /** The connector's served type set: every type Spark's vectorized
+    * parquet reader decodes — the atomic types and arrays, maps and
+    * structs of them. One predicate gates the reader factory (batch,
+    * micro-batch and row-level scans), the writers and the catalog. */
+  def isSupportedType(t: DataType): Boolean =
+    ParquetUtils.isBatchReadSupported(SQLConf.get, t)
 
   /** The metadata column exposing each row's manifest file-group name —
     * the grouping handle of the SQL row-level operations (Iceberg's
@@ -158,30 +147,57 @@ private[sources] object VersionedSource {
     }
   }
 
-  /** The LOGICAL schema a version serves after its pending schema
-    * evolution: the physical union, plus metadata-only added columns no
-    * group carries yet (typed by their recorded SQL type), minus
-    * metadata-only drops, under the column mapping — exactly
-    * [[Versioned.read]]'s normalization order (defaults → drops →
-    * renames). */
-  def evolvedSchema(spark: SparkSession, groupDirs: Seq[String],
-      renames: Map[String, String], drops: Set[String],
-      defaults: Map[String, (String, String)]): StructType = {
-    val physical = mergedGroupSchema(spark, groupDirs)
-    val withDefaults = defaults.toSeq.sortBy(_._1)
-      .foldLeft(physical) { case (st, (name, (tpe, _))) =>
-        if (st.fieldNames.contains(name)) st
-        else StructType(st.fields :+ StructField(name, DataType.fromDDL(tpe)))
+  /** The LOGICAL schema a version serves: the recorded DDL of a
+    * TRUNCATE tombstone (no groups to read), else the physical union,
+    * plus metadata-only added columns no group carries yet (typed by
+    * their recorded SQL type), minus metadata-only drops, under the
+    * column mapping (defaults → drops → renames). */
+  def servedSchema(spark: SparkSession, p: Versioned.ConnectorPlan)
+      : StructType = {
+    if (p.isTombstone) return StructType.fromDDL(p.schemaDdl.get)
+    val withDefaults = p.defaults.toSeq.sortBy(_._1)
+      .foldLeft(mergedGroupSchema(spark, p.groups.map(_._2))) {
+        case (st, (name, (tpe, _))) =>
+          if (st.fieldNames.contains(name)) st
+          else StructType(st.fields :+ StructField(name, DataType.fromDDL(tpe)))
       }
-    val dropped =
-      StructType(withDefaults.fields.filterNot(f => drops.contains(f.name)))
-    StructType(dropped.fields.map(f =>
-      renames.get(f.name).map(l => f.copy(name = l)).getOrElse(f)))
+    StructType(withDefaults.fields.filterNot(f => p.drops.contains(f.name))
+      .map(f => p.renames.get(f.name).map(l => f.copy(name = l)).getOrElse(f)))
+  }
+}
+
+/** A snapshot the ops layer pinned before building its relation: the
+  * version's planning state, narrowed to a group subset when `subset`
+  * (a pruned read or a change-feed step). */
+private[sources] final case class Pinned(plan: Versioned.ConnectorPlan,
+    subset: Boolean)
+
+/** The ops layer's snapshot reads ([[Versioned.read]], its pruned and
+  * change-feed variants, the delete fold's group rewrite): a DataFrame
+  * over the connector's own relation, built directly — no format
+  * lookup, no read options — and pinned to `plan`. `groups` narrows the
+  * scan to those manifest groups while the schema stays the version's,
+  * so a subset frame lines up with every other read of the version. */
+object VersionedRead {
+  def frame(spark: SparkSession, dir: String, plan: Versioned.ConnectorPlan,
+      groups: Option[Seq[String]] = None): DataFrame = {
+    val options = new CaseInsensitiveStringMap(java.util.Map.of("path", dir))
+    val pinned = groups.map(_.toSet) match {
+      case None => Pinned(plan, subset = false)
+      case Some(keep) =>
+        Pinned(plan.copy(groups = plan.groups.filter(g => keep(g._1))),
+          subset = true)
+    }
+    val table = new VersionedTable(VersionedSource.servedSchema(spark, plan),
+      options, Some(pinned))
+    GraftSqlShims.ofRows(spark,
+      DataSourceV2Relation.create(table, None, None, options))
   }
 }
 
 private[sources] class VersionedTable(tableSchema: StructType,
-    options: CaseInsensitiveStringMap) extends Table
+    options: CaseInsensitiveStringMap, pinned: Option[Pinned] = None)
+    extends Table
     with SupportsRead with SupportsWrite
     with SupportsMetadataColumns with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
@@ -217,7 +233,8 @@ private[sources] class VersionedTable(tableSchema: StructType,
     val merged = new java.util.HashMap[String, String]()
     merged.putAll(options)
     merged.putAll(caseInsensitiveOptions)
-    new VersionedScanBuilder(tableSchema, new CaseInsensitiveStringMap(merged))
+    new VersionedScanBuilder(tableSchema, new CaseInsensitiveStringMap(merged),
+      pinned)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     // table options carry the path for catalog-managed tables
@@ -284,7 +301,8 @@ private[sources] case class MaxSpec(col: String) extends AggSpec
 private[sources] case object CountSpec extends AggSpec
 
 private[sources] class VersionedScanBuilder(fullSchema: StructType,
-    options: CaseInsensitiveStringMap) extends ScanBuilder
+    options: CaseInsensitiveStringMap, pinned: Option[Pinned] = None)
+    extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
 
@@ -294,10 +312,11 @@ private[sources] class VersionedScanBuilder(fullSchema: StructType,
     * land mid-query (the Delta/Iceberg snapshot-pinning contract; a
     * re-resolving scan could plan against one version and execute
     * against another). 0 = a CREATEd table with no commits yet, a valid
-    * empty table. */
+    * empty table. An ops-layer read arrives already [[Pinned]]. */
   private val resolved: (String, Int) = {
     val (d, v) = VersionedSource.pathAndVersion(options)
-    (d, if (v != 0) v else Versioned.latestVersion(d))
+    (d, pinned.map(_.plan.version)
+      .getOrElse(if (v != 0) v else Versioned.latestVersion(d)))
   }
   protected def dir: String = resolved._1
   protected def pinnedVersion: Int = resolved._2
@@ -307,8 +326,9 @@ private[sources] class VersionedScanBuilder(fullSchema: StructType,
     * with the pin; the scan serves every pending normalization per
     * file, zero data rewritten. None = valid empty table. */
   protected val plan: Option[Versioned.ConnectorPlan] =
-    if (pinnedVersion == 0) None
-    else Some(Versioned.connectorPlan(dir, pinnedVersion))
+    pinned.map(_.plan).orElse(
+      if (pinnedVersion == 0) None
+      else Some(Versioned.connectorPlan(dir, pinnedVersion)))
 
   protected var required: StructType = fullSchema
   protected var pushed: Array[Filter] = Array.empty
@@ -399,7 +419,8 @@ private[sources] class VersionedScanBuilder(fullSchema: StructType,
   }
 
   override def build(): Scan =
-    new VersionedScan(dir, pinnedVersion, required, pushed, aggAnswer, plan)
+    new VersionedScan(dir, pinnedVersion, required, pushed, aggAnswer, plan,
+      subset = pinned.exists(_.subset))
 }
 
 /** One scan task: a BIN of parquet files from ONE file group (packed
@@ -420,11 +441,13 @@ private[sources] case class VersionedAggPartition(values: Seq[Long])
   * the snapshot's complete planning state; its pending renames / drops
   * / defaults / MOR delete mask are served per file by the readers —
   * ALTERed and MOR-deleted tables read through the connector with zero
-  * data rewritten. */
+  * data rewritten. `subset`: the plan holds only some of the version's
+  * groups. */
 private[sources] class VersionedScan(val dir: String, val version: Int,
     val required: StructType, val pushed: Array[Filter],
     aggAnswer: Option[(Seq[AggSpec], Seq[Long])] = None,
-    plan: Option[Versioned.ConnectorPlan] = None)
+    plan: Option[Versioned.ConnectorPlan] = None,
+    val subset: Boolean = false)
     extends Scan with Batch {
 
   private def renames: Map[String, String] =
@@ -576,15 +599,16 @@ private[sources] class VersionedMicroBatchStream(dir: String,
 /** Public bridge for the MV auto-rewrite (graft.plans.MvRewrite): the
   * (table dir, PINNED snapshot version) of a connector scan, or None for
   * scans the rewrite must never touch — the row-level COW scan (its
-  * ReplaceData parent needs every row) and anything that is not a
-  * versioned-table scan. The version is the one the ScanBuilder pinned
-  * at construction, so an MV registered at that exact version rewrites
-  * race-free (a commit landing mid-query changes neither side). */
+  * ReplaceData parent needs every row), a group-subset scan (its rows
+  * are not the version's) and anything that is not a versioned-table
+  * scan. The version is the one the ScanBuilder pinned at construction,
+  * so an MV registered at that exact version rewrites race-free (a
+  * commit landing mid-query changes neither side). */
 object VersionedMvBridge {
   def scanInfo(scan: org.apache.spark.sql.connector.read.Scan)
       : Option[(String, Int)] = scan match {
     case _: VersionedRowLevelScan => None
-    case s: VersionedScan => Some((s.dir, s.version))
+    case s: VersionedScan if !s.subset => Some((s.dir, s.version))
     case _ => None
   }
 }
@@ -610,8 +634,8 @@ private[sources] object VersionedScan {
     // (scope, full file list) per routed delete dir: a data group NOT in
     // a delete's recorded routing scope was appended AFTER the delete —
     // it gets the delete's FULL key union (appends carry delete files
-    // forward; a re-inserted key stays masked until applyDeletesCommit,
-    // exactly like the ops-layer anti-join — review r16). A missing
+    // forward; a re-inserted key stays masked until applyDeletesCommit —
+    // review r16). A missing
     // scope file degrades to full-union-for-everyone: conservative,
     // never under-masks.
     val scoped =
@@ -651,43 +675,15 @@ private[sources] object VersionedScan {
   }
 
   /** Evaluate the manifest's default literals ONCE, driver-side, into
-    * InternalRow-compatible constants the per-file readers fill where a
+    * the internal-format constants the per-file readers fill where a
     * group's physical schema predates the column — the read half of the
-    * ANSI DEFAULT feature ([[graft.ops.Versioned.addColumnCommit]]).
-    * Literals/types are charset-gated at commit, so the expr text is
-    * injection-safe (the withDefaults discipline). */
+    * ANSI DEFAULT feature ([[graft.ops.Versioned.addColumnCommit]]): the
+    * CAST the commit probed, folded without a Spark job. */
   def evalDefaults(defaults: Map[String, (String, String)])
       : Map[String, Any] =
-    if (defaults.isEmpty) Map.empty
-    else {
-      val spark = SparkSession.active
-      defaults.map { case (name, (tpe, lit)) =>
-        val v = spark.range(1)
-          .select(org.apache.spark.sql.functions
-            .expr(s"CAST('$lit' AS $tpe)"))
-          .head().get(0)
-        name -> (v match {
-          case s: String => UTF8String.fromString(s)
-          case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-          case d: java.time.LocalDate => d.toEpochDay.toInt
-          // internal micros for TimestampType defaults (r16)
-          case t: java.sql.Timestamp =>
-            t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
-          case t: java.time.Instant =>
-            java.lang.Math.addExact(
-              java.lang.Math.multiplyExact(t.getEpochSecond, 1000000L),
-              t.getNano / 1000L)
-          // internal Decimal at the DECLARED precision/scale (r16)
-          case b: java.math.BigDecimal =>
-            DataType.fromDDL(tpe) match {
-              case dt: DecimalType =>
-                org.apache.spark.sql.types.Decimal(
-                  b.setScale(dt.scale), dt.precision, dt.scale)
-              case _ => org.apache.spark.sql.types.Decimal(b)
-            }
-          case other => other
-        })
-      }
+    defaults.map { case (name, (tpe, lit)) =>
+      name -> Cast(Literal(lit), DataType.fromDDL(tpe),
+        Some(SQLConf.get.sessionLocalTimeZone)).eval()
     }
 
   def supportsPushdown(f: Filter): Boolean = f match {
@@ -940,7 +936,7 @@ private[sources] final class LongMorMask private (table: Array[Long],
     case l: Long => containsLong(l)
     case i: Int => containsLong(i.toLong)
     // cross-numeric-type masking parity with the boxed-set era (and with
-    // the ops layer's anti-join, which coerces): Scala's cooperative
+    // Spark's join equality, which coerces): Scala's cooperative
     // equality made Set[Any](5L).contains(5.0) TRUE, so a DOUBLE data
     // column probing a LONG-built mask must match exact whole values
     // (review r15 — returning false here resurrected deleted rows in
@@ -1021,7 +1017,7 @@ private[sources] object LongMorMask {
   * Membership is Scala's cooperative `==`, which already equates -0.0
   * and 0.0 as Spark's join keys do; NaN keys are canonicalized on build
   * and probe alike, since `==` never matches NaN but Spark's join
-  * equality (the ops layer's anti-join) does. */
+  * equality (an anti-join's) does. */
 private[sources] final class AnyMorMask(keys: Iterable[Any]) extends MorMask {
   private val set: Set[Any] = keys.iterator.map(AnyMorMask.canonical).toSet
   override def containsLong(v: Long): Boolean = set.contains(v)

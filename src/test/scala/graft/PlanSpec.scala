@@ -161,11 +161,15 @@ class PlanSpec extends SparkSpec {
       s"expected a pruned fact read (0 < partitions < 25), got $read")
   }
 
-  test("s38: the merge-on-read mask is a BROADCAST anti-join (the delete " +
-      "file is small by design; the table side never shuffles for it)") {
+  test("s38: the MOR mask rides the connector scan — no join, no " +
+      "table-side exchange") {
     val plan = planString("s38_mor_delete")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"MOR mask did not plan as a broadcast anti-join:\n$plan")
+    assert(plan.contains("morMaskOn=o_orderkey"),
+      s"the masked read is not the connector scan:\n$plan")
+    // the only exchanges left gather the aggregates' partial results
+    assert(!plan.contains("LeftAnti") &&
+      !plan.contains("Exchange hashpartitioning"),
+      s"the MOR mask planned a join or a shuffle over the table:\n$plan")
   }
 
   test("t42: the postings probe scans ONLY the query terms' first-letter " +

@@ -70,6 +70,46 @@ class VersionedJobBudgetSpec extends SparkSpec {
     assert(sdf.count() == 198)
   }
 
+  test("the masked read plans no exchange and no join over the table, " +
+      "routed and flat delete layouts") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    Seq(Some("k"), None).foreach { statsCol =>
+      val dir = tmp(s"shape_${statsCol.isDefined}")
+      Versioned.commit(rows(0, 100), dir, statsCol = statsCol)
+      Versioned.commit(rows(100, 200), dir, statsCol = statsCol)
+      Versioned.deleteCommitMor(Seq(3L, 150L, 999L).toDF("k"), dir, "k")
+      val df = Versioned.read(spark, dir)
+      assert(df.collect().length == 198)
+      val helper = new AdaptiveSparkPlanHelper {}
+      val plan = df.queryExecution.executedPlan
+      assert(helper.collect(plan) { case s: BatchScanExec => s }
+        .exists(_.scan.description().contains("morMaskOn=k")), plan.toString)
+      assert(helper.collect(plan) {
+        case e: Exchange => e
+        case j: BaseJoinExec => j
+      }.isEmpty, s"layout with stats $statsCol:\n$plan")
+    }
+  }
+
+  test("prunedRead serves read's schema, whichever groups it plans") {
+    val dir = tmp("pruned_schema")
+    Versioned.commit(rows(0, 100), dir, statsCol = Some("k"))
+    Versioned.commit(rows(100, 200).withColumn("x", lit("new")), dir,
+      statsCol = Some("k"))
+    val schema = Versioned.read(spark, dir).schema
+    assert(schema.fieldNames.toSeq == Seq("k", "v", "x"))
+    Seq((0L, 10L, 1), (150L, 160L, 1), (0L, 1000L, 2), (5000L, 6000L, 0))
+      .foreach { case (lo, hi, groups) =>
+        val (df, planned, _) = Versioned.prunedRead(spark, dir, "k", lo, hi)
+        assert(planned == groups)
+        assert(df.schema == schema, s"[$lo, $hi]")
+        assert(df.count() == math.max(0L, math.min(hi, 199L) - lo + 1))
+      }
+  }
+
   test("a legacy-layout deleteCommitMor launches one job: the write") {
     val dir = tmp("mor")
     Versioned.commit(rows(0, 1000), dir)

@@ -251,6 +251,40 @@ class MvRewriteSpec extends SparkSpec {
     assert(Mv.refreshVersioned(spark, e2, s"$root/vmv_v3") eq e2)
   }
 
+  test("a versioned MV never answers a group-subset frame or its own rebuild") {
+    import graft.ops.Versioned
+    val tdir = s"$root/vmv_subset_table"
+    val mv = s"$root/vmv_subset"
+    Seq((0L, 100L), (100L, 200L)).foreach { case (lo, hi) =>
+      Versioned.commit(spark.range(lo, hi).select(
+        (col("id") % 4).cast("string").as("g"), col("id").as("k")),
+        tdir, statsCol = Some("k"))
+    }
+    def build() = Mv.createVersioned(spark, tdir, mv, groupCols = Seq("g"),
+      measures = Seq(("count", "k", None)))
+    assert(build().baseVersion.contains(2))
+    Mv.enable(spark)
+    def counted(df: DataFrame): (Boolean, Long) = {
+      val q = df.groupBy("g").agg(count(col("k")).as("n"))
+      (Mv.scanPaths(q).contains(Mv.canonical(mv)),
+        q.collect().map(_.getLong(1)).sum)
+    }
+    // the whole v2 snapshot is what the MV holds: the rewrite fires
+    assert(counted(Versioned.read(spark, tdir)) == ((true, 200L)))
+    // a pruned read and a change-feed step at v2 scan a group subset
+    val (pruned, planned, _) =
+      Versioned.prunedRead(spark, tdir, "k", 0L, 49L, version = 2)
+    assert(planned == 1)
+    assert(counted(pruned) == ((false, 50L)))
+    assert(counted(Versioned.changes(spark, tdir, 1, 2, "k")) == ((false, 100L)))
+    // the MV's artifact is gone: a rebuild reads the base, not the MV
+    val p = new org.apache.hadoop.fs.Path(mv)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    assert(build().baseVersion.contains(2))
+    assert(spark.read.parquet(mv).agg(sum("__cnt")).head().getLong(0) == 200L)
+    assert(counted(Versioned.read(spark, tdir)) == ((true, 200L)))
+  }
+
   test("a NON-DETERMINISTIC filter blocks the rewrite (would re-evaluate per group)") {
     entry
     val df = spark.read.parquet(basePath)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import graft.SparkSpec
-import graft.ops.Versioned
+import graft.ops.{ReferenceRead, Versioned}
 
 class VersionedSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -46,15 +46,15 @@ class VersionedSourceSpec extends SparkSpec {
 
   test("connector read equals Versioned.read, all columns and types") {
     val got = load().orderBy("k").collect().toSeq
-    val want = Versioned.read(spark, dir).orderBy("k").collect().toSeq
+    val want = ReferenceRead.read(spark, dir).orderBy("k").collect().toSeq
     assert(got == want)
-    assert(load().schema == Versioned.read(spark, dir).schema)
+    assert(load().schema == ReferenceRead.read(spark, dir).schema)
   }
 
   test("time travel: versionAsOf serves each historical snapshot") {
     for (v <- 1 to 4) {
       val got = load(v).agg(count(lit(1)), sum("k")).collect().head
-      val want = Versioned.read(spark, dir, v)
+      val want = ReferenceRead.read(spark, dir, v)
         .agg(count(lit(1)), sum("k")).collect().head
       assert(got == want, s"v$v mismatch")
     }
@@ -149,7 +149,7 @@ class VersionedSourceSpec extends SparkSpec {
     assert(mor.count() == 7L)
     assert(mor.select("k").as[Long].collect().sorted.toSeq == (3L until 10L))
     assert(mor.orderBy("k").collect().toSeq ==
-      Versioned.read(spark, d2).orderBy("k").collect().toSeq)
+      ReferenceRead.read(spark, d2).orderBy("k").collect().toSeq)
     // the mask applies even when the key column is NOT projected
     assert(mor.select("v").as[Long].collect().sorted.toSeq ==
       (3L until 10L).map(_ * 7))
@@ -187,7 +187,7 @@ class VersionedSourceSpec extends SparkSpec {
       .option("statsCol", "k").mode("append").save()
     assert(Versioned.latestVersion(d) == 2)
     // both the library read and the connector read serve the union
-    val viaLib = Versioned.read(spark, d).orderBy("k").collect().toSeq
+    val viaLib = ReferenceRead.read(spark, d).orderBy("k").collect().toSeq
     val viaConn = spark.read.format("graft-versioned").option("path", d)
       .load().orderBy("k").collect().toSeq
     assert(viaLib == viaConn && viaLib.size == 100)
@@ -418,7 +418,7 @@ class VersionedSourceSpec extends SparkSpec {
     assert(conn.schema.fieldNames.toSeq == Seq("k", "v", "status"))
     assert(conn.filter(col("status") === "fresh").count() == 10L)
     assert(conn.orderBy("k").collect().toSeq ==
-      Versioned.read(spark, d).orderBy("k").collect().toSeq)
+      ReferenceRead.read(spark, d).orderBy("k").collect().toSeq)
     // DROP COLUMN: projected out at head, still in the v1 read
     Versioned.applyDefaultsCommit(spark, d) // materialize to allow DROP mix
     Versioned.dropColumnCommit(spark, d, "v")
@@ -433,7 +433,7 @@ class VersionedSourceSpec extends SparkSpec {
       == (0L until 10L))
     // the whole journey matches the ops-layer read at each step
     assert(conn.orderBy("key_id").collect().toSeq ==
-      Versioned.read(spark, d).orderBy("key_id").collect().toSeq)
+      ReferenceRead.read(spark, d).orderBy("key_id").collect().toSeq)
   }
 
   test("streaming source freezes the AvailableNow end offset at query start") {
@@ -606,7 +606,7 @@ class VersionedSourceSpec extends SparkSpec {
     assert(conn.count() == 390L)
     assert(conn.filter(col("k") >= 150L && col("k") < 160L).count() == 0L)
     assert(conn.agg(sum("k")).as[Long].head() ==
-      Versioned.read(spark, d).agg(sum("k")).as[Long].head())
+      ReferenceRead.read(spark, d).agg(sum("k")).as[Long].head())
     assert(spark.read.format("graft-versioned").option("path", d)
       .option("versionAsOf", "4").load().count() == 400L)
     // a second MOR delete accumulates (union across delete groups)
@@ -765,7 +765,7 @@ class VersionedSourceSpec extends SparkSpec {
     Versioned.commit(
       spark.range(0, 2).select((col("id") * 50 + 50).as("k"),
         lit(-1L).as("v")), d, statsCol = Some("k")) // keys 50, 100
-    val ops = Versioned.read(spark, d)
+    val ops = ReferenceRead.read(spark, d)
     val conn = load0(d)
     assert(ops.filter(col("k") === 50L).count() == 0L, "ops read leaked")
     assert(conn.filter(col("k") === 50L).count() == 0L,
@@ -777,7 +777,7 @@ class VersionedSourceSpec extends SparkSpec {
     assert(conn.filter(col("k") === 100L).count() == 1L)
     // fold: everything agrees after applyDeletesCommit too
     Versioned.applyDeletesCommit(spark, d)
-    assert(load0(d).count() == Versioned.read(spark, d).count())
+    assert(load0(d).count() == ReferenceRead.read(spark, d).count())
     assert(load0(d).filter(col("k") === 50L).count() == 0L)
   }
 
