@@ -635,9 +635,8 @@ private[sources] object VersionedScan {
     // a delete's recorded routing scope was appended AFTER the delete —
     // it gets the delete's FULL key union (appends carry delete files
     // forward; a re-inserted key stays masked until applyDeletesCommit —
-    // review r16). A missing
-    // scope file degrades to full-union-for-everyone: conservative,
-    // never under-masks.
+    // review r16). A missing scope file degrades to full-union-for-
+    // everyone: conservative, never under-masks.
     val scoped =
       scala.collection.mutable.ArrayBuffer.empty[(Set[String], Seq[String])]
     p.morGroupDirs.foreach { d =>

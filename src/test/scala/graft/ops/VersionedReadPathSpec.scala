@@ -47,8 +47,8 @@ class VersionedReadPathSpec extends SparkSpec {
     assert(Versioned.read(spark, dir, 1).columns.toSeq == Seq("k"))
   }
 
-  /** Columns of the types the connector's gate used to refuse (nested,
-    * small integral, BINARY, TIMESTAMP_NTZ), NULL on every 5th row. */
+  /** Nested, small integral, BINARY and TIMESTAMP_NTZ columns, NULL on
+    * every 5th row. */
   private val typedColumns: Seq[(String, Column => Column)] = Seq(
     "array<double>" -> (id => array(id.cast("double"), id / 4,
       lit(null).cast("double"))),
