@@ -957,6 +957,10 @@ object Versioned {
     val tableKeyType = ParquetFooters.schema(spark,
         groups.map(resolveGroup(dir, _))).fields
       .find(f => spark.sessionState.conf.resolver(f.name, key)).map(_.dataType)
+    // refused before anything is written (valueAt throws for a key no
+    // deletion vector can compare): such a delete would fail every read
+    graft.sources.MorMask.valueAt(
+      tableKeyType.getOrElse(deletes.select(given).schema.head.dataType))
     val keys = (tableKeyType match {
       case Some(t) if t != deletes.select(given).schema.head.dataType =>
         deletes.select(given.try_cast(t).as(key), given.as("__given"))

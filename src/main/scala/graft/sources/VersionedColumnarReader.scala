@@ -175,10 +175,12 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
     * else boxed; an unhandled key type fails loudly. */
   private val probeMasked: (ColumnVector, Int) => Boolean = keyType match {
     case NullType => (_, _) => false // no mask: never probed
-    case LongType | TimestampType =>
+    case LongType | TimestampType | TimestampNTZType =>
       (v, i) => maskSet.containsLong(v.getLong(i))
     case IntegerType | DateType =>
       (v, i) => maskSet.containsLong(v.getInt(i).toLong)
+    case ShortType => (v, i) => maskSet.containsLong(v.getShort(i).toLong)
+    case ByteType => (v, i) => maskSet.containsLong(v.getByte(i).toLong)
     case t =>
       val at = MorMask.valueAt(t)
       (v, i) => maskSet.containsAny(at(v, i))

@@ -94,7 +94,8 @@ private[sources] class VersionedRowLevelScanBuilder(fullSchema: StructType,
         "has pending column renames/drops/defaults or merge-on-read " +
         "deletes; run the matching Versioned.apply*Commit (or OPTIMIZE) " +
         "first")
-    new VersionedRowLevelScan(dir, pinnedVersion, required, pushed, op, plan)
+    new VersionedRowLevelScan(dir, pinnedVersion, fullSchema, required,
+      pushed, op, plan)
   }
 }
 
@@ -103,10 +104,11 @@ private[sources] class VersionedRowLevelScanBuilder(fullSchema: StructType,
   * in the runtime IN-set hold no matching rows — they are neither read
   * nor rewritten (carried verbatim by the commit). */
 private[sources] class VersionedRowLevelScan(dir: String, version: Int,
-    required: StructType, pushed: Array[Filter],
+    fullSchema: StructType, required: StructType, pushed: Array[Filter],
     op: VersionedRowLevelOperation,
     plan: Option[graft.ops.Versioned.ConnectorPlan])
-    extends VersionedScan(dir, version, required, pushed, None, plan)
+    extends VersionedScan(dir, version, fullSchema, required, pushed, None,
+      plan)
     with SupportsRuntimeV2Filtering {
 
   @volatile private var groupFilter: Option[Set[String]] = None
@@ -125,16 +127,11 @@ private[sources] class VersionedRowLevelScan(dir: String, version: Int,
       op.scanned = Some((version, Seq.empty))
       return Array.empty
     }
-    val kept = plannedGroups().filter { case (name, _) =>
+    val kept = plannedFiles.filter { case (name, _) =>
       groupFilter.forall(_.contains(name))
     }
     op.scanned = Some((version, kept.map(_._1)))
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    VersionedScan.packPartitions(
-      kept.map { case (name, groupDir) =>
-        name -> VersionedScan.listParquetFilesWithSize(
-          new Path(groupDir), conf)
-      },
+    VersionedScan.packPartitions(kept,
       SparkSession.active.sparkContext.defaultParallelism)
   }
 

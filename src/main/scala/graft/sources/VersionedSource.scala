@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
@@ -69,8 +69,8 @@ import graft.ops.Versioned
   * with zero data rewritten and nothing refused. This scan is the only
   * reader of Versioned snapshots: the ops layer's reads
   * ([[Versioned.read]] and its pruned and change-feed variants) are
-  * frames over the same relation ([[VersionedRead]]). Column types:
-  * every type Spark's vectorized parquet reader decodes
+  * frames over the same relation ([[VersionedRead]]). Column types: the
+  * atomic types and arrays, maps and structs of them
   * ([[VersionedSource.isSupportedType]]).
   */
 class VersionedSource extends TableProvider with DataSourceRegister {
@@ -106,12 +106,22 @@ private[sources] object VersionedSource {
     (dir, v)
   }
 
-  /** The connector's served type set: every type Spark's vectorized
-    * parquet reader decodes — the atomic types and arrays, maps and
-    * structs of them. One predicate gates the reader factory (batch,
+  /** The connector's served type set: the types
+    * [[VersionedColumnarReader]] decodes and compacts — the atomic types
+    * and arrays, maps and structs of them, at any nesting. It reads no
+    * session conf, so what a table can serve does not depend on the
+    * session. One predicate gates the reader factory (batch,
     * micro-batch and row-level scans), the writers and the catalog. */
-  def isSupportedType(t: DataType): Boolean =
-    ParquetUtils.isBatchReadSupported(SQLConf.get, t)
+  def isSupportedType(t: DataType): Boolean = t match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+        FloatType | DoubleType | DateType | TimestampType |
+        TimestampNTZType | BinaryType | _: StringType | _: DecimalType |
+        _: YearMonthIntervalType | _: DayTimeIntervalType => true
+    case ArrayType(et, _) => isSupportedType(et)
+    case MapType(kt, vt, _) => isSupportedType(kt) && isSupportedType(vt)
+    case st: StructType => st.fields.forall(f => isSupportedType(f.dataType))
+    case _ => false
+  }
 
   /** The metadata column exposing each row's manifest file-group name —
     * the grouping handle of the SQL row-level operations (Iceberg's
@@ -419,7 +429,8 @@ private[sources] class VersionedScanBuilder(fullSchema: StructType,
   }
 
   override def build(): Scan =
-    new VersionedScan(dir, pinnedVersion, required, pushed, aggAnswer, plan,
+    new VersionedScan(dir, pinnedVersion, fullSchema, required, pushed,
+      aggAnswer, plan,
       subset = pinned.exists(_.subset))
 }
 
@@ -444,11 +455,11 @@ private[sources] case class VersionedAggPartition(values: Seq[Long])
   * data rewritten. `subset`: the plan holds only some of the version's
   * groups. */
 private[sources] class VersionedScan(val dir: String, val version: Int,
-    val required: StructType, val pushed: Array[Filter],
+    fullSchema: StructType, val required: StructType, val pushed: Array[Filter],
     aggAnswer: Option[(Seq[AggSpec], Seq[Long])] = None,
     plan: Option[Versioned.ConnectorPlan] = None,
     val subset: Boolean = false)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
 
   private def renames: Map[String, String] =
     plan.map(_.renames).getOrElse(Map.empty)
@@ -499,6 +510,31 @@ private[sources] class VersionedScan(val dir: String, val version: Int,
       }
   }
 
+  /** The planned groups' parquet files with their lengths, listed once
+    * per scan (committed groups are immutable) for the optimizer's
+    * statistics and the partition planning alike. */
+  protected lazy val plannedFiles: Seq[(String, Seq[(String, Long)])] = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    plannedGroups().map { case (name, groupDir) =>
+      name -> VersionedScan.listParquetFilesWithSize(new Path(groupDir), conf)
+    }
+  }
+
+  /** Spark's parquet `FileScan` estimate, so a join with a small
+    * versioned read still broadcasts at plan time: the planned files'
+    * bytes scaled to the read columns' share of a row. No row count —
+    * a pending deletion vector hides rows the manifest counts. */
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(
+        if (isEmptyTable || aggAnswer.isDefined) readSchema().defaultSize
+        else (SQLConf.get.fileCompressionFactor * readSchema().defaultSize *
+          plannedFiles.iterator.flatMap(_._2).map(_._2).sum /
+          math.max(1, fullSchema.defaultSize)).toLong)
+    override def numRows(): java.util.OptionalLong =
+      java.util.OptionalLong.empty()
+  }
+
   /** Driver-side planning: manifest → groups → stats pruning →
     * size-packed file bins per group ([[VersionedScan.packPartitions]]);
     * a pushed aggregation plans ONE metadata partition carrying the
@@ -507,14 +543,8 @@ private[sources] class VersionedScan(val dir: String, val version: Int,
     if (isEmptyTable) return Array.empty
     aggAnswer match {
       case Some((_, vals)) => Array(VersionedAggPartition(vals))
-      case None =>
-        val conf = SparkSession.active.sessionState.newHadoopConf()
-        val groupFiles = plannedGroups().map { case (name, groupDir) =>
-          name -> VersionedScan.listParquetFilesWithSize(
-            new Path(groupDir), conf)
-        }
-        VersionedScan.packPartitions(groupFiles,
-          SparkSession.active.sparkContext.defaultParallelism)
+      case None => VersionedScan.packPartitions(plannedFiles,
+        SparkSession.active.sparkContext.defaultParallelism)
     }
   }
 
@@ -889,11 +919,12 @@ private[sources] sealed trait MorMask {
   def size: Long
 }
 
-private[sources] object MorMask {
+private[graft] object MorMask {
   /** Key types compared as longs — the [[LongMorMask]] domain: integral
-    * ids, DATE epoch days, TIMESTAMP micros. */
+    * ids, DATE epoch days, TIMESTAMP and TIMESTAMP_NTZ micros. */
   def isLongDomain(t: DataType): Boolean = t match {
-    case LongType | IntegerType | DateType | TimestampType => true
+    case LongType | IntegerType | ShortType | ByteType | DateType |
+        TimestampType | TimestampNTZType => true
     case _ => false
   }
 
@@ -902,8 +933,10 @@ private[sources] object MorMask {
     * with no branch fails loudly: answering "not deleted" for a key it
     * cannot compare would silently UN-delete rows. */
   def valueAt(t: DataType): (ColumnVector, Int) => Any = t match {
-    case LongType | TimestampType => (v, i) => v.getLong(i)
+    case LongType | TimestampType | TimestampNTZType => (v, i) => v.getLong(i)
     case IntegerType | DateType => (v, i) => v.getInt(i).toLong
+    case ShortType => (v, i) => v.getShort(i).toLong
+    case ByteType => (v, i) => v.getByte(i).toLong
     case DoubleType => (v, i) => v.getDouble(i)
     case FloatType => (v, i) => v.getFloat(i)
     case BooleanType => (v, i) => v.getBoolean(i)

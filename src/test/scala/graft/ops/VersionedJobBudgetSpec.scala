@@ -110,6 +110,27 @@ class VersionedJobBudgetSpec extends SparkSpec {
       }
   }
 
+  test("a versioned read reports its planned bytes: a join with a small " +
+      "table broadcasts at plan time") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val dir = tmp("stats")
+    Versioned.commit(rows(0, 100), dir)
+    Versioned.commit(rows(100, 200), dir)
+    def stats(df: DataFrame) = df.queryExecution.optimizedPlan.stats
+    val full = stats(Versioned.read(spark, dir))
+    assert(full.sizeInBytes > 0 &&
+      full.sizeInBytes < spark.sessionState.conf.autoBroadcastJoinThreshold)
+    // scaled to the read columns' share of a row
+    assert(stats(Versioned.read(spark, dir).select("k")).sizeInBytes <
+      full.sizeInBytes)
+    val big = spark.range(0, 100000).select(col("id").as("k"))
+    assert(big.join(Versioned.read(spark, dir), "k").queryExecution.sparkPlan
+      .collect { case j: BroadcastHashJoinExec => j }.nonEmpty)
+    // a time-travel read plans its own version's files
+    assert(stats(Versioned.read(spark, dir, 1)).sizeInBytes <
+      full.sizeInBytes)
+  }
+
   test("a legacy-layout deleteCommitMor launches one job: the write") {
     val dir = tmp("mor")
     Versioned.commit(rows(0, 1000), dir)

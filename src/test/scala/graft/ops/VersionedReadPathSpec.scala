@@ -82,6 +82,69 @@ class VersionedReadPathSpec extends SparkSpec {
     }
   }
 
+  test("nested columns serve whatever the session's vectorized-reader " +
+      "confs say") {
+    val dir = tmp("nestedConf")
+    val f = typedColumns.toMap.apply("array<double>")
+    Versioned.commit(typedFrame("array<double>", f, 0, 20), dir)
+    val key = "spark.sql.parquet.enableNestedColumnVectorizedReader"
+    spark.conf.set(key, "false")
+    try {
+      assert(rowsOf(Versioned.read(spark, dir), Seq("k", "c")) ==
+        rowsOf(typedFrame("array<double>", f, 0, 20), Seq("k", "c")))
+    } finally spark.conf.unset(key)
+  }
+
+  Seq("smallint", "tinyint", "timestamp_ntz").foreach { sqlType =>
+    val f = typedColumns.toMap.apply(sqlType)
+    test(s"a merge-on-read delete keyed on a $sqlType column masks every " +
+        "read path and folds") {
+      Seq(Some("c"), None).foreach { statsCol =>
+        val dir = tmp("typedKey")
+        Versioned.commit(typedFrame(sqlType, f, 0, 40), dir, statsCol = statsCol)
+        Versioned.commit(typedFrame(sqlType, f, 40, 60), dir, statsCol = statsCol)
+        val v = Versioned.deleteCommitMor(typedFrame(sqlType, f, 0, 60)
+          .filter(col("k") % 3 === 0).select("c"), dir, "c")
+        // k=100 re-inserts a deleted key (k=0's value); k=101 does not
+        val appended = typedFrame(sqlType, f, 0, 2)
+          .select((col("k") + 100).as("k"), col("c"))
+        Versioned.commit(appended, dir, statsCol = statsCol)
+        // NULL keys never match a delete
+        val want = rowsOf(typedFrame(sqlType, f, 0, 60).unionByName(appended)
+          .filter(col("k") % 3 =!= 0 && col("k") =!= 100 || col("c").isNull),
+          Seq("k", "c"))
+        assert(rowsOf(ReferenceRead.read(spark, dir), Seq("k", "c")) == want,
+          s"statsCol $statsCol")
+        assert(rowsOf(conn(dir), Seq("k", "c")) == want)
+        assert(rowsOf(Versioned.read(spark, dir), Seq("k", "c")) == want)
+        assert(Versioned.changes(spark, dir, v, v + 1, "c").select("k")
+          .collect().map(_.getLong(0)).toSeq == Seq(101L))
+        val (folded, _, _) = Versioned.applyDeletesCommit(spark, dir)
+        assert(Versioned.readDeletes(dir, folded)._2.isEmpty)
+        assert(rowsOf(Versioned.read(spark, dir), Seq("k", "c")) == want)
+        assert(rowsOf(Versioned.read(spark, dir, v), Seq("k", "c")) ==
+          want.filterNot(_.getLong(0) == 101L))
+      }
+    }
+  }
+
+  test("a merge-on-read delete keyed on a column no deletion vector can " +
+      "compare refuses before writing") {
+    Seq("binary", "array<double>").foreach { sqlType =>
+      val f = typedColumns.toMap.apply(sqlType)
+      val dir = tmp("badKey")
+      Versioned.commit(typedFrame(sqlType, f, 0, 20), dir)
+      val err = intercept[IllegalStateException] {
+        Versioned.deleteCommitMor(typedFrame(sqlType, f, 0, 5).select("c"),
+          dir, "c")
+      }
+      assert(err.getMessage.contains("no branch for key type"), sqlType)
+      assert(Versioned.latestVersion(dir) == 1)
+      assert(!new java.io.File(s"$dir/data/d2").exists)
+      assert(Versioned.read(spark, dir).count() == 20L)
+    }
+  }
+
   /** One table holding every typed column, four groups. */
   private def wideTable(dir: String, statsCol: Option[String]): Unit =
     Seq((0L, 1500L), (1500L, 3000L), (3000L, 4500L), (4500L, 9000L))

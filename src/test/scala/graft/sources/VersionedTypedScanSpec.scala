@@ -212,10 +212,10 @@ class VersionedTypedScanSpec extends SparkSpec {
   }
 
   test("a deletion-vector probe of an unhandled key type fails loudly") {
-    import org.apache.spark.sql.types.{ShortType, StructField, StructType}
+    import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
     val base = tmp("probe")
     def part(d: String): String = {
-      spark.range(0, 10).select(col("id").cast("short").as("k"))
+      spark.range(0, 10).select(col("id").cast("string").cast("binary").as("k"))
         .coalesce(1).write.parquet(d)
       new java.io.File(d).listFiles().map(_.getPath)
         .find(_.endsWith(".parquet")).get
@@ -224,10 +224,10 @@ class VersionedTypedScanSpec extends SparkSpec {
     val deletes = part(s"$base/deletes")
     val err = intercept[IllegalStateException] {
       new VersionedColumnarReader(data, "c1",
-        StructType(Seq(StructField("k", ShortType))), Array.empty, Map.empty,
+        StructType(Seq(StructField("k", BinaryType))), Array.empty, Map.empty,
         Map.empty, Some("k"), Seq(deletes))
     }
-    assert(err.getMessage.contains("ShortType"))
+    assert(err.getMessage.contains("BinaryType"))
   }
 
   test("NaN, -0.0 and 0.0 delete keys mask like the ops-layer anti-join") {
