@@ -157,10 +157,6 @@ object ParquetFooters {
       ParquetMetadataConverter.NO_FILTER))
   }
 
-  /** Exact row count summed from footers' row-group counts. */
-  def rowCount(footers: Seq[ParquetMetadata]): Long =
-    footers.iterator.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
-
   /** Min/max of a top-level BIGINT column from the footers' column-chunk
     * statistics: `Some(None)` when every value is NULL (or there are no
     * rows), `Some(Some((lo, hi)))` otherwise; None when the footers

@@ -440,15 +440,27 @@ object Versioned {
       })
   }
 
-  /** EXACT row count of a freshly-written file group, summed from its
-    * parquet footers — driver-side metadata reads (one footer per file,
-    * bounded by files-per-commit), never a data scan or Spark job. Feeds
-    * the manifest's per-group `counts`, which make a global `COUNT(*)`
-    * answerable from the manifest alone through the connector. */
-  private def writtenRowCount(spark: SparkSession, dir: String,
-      group: String): Long =
-    ParquetFooters.rowCount(ParquetFooters.dataFooters(resolveGroup(dir, group),
-      spark.sparkContext.hadoopConfiguration))
+  /** Write `df` as the file group `data/<group>`: staged by the
+    * connector's writer ([[graft.sources.VersionedWriter.stage]]) under
+    * `_staging/`, then moved into place with one rename, so a failed
+    * write leaves no group and an occupied `data/<group>` fails the write
+    * instead of merging into it. Returns the group's EXACT row count from
+    * the tasks' commit messages — the manifest's per-group `counts`,
+    * which make a global `COUNT(*)` answerable from the manifest alone. */
+  private def writeGroup(df: DataFrame, dir: String, group: String,
+      partitionCol: Option[String] = None): Long = {
+    val target = Paths.get(resolveGroup(dir, group))
+    if (Files.exists(target))
+      throw new java.nio.file.FileAlreadyExistsException(target.toString)
+    val staging = Paths.get(dir, "_staging", s"o${java.util.UUID.randomUUID}")
+    try {
+      val n = graft.sources.VersionedWriter.stage(df, staging.toString,
+        partitionCol).map(_.nRows).sum
+      Files.createDirectories(target.getParent)
+      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+      n
+    } finally deleteRecursively(staging) // after the move: nothing left
+  }
 
   /** Commit `df` as the next version. `overwrite = false` (append)
     * makes the new version = parent's file groups + the new group;
@@ -509,8 +521,9 @@ object Versioned {
             "OPTIMIZE must re-key them first")
       }
     }
-    withoutDrops(withDefaults(toPhysical(df, renames), defaults), drops)
-      .write.mode("errorifexists").parquet(s"$dir/data/$group")
+    val rows = writeGroup(
+      withoutDrops(withDefaults(toPhysical(df, renames), defaults), drops),
+      dir, group)
     val groups =
       (if (overwrite || parent == 0) Seq.empty
        else readManifest(dir, parent)) :+ group
@@ -543,8 +556,7 @@ object Versioned {
       scol = statsCol.orElse(parentScol),
       scol2 = if (overwrite || parent == 0) None
               else readStatsCol2(dir, parent),
-      counts = parentCounts +
-        (group -> writtenRowCount(df.sparkSession, dir, group)))
+      counts = parentCounts + (group -> rows))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"commit at $dir lost the race for version $v — " +
@@ -599,14 +611,14 @@ object Versioned {
     // commit lands before this group's manifest publishes; an overwrite
     // starts a fresh snapshot (logical = physical), so no translation
     val lvAtWrite = latestVersion(dir)
-    withoutDrops(withDefaults(toPhysical(df,
+    val rows = writeGroup(withoutDrops(withDefaults(toPhysical(df,
         if (overwrite || lvAtWrite == 0) Map.empty
         else readRenames(dir, lvAtWrite)),
         if (overwrite || lvAtWrite == 0) Map.empty
         else readDefaults(dir, lvAtWrite)),
         if (overwrite || lvAtWrite == 0) Set.empty
-        else readDrops(dir, lvAtWrite))
-      .write.mode("errorifexists").parquet(s"$dir/data/$group")
+        else readDrops(dir, lvAtWrite)), dir, group)
+    val orphan = Paths.get(resolveGroup(dir, group))
     beforePublish()
     var attempts = 0
     while (attempts < 64) {
@@ -615,9 +627,7 @@ object Versioned {
         // a racing replay won: drop the orphaned group, report skip
         // (checked FIRST — if our own txn already landed, we publish
         // nothing, so a racing overwrite's staleness is moot)
-        val p = new org.apache.hadoop.fs.Path(resolveGroup(dir, group))
-        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          .delete(p, true)
+        deleteRecursively(orphan)
         return None
       }
       // a racing OVERWRITE anywhere past the basis snapshot (captured at
@@ -634,9 +644,7 @@ object Versioned {
       // commitAppendOcc rule.
       ((lvAtWrite + 1) to parent).foreach { w =>
         if (manifestIsOverwrite(dir, w)) {
-          val p = new org.apache.hadoop.fs.Path(resolveGroup(dir, group))
-          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(p, true)
+          deleteRecursively(orphan)
           throw new java.util.ConcurrentModificationException(
             s"idempotentCommit($appId, $txnVersion) based on v$lvAtWrite " +
               s"conflicts with concurrent OVERWRITE commit v$w at $dir")
@@ -675,8 +683,7 @@ object Versioned {
           else readStatsCol2(dir, parent),
         counts =
           (if (overwrite || parent == 0) Map.empty[String, Long]
-           else readCounts(dir, parent)) +
-            (group -> writtenRowCount(df.sparkSession, dir, group)))
+           else readCounts(dir, parent)) + (group -> rows))
       if (publishIfAbsent(dir, v, json)) return Some(v)
       // publish lost to a racing APPEND (a false conflict): loop back —
       // the next iteration's basis sweep ((lvAtWrite+1)..parent) vets
@@ -687,9 +694,7 @@ object Versioned {
     // exhaustion aborts like the other two abort paths: no manifest ever
     // referenced the group, so leaving it would leak one full data group
     // per starved writer (nothing sweeps unreferenced UNCOMMITTED groups)
-    val orphan = new org.apache.hadoop.fs.Path(resolveGroup(dir, group))
-    orphan.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(orphan, true)
+    deleteRecursively(orphan)
     throw new IllegalStateException(
       s"idempotentCommit($appId, $txnVersion) lost 64 straight races at $dir")
   }
@@ -986,10 +991,10 @@ object Versioned {
     val statsUsable = readStatsCol(dir, parent).contains(key) &&
       groups.forall(ranges.contains)
     val dgroupDir = s"$dir/data/$dgroup"
-    // ONE job: the write. Emptiness is read from the written footers
-    // afterwards (a persist + isEmpty probe used to cost two more jobs);
-    // an empty delete group is removed before the manifest publishes.
-    if (statsUsable) {
+    // ONE job: the write. Emptiness is the tasks' row count (a persist +
+    // isEmpty probe used to cost two more jobs); an empty delete group is
+    // removed before the manifest publishes.
+    val written = if (statsUsable) {
       import org.apache.spark.sql.functions.coalesce
       import org.apache.spark.sql.functions.lit
       val rangeDf = spark.createDataFrame(
@@ -1005,20 +1010,18 @@ object Versioned {
       // target group so EACH touched group's vector is written by its
       // own task — a big-delete regime (quarter-table GDPR erasure at
       // 100 TB) routes billions of keys, and a single write task would
-      // be the same funnel shape topFraction retired. The hive layout
-      // is unchanged: one file per `__tg=` dir (all rows of a group
-      // hash to one partition; a task owning two colliding groups
-      // still writes one file per dir).
-      routed.repartition(col("__tg")).write.partitionBy("__tg")
-        .mode("errorifexists").parquet(dgroupDir)
+      // be the same funnel shape topFraction retired. One file per
+      // `__tg=` dir (all rows of a group hash to one partition; a task
+      // owning two colliding groups writes one file per dir).
+      writeGroup(routed.repartition(col("__tg")).sortWithinPartitions("__tg"),
+        dir, dgroup, Some("__tg"))
     } else {
       // a delete file is small by design — one file; deduplicating AFTER
       // the coalesce needs no exchange (a single partition is already
       // clustered on every key)
-      keys.coalesce(1).distinct()
-        .write.mode("errorifexists").parquet(dgroupDir)
+      writeGroup(keys.coalesce(1).distinct(), dir, dgroup)
     }
-    val wroteGroup = writtenRowCount(spark, dir, dgroup) > 0
+    val wroteGroup = written > 0
     if (!wroteGroup) deleteRecursively(Paths.get(dgroupDir))
     else if (statsUsable)
       // the routing SCOPE: the groups that existed when this delete
@@ -1376,8 +1379,8 @@ object Versioned {
             "rewrite must re-key them first")
       }
     }
-    val out = if (repartitionTo > 0) df.repartition(repartitionTo) else df
-    out.write.mode("errorifexists").parquet(s"$dir/data/$group")
+    val rows = writeGroup(
+      if (repartitionTo > 0) df.repartition(repartitionTo) else df, dir, group)
     val newStats = statsCol.flatMap(c =>
       writtenStats(spark, dir, group, c).map(group -> _))
     val carriedStats2 = parentStats2.filter(kv => carriedSet(kv._1))
@@ -1387,7 +1390,7 @@ object Versioned {
       scol2 = if (carriedStats2.nonEmpty) readStatsCol2(dir, parent)
               else None,
       counts = readCounts(dir, parent).filter(kv => carriedSet(kv._1)) +
-        (group -> writtenRowCount(spark, dir, group)))
+        (group -> rows))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"rewrite commit at $dir lost the race for version $v")
@@ -1483,14 +1486,12 @@ object Versioned {
     val shiftBits = 2 * gridBits - bucketBits
     val snap = read(spark, dir, parent)
     val z = ZOrder.zValue(col(aCol), col(bCol))
-    snap
+    writeGroup(snap
       .withColumn("__zb", shiftright(z, shiftBits).cast("int"))
       .withColumn("__z", z)
       .repartition(col("__zb"))
       .sortWithinPartitions("__zb", "__z")
-      .drop("__z")
-      .write.mode("errorifexists").partitionBy("__zb")
-      .parquet(s"$dir/data/$base")
+      .drop("__z"), dir, base, Some("__zb"))
     // 2-D stats from the WRITTEN buckets, one bounded aggregate — the
     // explicit long casts keep getLong safe when aCol/bCol are INT
     // (the docstring invites pre-gridded ints; zValue casts internally
@@ -1731,17 +1732,19 @@ object Versioned {
       .map(_.split('/').head).toSet
     val expired = (1 until retainFromVersion)
       .filter(v => Files.deleteIfExists(manifestPath(dir, v)))
-    val dataRoot = new org.apache.hadoop.fs.Path(s"$dir/data")
-    val fs = dataRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val onDisk =
-      if (!fs.exists(dataRoot)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(dataRoot)
     val cutoff = System.currentTimeMillis() - orphanGraceMs
-    val orphans = onDisk.filter(st =>
-      st.isDirectory && !retained.contains(st.getPath.getName) &&
-        st.getModificationTime <= cutoff)
-    orphans.foreach(st => fs.delete(st.getPath, true))
-    (expired.size, orphans.length)
+    def stale(root: Path): List[Path] = if (!Files.isDirectory(root)) Nil else {
+      val s = Files.list(root)
+      try s.iterator().asScala.filter(p =>
+        Files.getLastModifiedTime(p).toMillis <= cutoff).toList
+      finally s.close()
+    }
+    val orphans = stale(Paths.get(dir, "data")).filter(p =>
+      Files.isDirectory(p) && !retained.contains(p.getFileName.toString))
+    // a crashed write's staged dir (connector or ops) is never published
+    // and no reader resolves it: swept by the same grace rule
+    (orphans ++ stale(Paths.get(dir, "_staging"))).foreach(deleteRecursively)
+    (expired.size, orphans.size)
   }
 
   /** [[read]] — kept as the SCHEMA EVOLUTION verb's name: every read
@@ -1836,7 +1839,7 @@ object Versioned {
     * concurrent batch racers are still linearized by the put-if-absent
     * publish, and the streaming sink is single-writer per app). */
   def commitStagedGroup(spark: SparkSession, dir: String, stagedDir: String,
-      overwrite: Boolean = false, statsCol: Option[String] = None,
+      nRows: Long, overwrite: Boolean = false, statsCol: Option[String] = None,
       txn: Option[(String, Long)] = None,
       omitDefaultedOk: Boolean = false): Int = {
     val parent = latestVersion(dir)
@@ -1977,7 +1980,7 @@ object Versioned {
         if (overwrite || parent == 0) Set.empty else readDrops(dir, parent),
       scol = statsCol.orElse(parentScol),
       scol2 = if (overwrite || parent == 0) None else readStatsCol2(dir, parent),
-      counts = parentCounts + (group -> writtenRowCount(spark, dir, group)))
+      counts = parentCounts + (group -> nRows))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"staged commit at $dir lost the race for version $v")
@@ -1995,7 +1998,7 @@ object Versioned {
     * foreign commit still fails loudly via put-if-absent. Returns
     * Some(version) when the commit landed, None on a replay skip. */
   def commitStagedGroupIdempotent(spark: SparkSession, dir: String,
-      stagedDir: String, appId: String, txnVersion: Long,
+      stagedDir: String, appId: String, txnVersion: Long, nRows: Long,
       statsCol: Option[String] = None,
       omitDefaultedOk: Boolean = false): Option[Int] = {
     requireId("appId", appId)
@@ -2003,7 +2006,7 @@ object Versioned {
       deleteRecursively(Paths.get(stagedDir))
       return None
     }
-    Some(commitStagedGroup(spark, dir, stagedDir, overwrite = false,
+    Some(commitStagedGroup(spark, dir, stagedDir, nRows, overwrite = false,
       statsCol = statsCol, txn = Some((appId, txnVersion)),
       omitDefaultedOk = omitDefaultedOk))
   }
@@ -2046,7 +2049,7 @@ object Versioned {
     * alone (a whole-group delete); empty with nothing removed is a no-op
     * returning the parent version. */
   def replaceGroupsStagedCommit(spark: SparkSession, dir: String,
-      stagedDir: String, removed: Seq[String], expectParent: Int,
+      stagedDir: String, nRows: Long, removed: Seq[String], expectParent: Int,
       statsCol: Option[String] = None): Int = {
     val parent = latestVersion(dir)
     require(parent == expectParent,
@@ -2060,19 +2063,12 @@ object Versioned {
       // fail loudly just because the table is empty)
       require(removed.isEmpty,
         s"cannot remove groups $removed from empty table at $dir")
-      val root = Paths.get(stagedDir)
-      val any = Files.isDirectory(root) && {
-        val s = Files.list(root)
-        try s.iterator().asScala.exists(
-          _.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-      }
-      if (!any) {
-        deleteRecursively(root)
+      if (nRows == 0) {
+        deleteRecursively(Paths.get(stagedDir))
         return 0
       }
-      return commitStagedGroup(spark, dir, stagedDir, overwrite = false,
-        statsCol = statsCol)
+      return commitStagedGroup(spark, dir, stagedDir, nRows,
+        overwrite = false, statsCol = statsCol)
     }
     // the scan already refused these states; re-check at commit (cheap,
     // and the write must not depend on the scan having run first)
@@ -2087,15 +2083,8 @@ object Versioned {
     require(removedSet.subsetOf(parentGroups.toSet),
       s"removed groups ${removedSet -- parentGroups.toSet} are not in v$parent")
     val carried = parentGroups.filterNot(removedSet)
-    val hasStaged = {
-      val root = Paths.get(stagedDir)
-      Files.isDirectory(root) && {
-        val s = Files.list(root)
-        try s.iterator().asScala.exists(
-          _.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-      }
-    }
+    // the writer creates a file on its first row: rows staged ⇔ files
+    val hasStaged = nRows > 0
     // a row-level operation that deletes EVERY row (e.g. DELETE FROM t
     // with no WHERE) would publish an empty manifest no read can serve —
     // refused loudly, like the batch writer's empty-OVERWRITE rule
@@ -2122,8 +2111,7 @@ object Versioned {
     val newStats = if (hasStaged) statsCol.orElse(parentScol).flatMap(c =>
       writtenStats(spark, dir, group, c).map(group -> _)) else None
     val newCounts =
-      if (hasStaged) Map(group -> writtenRowCount(spark, dir, group))
-      else Map.empty[String, Long]
+      if (hasStaged) Map(group -> nRows) else Map.empty[String, Long]
     val json = manifestJson(v, parent, overwrite = removed.nonEmpty,
       carried ++ newGroups,
       readStats(dir, parent).filter(kv => keep(kv._1)) ++ newStats,
@@ -2265,11 +2253,11 @@ object Versioned {
     val group = s"w_${writerId}_" +
       java.util.UUID.randomUUID().toString.take(8)
     val lvAtWrite = latestVersion(dir)
-    withoutDrops(withDefaults(toPhysical(df,
+    writeGroup(withoutDrops(withDefaults(toPhysical(df,
         if (lvAtWrite == 0) Map.empty else readRenames(dir, lvAtWrite)),
         if (lvAtWrite == 0) Map.empty else readDefaults(dir, lvAtWrite)),
-        if (lvAtWrite == 0) Set.empty else readDrops(dir, lvAtWrite))
-      .write.mode("errorifexists").parquet(s"$dir/data/$group")
+        if (lvAtWrite == 0) Set.empty else readDrops(dir, lvAtWrite)),
+      dir, group)
     var parent = latestVersion(dir)
     beforePublish() // race window: parent is captured, nothing published
 
@@ -2300,9 +2288,7 @@ object Versioned {
         if (manifestIsOverwrite(dir, w)) {
           // true conflict: clean up the orphaned group before aborting
           // so the caller's retry starts from a clean slate
-          val p = new org.apache.hadoop.fs.Path(resolveGroup(dir, group))
-          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(p, true)
+          deleteRecursively(Paths.get(resolveGroup(dir, group)))
           throw new java.util.ConcurrentModificationException(
             s"append by '$writerId' based on v$parent conflicts with " +
               s"overwrite commit v$w at $dir")

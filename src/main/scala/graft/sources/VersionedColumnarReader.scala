@@ -7,7 +7,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
@@ -65,8 +67,16 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
 
   private val conf = VersionedColumnarReader.freshConf()
   private val path = new Path(file)
-  private val fileSchema: MessageType =
-    VersionedColumnarReader.schemaOf(path, conf)
+  /** The file is opened ONCE: its status, stream and footer (row groups
+    * included) are handed to the record reader, which would otherwise
+    * stat, open and parse the footer again. */
+  private val input = HadoopInputFile.fromPath(path, conf)
+  private val stream = input.newStream()
+  private val footer: ParquetMetadata =
+    try ParquetFileReader.readFooter(input,
+      HadoopReadOptions.builder(conf, path).build(), stream)
+    catch { case t: Throwable => stream.close(); throw t }
+  private val fileSchema: MessageType = footer.getFileMetaData.getSchema
   private val present: Map[String, Type] =
     fileSchema.getFields.asScala.map(f => f.getName -> f).toMap
 
@@ -156,13 +166,13 @@ private[sources] class VersionedColumnarReader(file: String, group: String,
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, /* capacity = */
       VersionedColumnarReader.Capacity)
-    val fileLen = path.getFileSystem(conf).getFileStatus(path).getLen
     // the base reader casts to the LEGACY mapred FileSplit
     val split = new org.apache.hadoop.mapred.FileSplit(
-      path, 0, fileLen, Array.empty[String])
+      path, 0, input.getLength, Array.empty[String])
     val attempt = new TaskAttemptContextImpl(conf,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
-    r.initialize(split, attempt)
+    try r.initialize(split, attempt, Some(input), Some(stream), Some(footer))
+    catch { case t: Throwable => stream.close(); throw t }
     r.initBatch(constSchema, constRow)
     r.enableReturningBatches()
     r

@@ -212,7 +212,8 @@ private[sources] class VersionedRowLevelBatchWrite(schema: StructType,
         "row-level write committed before its scan planned — " +
           "the ReplaceData contract always scans first"))
     Versioned.replaceGroupsStagedCommit(SparkSession.active, dir, staging,
-      removed, expectParent = scanVersion, statsCol = statsCol)
+      VersionedBatchWrite.rowCount(messages), removed,
+      expectParent = scanVersion, statsCol = statsCol)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

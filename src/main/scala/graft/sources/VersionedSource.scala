@@ -6,18 +6,23 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.internal.SQLConf
@@ -1192,7 +1197,8 @@ private[sources] class VersionedStreamingWrite(schema: StructType,
     // start, so epoch files legitimately lack a column added by a
     // mid-stream ALTER ADD COLUMN — readers fill its default per group
     Versioned.commitStagedGroupIdempotent(SparkSession.active, dir, staging,
-      VersionedStreamingWrite.appIdOf(queryId), epochId, statsCol,
+      VersionedStreamingWrite.appIdOf(queryId), epochId,
+      VersionedBatchWrite.rowCount(messages), statsCol,
       omitDefaultedOk = true)
   }
 
@@ -1256,7 +1262,7 @@ private[sources] class VersionedBatchWrite(schema: StructType, dir: String,
     // would publish duplicated rows or an unreadable file
     VersionedBatchWrite.dropUnacked(staging, acked)
     Versioned.commitStagedGroup(SparkSession.active, dir, staging,
-      overwrite, statsCol)
+      VersionedBatchWrite.rowCount(messages), overwrite, statsCol)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1264,6 +1270,10 @@ private[sources] class VersionedBatchWrite(schema: StructType, dir: String,
 }
 
 private[sources] object VersionedBatchWrite {
+  /** Rows the acknowledged files hold — the staged group's `counts`. */
+  def rowCount(messages: Array[WriterCommitMessage]): Long =
+    messages.collect { case VersionedCommitMessage(Some(_), n) => n }.sum
+
   /** Driver-side staging hygiene (local filesystem — gated upfront in
     * [[VersionedWrite]]): delete staged part files no task acknowledged. */
   def dropUnacked(staging: String, acked: Set[String]): Unit = {
@@ -1288,9 +1298,11 @@ private[sources] object VersionedBatchWrite {
 }
 
 /** `file` = the task's staged path IFF it wrote rows — the driver's
-  * commit publishes only acknowledged files (crash/retry hygiene). */
-private[sources] case class VersionedCommitMessage(file: Option[String],
-    nRows: Long) extends WriterCommitMessage
+  * commit publishes only acknowledged files (crash/retry hygiene) — and
+  * `nRows` its row count, which the manifest records as the group's
+  * exact `counts` entry without re-reading a footer. */
+final case class VersionedCommitMessage(file: Option[String], nRows: Long)
+  extends WriterCommitMessage
 
 private[sources] case class VersionedDataWriterFactory(
     writeConf: Map[String, String], staging: String) extends DataWriterFactory {
@@ -1300,11 +1312,16 @@ private[sources] case class VersionedDataWriterFactory(
       s"$staging/part-$partitionId-$taskId.parquet")
 }
 
-
-/** Per-partition writer through Spark's own [[ParquetWriteSupport]] — the
-  * row encoder `df.write.parquet` uses, so staged files carry exactly
-  * the layout Spark's readers expect; the file is created lazily on the
-  * first row, so empty partitions stage nothing. */
+/** The one writer of Versioned data and delete groups: the connector's
+  * batch, streaming and row-level writes build it through their
+  * factories, and the ops layer's verbs through [[VersionedWriter.stage]].
+  * Rows go through Spark's own [[ParquetWriteSupport]] — the row encoder
+  * `df.write.parquet` uses, so staged files carry exactly the layout
+  * Spark's readers expect — into a plain local file: no Hadoop
+  * FileSystem, so no checksum sidecar and no permission fork. The file
+  * is created lazily on the first row, so empty partitions stage
+  * nothing; `commit` adds the file's rows and bytes to the task's output
+  * metrics. */
 private[sources] class VersionedDataWriter(writeConf: Map[String, String],
     file: String) extends DataWriter[InternalRow] {
 
@@ -1317,9 +1334,12 @@ private[sources] class VersionedDataWriter(writeConf: Map[String, String],
     rows += 1
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    VersionedCommitMessage(if (writer != null) Some(file) else None, rows)
+  override def commit(): VersionedCommitMessage = {
+    if (writer == null) return VersionedCommitMessage(None, 0L)
+    writer.close()
+    org.apache.spark.GraftSparkShims.addTaskOutput(
+      java.nio.file.Files.size(java.nio.file.Paths.get(file)), rows)
+    VersionedCommitMessage(Some(file), rows)
   }
 
   override def abort(): Unit = {
@@ -1333,22 +1353,25 @@ private[sources] class VersionedDataWriter(writeConf: Map[String, String],
 private[sources] object VersionedDataWriter {
 
   /** The write configuration, built once on the driver: the row schema
-    * (field metadata dropped, so a footer serves the plain Catalyst
-    * types) plus the format choices pinned as constants rather than read
-    * from the session: the standard (non-legacy) decimal layout and
+    * (nullable, as Spark's file sources write it, and with field
+    * metadata dropped, so a footer serves the plain Catalyst types) plus
+    * the format choices pinned as constants rather than read from the
+    * session: SNAPPY pages, the standard (non-legacy) decimal layout and
     * UTC-adjusted INT64 TIMESTAMP(MICROS). Spark's schema converter reads
     * the last two keys unconditionally; neither matters here (no field
     * carries an id, none is a variant). */
   def conf(schema: StructType): Map[String, String] = Map(
     ParquetWriteSupport.SPARK_ROW_SCHEMA ->
-      StructType(schema.map(_.copy(metadata = Metadata.empty))).json,
+      GraftSqlShims.asNullable(
+        StructType(schema.map(_.copy(metadata = Metadata.empty)))).json,
+    ParquetOutputFormat.COMPRESSION -> CompressionCodecName.SNAPPY.name,
     SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key -> "false",
     SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "TIMESTAMP_MICROS",
     SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key -> "false",
     SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key -> "false")
 
-  private class Builder(path: Path)
-      extends ParquetWriter.Builder[InternalRow, Builder](path) {
+  private class Builder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, Builder](file) {
     override def self(): Builder = this
     override def getWriteSupport(conf: Configuration)
         : WriteSupport[InternalRow] = new ParquetWriteSupport()
@@ -1358,6 +1381,99 @@ private[sources] object VersionedDataWriter {
       : ParquetWriter[InternalRow] = {
     val conf = VersionedColumnarReader.freshConf()
     writeConf.foreach { case (k, v) => conf.set(k, v) }
-    new Builder(new Path(file)).withConf(conf).build()
+    val path = java.nio.file.Paths.get(file)
+    java.nio.file.Files.createDirectories(path.getParent)
+    new Builder(new LocalOutputFile(path)).withConf(conf)
+      .withCompressionCodec(CompressionCodecName.valueOf(
+        writeConf(ParquetOutputFormat.COMPRESSION)))
+      .build()
+  }
+}
+
+/** The ops layer's write primitive: stage a DataFrame's rows as parquet
+  * part files under a staging dir through [[VersionedDataWriter]], for
+  * the caller to move into place as one file group. */
+object VersionedWriter {
+
+  /** Run `df`'s plan as ONE SQL execution (AQE plans its final stage;
+    * QueryExecutionListeners see it) whose tasks each write their rows
+    * to `stagingDir/part-<partition>-<task>.parquet`, and return the
+    * tasks' messages (file, row count). An unpartitioned write that
+    * produced no file stages one empty file carrying the schema, as
+    * Spark's file writer does, so an empty group still reads.
+    *
+    * With `partitionCol`, each task's input must be clustered on that
+    * column (sorted within partitions): the task rolls to a new file
+    * under `<col>=<value>/` (Spark's partition-path escaping) at each
+    * value change, and the column is left out of the files — the layout
+    * `partitionBy` writes. A value that reappears after the task moved
+    * past it fails the write. */
+  def stage(df: DataFrame, stagingDir: String,
+      partitionCol: Option[String] = None): Seq[VersionedCommitMessage] = {
+    val schema = df.schema
+    val partIdx = partitionCol.map(schema.fieldIndex)
+    val dataIdx = schema.indices.filterNot(partIdx.contains)
+    val writeConf =
+      VersionedDataWriter.conf(StructType(dataIdx.map(schema(_))))
+    val tz = SQLConf.get.sessionLocalTimeZone
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
+    val qe = df.queryExecution
+    val messages = SQLExecution.withNewExecutionId(qe, Some("stage")) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd,
+        (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+          val name = s"part-${ctx.partitionId}-${ctx.taskAttemptId}.parquet"
+          partIdx match {
+            case None =>
+              writeAll(new VersionedDataWriter(writeConf,
+                s"$stagingDir/$name"), rows).toSeq
+            case Some(pi) =>
+              writeClustered(rows, schema, pi, dataIdx, tz, writeConf,
+                stagingDir, name)
+          }
+        }).toSeq.flatten
+    }
+    if (partIdx.isEmpty && messages.forall(_.file.isEmpty)) {
+      val empty = s"$stagingDir/part-empty.parquet"
+      VersionedDataWriter.open(empty, writeConf).close()
+      Seq(VersionedCommitMessage(Some(empty), 0L))
+    } else messages.filter(_.file.isDefined)
+  }
+
+  private def writeAll(w: VersionedDataWriter, rows: Iterator[InternalRow])
+      : Option[VersionedCommitMessage] =
+    try {
+      rows.foreach(w.write)
+      Some(w.commit())
+    } catch { case t: Throwable => w.abort(); throw t }
+
+  private def writeClustered(rows: Iterator[InternalRow], schema: StructType,
+      partIdx: Int, dataIdx: Seq[Int], tz: String,
+      writeConf: Map[String, String], stagingDir: String, name: String)
+      : Seq[VersionedCommitMessage] = {
+    val col = schema(partIdx)
+    val valueOf = Cast(BoundReference(partIdx, col.dataType, col.nullable),
+      StringType, Some(tz))
+    val project = UnsafeProjection.create(
+      dataIdx.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable)))
+    val out = scala.collection.mutable.ArrayBuffer.empty[VersionedCommitMessage]
+    val done = scala.collection.mutable.HashSet.empty[String]
+    var current: String = null
+    var w: VersionedDataWriter = null
+    try {
+      rows.foreach { row =>
+        val dirName = ExternalCatalogUtils.getPartitionPathString(col.name,
+          Option(valueOf.eval(row)).map(_.toString).orNull)
+        if (dirName != current) {
+          if (w != null) { out += w.commit(); done += current }
+          require(!done(dirName), s"staged write partitioned on '${col.name}'" +
+            s" needs input clustered on it: $dirName reappeared")
+          current = dirName
+          w = new VersionedDataWriter(writeConf, s"$stagingDir/$dirName/$name")
+        }
+        w.write(project(row))
+      }
+      if (w != null) out += w.commit()
+      out.toSeq
+    } catch { case t: Throwable => if (w != null) w.abort(); throw t }
   }
 }

@@ -1,10 +1,12 @@
 package graft.ops
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -238,5 +240,109 @@ class VersionedJobBudgetSpec extends SparkSpec {
     assert(written.as[java.math.BigDecimal].collect().map(_.longValue).sorted
       .toSeq == Seq(3L, 4L))
     assert(Versioned.read(spark, dir).count() == 18)
+  }
+
+  /** Every regular file under `root`, as paths relative to it. */
+  private def filesUnder(root: String): Seq[String] = {
+    val r = Paths.get(root)
+    val s = Files.walk(r)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => r.relativize(p).toString).toList.sorted
+    finally s.close()
+  }
+
+  private def footer(file: String) =
+    org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), new org.apache.hadoop.conf.Configuration()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+
+  test("a commit's group holds only part files (no _SUCCESS, .crc or " +
+      "_temporary) and costs one job") {
+    val dir = tmp("layout")
+    val (n, v) = jobs(Versioned.commit(rows(0, 1000), dir))
+    assert(n == 1, s"commit launched $n jobs")
+    val files = filesUnder(s"$dir/data/c$v")
+    assert(files.nonEmpty && files.forall(f =>
+      f.startsWith("part-") && f.endsWith(".parquet")), files)
+    assert(filesUnder(s"$dir/_staging").isEmpty)
+    assert(Versioned.readCounts(dir, v) == Map(s"c$v" -> 1000L))
+    // an empty commit still stages one file carrying the schema
+    val e = Versioned.commit(rows(0, 0), dir)
+    assert(filesUnder(s"$dir/data/c$e").size == 1)
+    assert(Versioned.read(spark, dir, e).columns.toSeq == Seq("k", "v"))
+    assert(Versioned.readCounts(dir, e)(s"c$e") == 0L)
+  }
+
+  test("a failed write task leaves no group and no manifest; the table " +
+      "reads the parent and a retry commits") {
+    val dir = tmp("crash")
+    Versioned.commit(rows(0, 100), dir)
+    val boom = udf { (k: Long) =>
+      if (k == 150L) throw new IllegalStateException("boom") else k }
+    intercept[Exception](
+      Versioned.commit(rows(100, 200).withColumn("k", boom(col("k"))), dir))
+    assert(!Files.exists(Paths.get(dir, "data", "c2")))
+    assert(!Files.exists(Paths.get(dir, "_manifests", "v2.json")))
+    assert(filesUnder(s"$dir/_staging").isEmpty)
+    assert(Versioned.latestVersion(dir) == 1)
+    assert(Versioned.read(spark, dir).count() == 100)
+    assert(Versioned.commit(rows(100, 200), dir) == 2)
+    assert(Versioned.read(spark, dir).count() == 200)
+    // an occupied data/c3 fails the commit instead of merging into it
+    val stray = Paths.get(dir, "data", "c3", "part-stray.parquet")
+    Files.createDirectories(stray.getParent)
+    Files.write(stray, Array[Byte](1))
+    intercept[java.nio.file.FileAlreadyExistsException](
+      Versioned.commit(rows(200, 300), dir))
+    assert(filesUnder(s"$dir/data/c3") == Seq("part-stray.parquet"))
+    assert(Versioned.latestVersion(dir) == 2)
+  }
+
+  test("a commit reports its rows and bytes as the tasks' output metrics") {
+    val dir = tmp("metrics")
+    val sc = spark.sparkContext
+    val (records, bytes) = (new AtomicLong(), new AtomicLong())
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          records.addAndGet(m.outputMetrics.recordsWritten)
+          bytes.addAndGet(m.outputMetrics.bytesWritten)
+        }
+    }
+    GraftTestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    val v = try {
+      val v = Versioned.commit(rows(0, 777), dir)
+      GraftTestListenerBus.drain(sc)
+      v
+    } finally sc.removeSparkListener(l)
+    assert(records.get == 777L)
+    assert(bytes.get == filesUnder(s"$dir/data/c$v")
+      .map(f => Files.size(Paths.get(dir, "data", s"c$v", f))).sum)
+  }
+
+  test("ops-written and connector-written groups share the footer schema " +
+      "and the SNAPPY codec") {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    val dir = tmp("codec")
+    val df = spark.range(0, 50, 1, 2).select(col("id").as("k"),
+      col("id").cast("decimal(20,4)").as("d"),
+      timestamp_seconds(col("id") * 3600).as("ts"),
+      concat(lit("s"), col("id").cast("string")).as("s"),
+      struct(col("id").as("a"), array(col("id")).as("b")).as("n"))
+    Versioned.commit(df, dir)
+    df.write.format("graft-versioned").option("path", dir).mode("append").save()
+    val footers = Seq("c1", "c2").map { g =>
+      val fs = filesUnder(s"$dir/data/$g")
+      assert(fs.nonEmpty)
+      fs.map(f => footer(s"$dir/data/$g/$f"))
+    }
+    val schemas = footers.map(_.map(_.getFileMetaData.getSchema).distinct)
+    assert(schemas.forall(_.size == 1) && schemas.flatten.distinct.size == 1,
+      schemas)
+    footers.flatten.flatMap(_.getBlocks.asScala).flatMap(_.getColumns.asScala)
+      .foreach(c => assert(c.getCodec == CompressionCodecName.SNAPPY, c))
+    assert(Versioned.read(spark, dir).count() == 100)
   }
 }

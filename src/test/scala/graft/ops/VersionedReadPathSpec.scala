@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -233,6 +235,74 @@ class VersionedReadPathSpec extends SparkSpec {
     intercept[IllegalArgumentException](Versioned.read(spark, dir, 1))
     intercept[IllegalArgumentException](Versioned.read(spark, dir, 4))
     assert(Versioned.read(spark, dir, 3).count() == 30L)
+  }
+
+  /** Every regular file under `root`, relative to it, sorted. */
+  private def filesUnder(root: String): Seq[String] = {
+    val r = java.nio.file.Paths.get(root)
+    val s = Files.walk(r)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => r.relativize(p).toString).toList.sorted
+    finally s.close()
+  }
+
+  test("vacuum sweeps staged dirs older than the grace window and keeps " +
+      "fresh ones") {
+    val dir = tmp("staging")
+    Versioned.commit(spark.range(0, 10).toDF("k"), dir)
+    Versioned.commit(spark.range(10, 20).toDF("k"), dir)
+    val staging = java.nio.file.Paths.get(dir, "_staging")
+    val stale = staging.resolve("qcrashed")
+    val fresh = staging.resolve("qinflight")
+    Seq(stale, fresh).foreach { d =>
+      Files.createDirectories(d)
+      Files.write(d.resolve("part-0-0.parquet"), Array[Byte](1, 2, 3))
+    }
+    val hourMs = 60L * 60L * 1000L
+    Files.setLastModifiedTime(stale, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 2 * hourMs))
+    Versioned.vacuum(spark, dir, retainFromVersion = 2, orphanGraceMs = hourMs)
+    assert(!Files.exists(stale))
+    assert(Files.exists(fresh.resolve("part-0-0.parquet")))
+    assert(Versioned.read(spark, dir).count() == 20L)
+  }
+
+  test("routed merge-on-read deletes and Z-order compaction publish the " +
+      "partition dirs and rows Spark's partitioned writer lays out") {
+    val dir = tmp("tg")
+    Versioned.commit(spark.range(0, 100).select(col("id").as("k")), dir,
+      statsCol = Some("k"))
+    Versioned.commit(spark.range(100, 200).select(col("id").as("k")), dir,
+      statsCol = Some("k"))
+    val d = Versioned.deleteCommitMor(Seq(3L, 150L, 151L, 999L).toDF("k"),
+      dir, "k")
+    val dg = s"$dir/data/d$d"
+    val files = filesUnder(dg)
+    assert(files.filterNot(_ == "_scope").map(_.split('/').head).toSet ==
+      Set("__tg=c1", "__tg=c2", s"__tg=${Versioned.NoneGroup}"), files)
+    assert(files.count(_.endsWith(".parquet")) == 3, files)
+    assert(spark.read.parquet(dg).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((3L, "c1"), (150L, "c2"), (151L, "c2"), (999L, Versioned.NoneGroup)))
+    assert(Versioned.read(spark, dir).count() == 197L)
+
+    // Z-order buckets against the same frame written with partitionBy
+    val zdir = tmp("zb")
+    val grid = spark.range(0, 256).select((col("id") % 16).as("a"),
+      (col("id") / 16).cast("long").as("b"), col("id").as("k"))
+    Versioned.commit(grid, zdir)
+    val (zv, n) = Versioned.compactZOrder(spark, zdir, "a", "b", 4, 2)
+    val ref = tmp("zb_ref")
+    grid.withColumn("__zb",
+        shiftright(ZOrder.zValue(col("a"), col("b")), 6).cast("int"))
+      .write.partitionBy("__zb").parquet(ref)
+    def dirs(root: String) =
+      filesUnder(root).filter(_.endsWith(".parquet")).map(_.split('/').head)
+        .distinct
+    assert(n == 4 && dirs(s"$zdir/data/c$zv") == dirs(ref))
+    dirs(ref).foreach { b =>
+      def rows(p: String) = spark.read.parquet(p).orderBy("k").collect().toSeq
+      assert(rows(s"$zdir/data/c$zv/$b") == rows(s"$ref/$b"), b)
+    }
   }
 
   test("shallow clones and stats-less flat deletes read like the reference") {

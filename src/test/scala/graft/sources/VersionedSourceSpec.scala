@@ -721,7 +721,7 @@ class VersionedSourceSpec extends SparkSpec {
     spark.range(10, 15).select(col("id").as("k"))
       .coalesce(1).write.mode("overwrite").parquet(staged)
     val committed = Versioned.commitStagedGroupIdempotent(spark, d, staged,
-      appId = "epochapp", txnVersion = 7L)
+      appId = "epochapp", txnVersion = 7L, nRows = 5L)
     assert(committed.contains(2))
     val got = Versioned.read(spark, d)
     assert(got.count() == 15L) // the orphan bytes are gone, not served
@@ -745,7 +745,7 @@ class VersionedSourceSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(staged2)
     intercept[java.util.ConcurrentModificationException] {
       Versioned.commitStagedGroupIdempotent(spark, d, staged2,
-        appId = "otherapp", txnVersion = 1L)
+        appId = "otherapp", txnVersion = 1L, nRows = 3L)
     }
     assert(Versioned.latestVersion(d) == 2) // nothing published past it
   }
