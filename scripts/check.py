@@ -5,7 +5,10 @@ testdata parquet tables and compares against the parquet results dumped by
 `graft.Verify`. Columns are sorted by name, rows by all columns, values
 compared exactly (bit-exact doubles — the query layer is designed for that).
 
-Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check.py <sfDir> <verifyOutDir> [q1,q2,...]
+
+The optional third argument is a comma list of query names, the subset
+`graft.Verify` takes as its own third argument: only those oracles run.
 """
 import json
 import math
@@ -25,13 +28,19 @@ def norm(v):
     return v
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, subset=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
+    if subset is not None:
+        missing = sorted(subset - oracles.keys())
+        if missing:
+            print(f"FAIL no oracle dumped for {', '.join(missing)}")
+            return 1
+        oracles = {k: v for k, v in oracles.items() if k in subset}
 
     n_pass = n_fail = 0
     for name in sorted(oracles):
@@ -92,4 +101,6 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    names = ({q.strip() for q in sys.argv[3].split(",") if q.strip()}
+             if len(sys.argv) > 3 else None)
+    sys.exit(main(sys.argv[1], sys.argv[2], names))

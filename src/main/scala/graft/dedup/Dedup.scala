@@ -89,14 +89,20 @@ object Dedup {
   }
 
   /** Distinct (id, shingle) pairs of `n` consecutive whitespace tokens. */
-  def wordShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+  def wordShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    shingleRows(df, idCol, textCol, n).distinct()
+
+  /** One (id, shingle) row per occurrence of `n` consecutive whitespace
+    * tokens — row-local (no shuffle), repeats kept. A document with fewer
+    * than `n` tokens, or NULL text, has no rows. */
+  private[dedup] def shingleRows(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame = {
     val w = TextFunctions.tokens(col(textCol))
     val joined = (0 until n).map(k => element_at(col("w"), col("i") + k + 1))
     df.select(col(idCol), w.as("w"))
       .withColumn("i", explode(sequence(lit(0), greatest(size(col("w")) - n, lit(0)))))
       .filter(col("i") <= size(col("w")) - n)
       .select(col(idCol), concat_ws(" ", joined: _*).as("shingle"))
-      .distinct()
   }
 
   /** N-gram Jaccard pairs ≥ `minJaccard`. `maxShingleDf` drops shingles
@@ -360,6 +366,19 @@ object Dedup {
         array_sort(collect_list(struct(col("j"), col("mh")))),
         x => concat_ws(":", x("j"), x("mh")))))
         .as("band_hash"))
+
+  /** [[bandBuckets]] of ONE signature array, as a row-local expression:
+    * an array of k / rowsPerBand (band, band_hash) structs, each hash
+    * the md5 of the band's "j:mh" slots joined by "," in slot order —
+    * the same key bandBuckets aggregates, so `inline` of it yields
+    * bandBuckets' rows without a shuffle. */
+  private[dedup] def bandKeys(sig: Column, k: Int, rowsPerBand: Int): Column =
+    array((0 until k / rowsPerBand).map { b =>
+      val slots = (b * rowsPerBand until (b + 1) * rowsPerBand)
+        .map(j => concat_ws(":", lit(j), element_at(sig, j + 1)))
+      struct(lit(b.toLong).as("band"),
+        md5(concat_ws(",", slots: _*)).as("band_hash"))
+    }: _*)
 
   /** Banded candidate pairs only (no Jaccard estimate): docs sharing any
     * band bucket of their MinHash signature. The O(n²) space is never

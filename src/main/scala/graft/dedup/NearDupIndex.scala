@@ -14,15 +14,25 @@ import graft.ops.Versioned
   * pattern lifted from exact to NEAR dedup, the shape RefinedWeb/
   * CCNet-style pipelines run at crawl cadence.
   *
-  * Per [[ingest]] step: sketch the batch once (one cached shingle scan
-  * feeds signatures, verification and the survivor append), probe the
-  * stored bands for candidates, verify exactly against the stored
-  * shingles (never the estimate — the [[Dedup.lshThenExactPairs]]
-  * precision contract), then append the NON-duplicate survivors' sketch
-  * AND the step's pair results as ONE ATOMIC commit — the single-table
-  * layout exists precisely so a crawl step is all-or-nothing, and
+  * Per [[ingest]] step: sketch the batch once (one shuffle aggregates
+  * each document's shingle set and signature; bands, shingles and sizes
+  * are projections of that one materialized frame), probe the stored
+  * bands for candidates, verify exactly against the stored shingles
+  * (never the estimate — the [[Dedup.lshThenExactPairs]] precision
+  * contract), then append the NON-duplicate survivors' sketch AND the
+  * step's pair results as ONE ATOMIC commit — the single-table layout
+  * exists precisely so a crawl step is all-or-nothing, and
   * [[ingestIdempotent]] makes it exactly-once under at-least-once
   * delivery (a streaming foreachBatch keyed on the batch id).
+  *
+  * Materialized leaves: the batch sketch and the step's pairs are
+  * `localCheckpoint`ed, so the commit plans over those leaves instead
+  * of re-planning the probe tree under every family it writes, and
+  * nothing is left registered in the session's cache. The trade-off: a
+  * checkpointed leaf has no lineage, so an executor lost mid-step fails
+  * the step instead of recomputing its blocks. The commit is atomic, so
+  * the index is unchanged and an [[ingestIdempotent]] retry is still
+  * exactly-once (the `graph.Iterate` and `text.Curation` discipline).
   *
   * 100 TB notes: shingle rows dominate the table — bucket the stored
   * table by doc id so the per-probe verification join co-partitions
@@ -45,15 +55,25 @@ object NearDupIndex {
     require(minJaccard > 0 && minJaccard <= 1, s"minJaccard: $minJaccard")
   }
 
-  /** (bands, shingles, sizes) of one document frame, all fed by ONE
-    * cached shingle scan. */
-  private def sketch(df: DataFrame, idCol: String, textCol: String,
+  /** (bands, shingles, sizes) of one document frame from ONE shuffle:
+    * the frame's shingle rows aggregate per id into the shingle set and
+    * the MinHash signature together (a batch repeating an id merges its
+    * rows' shingles, as the distinct shingle scan did), that per-document
+    * frame is materialized once, and the three families are narrow
+    * projections of it — shingles explode the set, sizes count it, band
+    * keys hash slices of the signature ([[Dedup.bandKeys]]). */
+  private[dedup] def sketch(df: DataFrame, idCol: String, textCol: String,
       p: Params): (DataFrame, DataFrame, DataFrame) = {
-    val sh = Dedup.tracked(
-      Dedup.wordShingles(df, idCol, textCol, p.n).cache())
-    val bands = Dedup.bandBuckets(
-      Dedup.signaturesFromShingles(sh, idCol, p.k), idCol, p.rowsPerBand)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))
+    graft.functions.MinHashAgg.register(df.sparkSession)
+    val docs = Dedup.shingleRows(df, idCol, textCol, p.n)
+      .groupBy(idCol)
+      .agg(collect_set(col("shingle")).as("__set"),
+        call_function("graft_minhash", col("shingle"), lit(p.k)).as("__sig"))
+      .localCheckpoint()
+    val bands = docs.select(col(idCol),
+      inline(Dedup.bandKeys(col("__sig"), p.k, p.rowsPerBand)))
+    val sh = docs.select(col(idCol), explode(col("__set")).as("shingle"))
+    val sizes = docs.select(col(idCol), size(col("__set")).cast("long").as("sz"))
     (bands, sh, sizes)
   }
 
@@ -96,7 +116,7 @@ object NearDupIndex {
 
   /** Stored-table row count above which [[probeWith]] narrows the
     * verification joins to candidate-touched corpus docs. Below it the
-    * extra narrowing stages (candidate persist + broadcast + two
+    * extra narrowing stages (candidate checkpoint + broadcast + two
     * semi-joins) cost more than the small stored-family shuffle they
     * avoid — measured +0.6 s/ingest at the sf0.1 index (~1M stored
     * rows) vs a clear win once the indexed corpus dwarfs the batch
@@ -136,14 +156,11 @@ object NearDupIndex {
       .select(col(idCol).as("corpus_id"), col("band"), col("band_hash"))
     val cands0 = bB.join(bC, Seq("band", "band_hash"))
       .select("batch_id", "corpus_id").distinct()
-    // narrowed path: candidates persisted (they feed the id broadcast
+    // narrowed path: candidates materialized (they feed the id broadcast
     // AND the verification join); the broadcast is bounded by the
     // batch's distinct candidate partners — crawl-cadence batch scale;
     // split pathological mega-batches upstream
-    val cands =
-      if (!narrow) cands0
-      else Dedup.tracked(cands0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cands = if (!narrow) cands0 else cands0.localCheckpoint()
     def touched(family: DataFrame): DataFrame =
       if (!narrow) family
       else family.join(broadcast(cands.select("corpus_id").distinct()),
@@ -188,18 +205,19 @@ object NearDupIndex {
   }
 
   /** The probe + survivor-rows half shared by both ingest verbs: the
-    * batch is sketched ONCE (the survivor append anti-joins the probe's
-    * own cached sketch frames by the dup ids) and the pairs frame is
-    * persisted so its candidate+verification joins run once even though
-    * the survivor derivation, the commit and the caller all consume it. */
+    * batch is sketched ONCE (the survivor rows anti-join the sketch's
+    * materialized families by the dup ids) and the pairs are materialized
+    * once, so the survivor derivation, the commit and the caller read
+    * them instead of re-planning the probe. The dup-id set is the step's
+    * pairs — batch-bounded, like the narrowed probe's candidates — so the
+    * anti-joins broadcast it. */
   private def ingestRows(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, p: Params, dir: String,
       step: Long): (DataFrame, DataFrame) = {
     val (bands, sh, sizes) = sketch(batch, idCol, textCol, p)
-    val pairs = Dedup.tracked(
-      probeWith(spark, idCol, bands, sh, sizes, p, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val dupIds = pairs.select(col("batch_id").as(idCol)).distinct()
+    val pairs = probeWith(spark, idCol, bands, sh, sizes, p, dir)
+      .localCheckpoint()
+    val dupIds = broadcast(pairs.select(col("batch_id").as(idCol)))
     def surv(f: DataFrame) = f.join(dupIds, idCol :: Nil, "left_anti")
     (unified(idCol, surv(bands), surv(sh), surv(sizes),
       Some((pairs, step))), pairs)

@@ -23,25 +23,32 @@ import org.apache.spark.sql.SparkSession
   */
 object ShuffleAudit {
 
+  /** `stages` counts the stages that ran tasks (a job's skipped,
+    * already-materialized parent stages are not counted). */
   final case class Audit(
       shuffleReadBytes: Long,
       shuffleWriteBytes: Long,
       memorySpillBytes: Long,
       diskSpillBytes: Long,
-      tasks: Long)
+      tasks: Long,
+      jobs: Long,
+      stages: Long)
 
   private val auditSeq = new AtomicLong()
 
   def measure[A](spark: SparkSession)(action: => A): (A, Audit) = {
     val sc = spark.sparkContext
     val group = s"graft-shuffle-audit-${auditSeq.incrementAndGet()}"
-    val read, write, memSpill, diskSpill, tasks = new AtomicLong()
-    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val read, write, memSpill, diskSpill, tasks, jobs = new AtomicLong()
+    val stages, ran = ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val g = Option(js.properties)
           .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (group == g) js.stageInfos.foreach(si => stages.add(si.stageId))
+        if (group == g) {
+          jobs.incrementAndGet()
+          js.stageInfos.foreach(si => stages.add(si.stageId))
+        }
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
@@ -51,6 +58,7 @@ object ShuffleAudit {
           memSpill.addAndGet(m.memoryBytesSpilled)
           diskSpill.addAndGet(m.diskBytesSpilled)
           tasks.incrementAndGet()
+          ran.add(te.stageId)
           ()
         }
       }
@@ -67,7 +75,7 @@ object ShuffleAudit {
       val result = action
       GraftSparkShims.waitUntilListenerBusEmpty(sc)
       (result, Audit(read.get(), write.get(), memSpill.get(), diskSpill.get(),
-        tasks.get()))
+        tasks.get(), jobs.get(), ran.size.toLong))
     } finally {
       sc.setLocalProperty("spark.jobGroup.id", prevGroup)
       sc.setLocalProperty("spark.job.description", prevDesc)

@@ -1,9 +1,17 @@
 package graft.dedup
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
+import org.apache.spark.GraftTestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class NearDupIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -156,5 +164,110 @@ class NearDupIndexSpec extends SparkSpec {
       .filter(col("step") === 2L).collect()
       .map(r => (r.getLong(1), r.getLong(2))).toSeq
     assert(p2 == Seq((20L, 11L)), s"got $p2")
+  }
+
+  /** The relational sketch the one-shuffle [[NearDupIndex.sketch]]
+    * replaced — distinct shingle scan, fused signature aggregate, banding
+    * group-by and a per-id count — kept as the independent reference the
+    * equivalence leg pins it against. */
+  private def sketchRelational(df: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val sh = Dedup.wordShingles(df, "doc_id", "text", P.n)
+    val bands = Dedup.bandBuckets(
+      Dedup.signaturesFromShingles(sh, "doc_id", P.k), "doc_id", P.rowsPerBand)
+    (bands, sh, sh.groupBy("doc_id").agg(count(lit(1)).as("sz")))
+  }
+
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).view
+      .mapValues(_.size).toMap
+
+  test("the one-shuffle sketch's band, shingle and size rows equal the " +
+      "relational sketch's, short, NULL, empty and repeated-id docs included") {
+    val docs = corpus.unionByName(Seq(
+      (4L, "two words"),                          // fewer than n tokens
+      (5L, null),
+      (6L, ""),
+      (7L, "a b c a b c a b c d"),                // repeated shingles
+      (8L, "one row of the repeated id document"),
+      (8L, "second row of the repeated id holds more words")) // same id
+      .toDF("doc_id", "text"))
+    val (b, s, z) = NearDupIndex.sketch(docs, "doc_id", "text", P)
+    val (rb, rs, rz) = sketchRelational(docs)
+    Seq("bands" -> (b, rb), "shingles" -> (s, rs), "sizes" -> (z, rz))
+      .foreach { case (family, (got, want)) =>
+        assert(got.schema.map(f => f.name -> f.dataType) ==
+          want.schema.map(f => f.name -> f.dataType), family)
+        assert(multiset(got) == multiset(want), family)
+      }
+    val ids = z.select("doc_id").as[Long].collect().toSet
+    assert(ids == Set(1L, 2L, 3L, 7L, 8L), s"sized docs: $ids")
+  }
+
+  /** Spark jobs `thunk` launches on this thread, the executed plans of
+    * the Versioned commits it stages, and its result. */
+  private def audited[T](thunk: => T): (Int, Seq[SparkPlan], T) = {
+    val sc = spark.sparkContext
+    val group = s"ndidx-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger()
+    val staged = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    val plans = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "stage") staged.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    GraftTestListenerBus.drain(sc)
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(plans)
+    sc.setJobGroup(group, "ndidx budget")
+    try {
+      val out = thunk
+      GraftTestListenerBus.drain(sc)
+      (n.get, staged.toArray(Array.empty[SparkPlan]).toSeq, out)
+    } finally {
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(plans)
+      sc.removeSparkListener(jobs)
+    }
+  }
+
+  test("one ingest stays within its job budget and commits a plan over " +
+      "materialized leaves (no in-memory scan of a cached probe)") {
+    val dir = freshDir()
+    NearDupIndex.build(corpus, "doc_id", "text", P, dir)
+    val batch = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog tonight"), // dup
+      (11L, "fresh survivor text about distributed minhash indexing steps"))
+      .toDF("doc_id", "text")
+    val (n, staged, pairs) = audited(
+      NearDupIndex.ingest(spark, batch, "doc_id", "text", P, dir, step = 1L))
+    assert(n <= 13, s"one ingest launched $n jobs")
+    assert(staged.size == 1, s"${staged.size} staged writes")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collectWithSubqueries(staged.head) {
+      case m: InMemoryTableScanLike => m }
+    assert(scans.isEmpty, s"commit plan:\n${staged.head}")
+    assert(pairs.select("batch_id", "corpus_id").collect().toSeq ==
+      Seq(Row(10L, 1L)))
+  }
+
+  test("build, ingests and probes leave nothing in the session's cache") {
+    spark.catalog.clearCache() // start from an empty cache
+    val dir = freshDir()
+    NearDupIndex.build(corpus, "doc_id", "text", P, dir)
+    Seq(1L -> "the quick brown fox jumps over the lazy dog tonight",
+      2L -> "fresh survivor text about distributed minhash indexing steps")
+      .foreach { case (step, text) =>
+        NearDupIndex.ingest(spark, Seq((10L * step, text)).toDF("doc_id", "text"),
+          "doc_id", "text", P, dir, step).collect()
+      }
+    NearDupIndex.probe(spark, corpus, "doc_id", "text", P, dir).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }
