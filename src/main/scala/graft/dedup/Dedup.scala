@@ -337,7 +337,7 @@ object Dedup {
     * formulation (kept below for the equivalence spec) and the t7 oracle. */
   private[dedup] def signaturesFromShingles(sh: DataFrame, idCol: String,
       k: Int): DataFrame = {
-    graft.functions.MinHashAgg.register(sh.sparkSession)
+    graft.GraftExtensions.setup(sh.sparkSession)
     sh.groupBy(idCol)
       .agg(call_function("graft_minhash", col("shingle"), lit(k)).as("__sig"))
       .select(col(idCol), posexplode(col("__sig")).as(Seq("j", "mh")))
@@ -490,7 +490,7 @@ object Dedup {
     * hash60) keeps the assembled value positive in a signed 64-bit integer
     * in every engine. Returns (id, simhash). */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.SimHashAgg.register(df.sparkSession)
+    graft.GraftExtensions.setup(df.sparkSession)
     val tok = df.select(col(idCol),
       explode(TextFunctions.tokens(col(textCol))).as("tk"))
     val hashed = tok.select(col(idCol), TextFunctions.hash60(col("tk"), 0).as("h"))

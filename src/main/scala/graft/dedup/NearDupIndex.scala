@@ -64,7 +64,7 @@ object NearDupIndex {
     * keys hash slices of the signature ([[Dedup.bandKeys]]). */
   private[dedup] def sketch(df: DataFrame, idCol: String, textCol: String,
       p: Params): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.MinHashAgg.register(df.sparkSession)
+    graft.GraftExtensions.setup(df.sparkSession)
     val docs = Dedup.shingleRows(df, idCol, textCol, p.n)
       .groupBy(idCol)
       .agg(collect_set(col("shingle")).as("__set"),

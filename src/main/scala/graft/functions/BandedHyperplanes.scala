@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
@@ -182,10 +180,4 @@ object BandedHyperplanes {
     BandedHyperplanes(children.head, intLit(children(1), "planesPerBand"),
       intLit(children(2), "bands"), intLit(children(3), "maxDims"))
   }
-
-  /** Idempotent session registration (also injected by GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    Registry.ifAbsent(spark, "graft_bands",
-      new ExpressionInfo(classOf[BandedHyperplanes].getName, "graft_bands"),
-      (children: Seq[Expression]) => build(children))
 }

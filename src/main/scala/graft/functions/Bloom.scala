@@ -4,13 +4,11 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, IntegerType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bloom-filter build + probe pair — the runtime semi-join reduction:
@@ -167,20 +165,5 @@ object Bloom {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** Idempotent session registration (also injected by GraftExtensions). */
-  def register(spark: SparkSession): Unit = {
-    Registry.ifAbsent(spark, "graft_bloom",
-      new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom"),
-      (children: Seq[Expression]) => (children(1), children(2)) match {
-        case (Literal(b: Int, IntegerType), Literal(h: Int, IntegerType)) =>
-          BloomAgg(children(0), b, h)
-        case other => throw new IllegalArgumentException(
-          s"graft_bloom numBits/numHashes must be integer literals, got $other")
-      })
-    Registry.ifAbsent(spark, "graft_bloom_contains",
-      new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),
-      (children: Seq[Expression]) => BloomContains(children(0), children(1)))
   }
 }

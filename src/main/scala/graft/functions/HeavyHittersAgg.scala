@@ -5,13 +5,11 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Misra–Gries heavy-hitters sketch: `graft_heavy_hitters(item, k)` →
@@ -120,16 +118,4 @@ case class HeavyHittersAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
-}
-
-object HeavyHittersAgg {
-  /** Idempotent session registration (also injected by GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    Registry.ifAbsent(spark, "graft_heavy_hitters",
-      new ExpressionInfo(classOf[HeavyHittersAgg].getName, "graft_heavy_hitters"),
-      (children: Seq[Expression]) => children(1) match {
-        case Literal(v: Int, IntegerType) => HeavyHittersAgg(children(0), v)
-        case other => throw new IllegalArgumentException(
-          s"graft_heavy_hitters k must be an integer literal, got $other")
-      })
 }

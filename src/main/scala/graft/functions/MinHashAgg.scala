@@ -4,13 +4,11 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MinHash signature aggregate: `graft_minhash(shingle, k)` over a
@@ -113,14 +111,4 @@ object MinHashAgg {
     while (i < 7) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
     (v << 4) | ((digest(7) & 0xffL) >>> 4)
   }
-
-  /** Idempotent session registration (also injected by GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    Registry.ifAbsent(spark, "graft_minhash",
-      new ExpressionInfo(classOf[MinHashAgg].getName, "graft_minhash"),
-      (children: Seq[Expression]) => children(1) match {
-        case Literal(v: Int, IntegerType) => MinHashAgg(children(0), v)
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash k must be an integer literal, got $other")
-      })
 }

@@ -2,11 +2,9 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
@@ -123,10 +121,4 @@ object ShingleStats {
     }
     ShingleStats(children.head, n)
   }
-
-  /** Idempotent session registration (also injected by GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    Registry.ifAbsent(spark, "graft_shingle_stats",
-      new ExpressionInfo(classOf[ShingleStats].getName, "graft_shingle_stats"),
-      (children: Seq[Expression]) => build(children))
 }

@@ -94,7 +94,7 @@ object DataSkipping {
   def writeWithBloom(df: DataFrame, dir: String, keyCol: String,
       nFiles: Int, numBits: Int, numHashes: Int): Unit = {
     val spark = df.sparkSession
-    graft.functions.Bloom.register(spark)
+    graft.GraftExtensions.setup(spark)
     df.repartition(nFiles).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
       .groupBy(input_file_name().as("file"))

@@ -29,7 +29,7 @@ object Scale {
     require(fact.schema(factKey).dataType == dim.schema(dimKey).dataType,
       s"bloomSemiFilter key types must match: " +
         s"${fact.schema(factKey).dataType.sql} vs ${dim.schema(dimKey).dataType.sql}")
-    graft.functions.Bloom.register(fact.sparkSession)
+    graft.GraftExtensions.setup(fact.sparkSession)
     // the bloom is an INDEX: build it eagerly (one aggregate action over
     // dim keys — the IVF-index precedent) and embed the bytes as a
     // BinaryType literal, so the probe filter stays inside whole-stage

@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, RangeJoinPlan, RangeJoinStrategy}
+import graft.plans.{AsOfJoinPlan, RangeJoinPlan}
 
 /** Time-series joins the reference (and stock Spark SQL) lacks: backward
   * as-of join and bounded time-range join (SURVEY §2.3 lists both as "not
@@ -61,14 +61,6 @@ object TimeJoins {
       .withColumnRenamed("__asof_ts", s"asof_$ts")
   }
 
-  /** Register [[AsOfJoinStrategy]] with the session planner (idempotent).
-    * The spark.sql.extensions path does this at session build
-    * ([[graft.GraftExtensions]]); this covers plain sessions. */
-  def registerAsOfStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-
   /** Backward as-of join via the custom physical operator
     * [[graft.plans.BroadcastAsOfJoinExec]] — same semantics and output
     * shape as [[asofJoinBackward]], but the right side is broadcast
@@ -80,7 +72,7 @@ object TimeJoins {
   def asofJoinBroadcast(left: DataFrame, right: DataFrame, key: String,
       ts: String, valueCol: String, tieBreak: String): DataFrame = {
     val spark = left.sparkSession
-    registerAsOfStrategy(spark)
+    graft.GraftExtensions.setup(spark)
     val lp = left.queryExecution.analyzed
     val rp0 = right.queryExecution.analyzed
     // Self-join shapes (left and right carved from the same scan) share
@@ -111,9 +103,7 @@ object TimeJoins {
   def rangeJoinBroadcast(a: DataFrame, b: DataFrame, key: String, ts: String,
       windowSecs: Long): DataFrame = {
     val spark = a.sparkSession
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
+    graft.GraftExtensions.setup(spark)
     val lp = a.select(col(key), col(ts).cast("long").as("a_sec"))
       .queryExecution.analyzed
     val rp0 = b.select(col(key), col(ts).cast("long").as("b_sec"))

@@ -109,7 +109,11 @@ object Versioned {
     if (g.startsWith("/") || g.contains("://")) g else s"$dir/data/$g"
 
   /** One multi-root parquet read of `groups`, its schema taken from the
-    * driver-side footer ([[ParquetFooters.read]]) — no inference job. */
+    * driver-side footer ([[ParquetFooters.read]]) — no inference job.
+    * Serves what the manifest's table read cannot: delete-key groups
+    * ([[deleteKeys]]) and a group this commit has just written but not
+    * yet published (stats probes). Published data groups read through
+    * [[groupsRead]]. */
   private def readGroups(spark: SparkSession, dir: String,
       groups: Seq[String]): DataFrame =
     ParquetFooters.read(spark, groups.map(resolveGroup(dir, _)))
@@ -848,7 +852,7 @@ object Versioned {
     val (touched, carried) = touchedGroups(updates, statsCol, dir, parent)
     val merged =
       if (touched.isEmpty) updates
-      else Upsert.merge(readGroups(spark, dir, touched), updates, key)
+      else Upsert.merge(groupsRead(spark, dir, parent, touched), updates, key)
     val v = commitRewrite(merged, spark, dir, parent, carried, Some(statsCol))
     (v, touched, carried)
   }
@@ -892,7 +896,7 @@ object Versioned {
     require(touched.nonEmpty || carried.nonEmpty, "empty manifest")
     val survivors =
       if (touched.isEmpty) null
-      else readGroups(spark, dir, touched)
+      else groupsRead(spark, dir, parent, touched)
         .filter(!(col(statsCol) >= lo && col(statsCol) <= hi))
     if (touched.isEmpty) {
       // nothing intersects: the delete is a metadata no-op — still mint
@@ -1441,7 +1445,7 @@ object Versioned {
     val smallBytes = smalls.map(_._2).sum
     val bins = math.max(1L,
       (smallBytes + targetBytes - 1) / targetBytes).toInt
-    val packed = readGroups(spark, dir, smalls.map(_._1))
+    val packed = groupsRead(spark, dir, v, smalls.map(_._1))
     val nv = commitRewrite(packed, spark, dir, v, carried, statsCol,
       repartitionTo = bins)
     (nv, bins, smalls.map(_._1), carried)

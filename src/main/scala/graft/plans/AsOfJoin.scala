@@ -55,9 +55,8 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule: AsOfJoinPlan → BroadcastAsOfJoinExec. Injected via
-  * `GraftExtensions` (spark.sql.extensions) or lazily through
-  * `TimeJoins.asofJoinBroadcast`. */
+/** Planner rule: AsOfJoinPlan → BroadcastAsOfJoinExec. Installed by
+  * [[graft.GraftExtensions]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoinPlan =>

@@ -125,15 +125,9 @@ object Mv {
 
   def clear(): Unit = registry.clear()
 
-  /** Idempotent per-session enablement: appends the rewrite rule to
-    * `spark.experimental.extraOptimizations` (the runtime twin of the
-    * `GraftExtensions` injection, for sessions built without
-    * `spark.sql.extensions`). */
-  def enable(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_ eq MvRewrite))
-      spark.experimental.extraOptimizations = cur :+ MvRewrite
-  }
+  /** True while no MV is registered — [[MvRewrite]] then has nothing to
+    * match and returns every plan untouched. */
+  private[plans] def isEmpty: Boolean = registry.isEmpty
 
   /** The MV's partial-aggregate projection of `rows` (used for the initial
     * build over the base AND for per-batch deltas in [[refresh]]). */
@@ -303,8 +297,9 @@ object Mv {
   }
 }
 
-/** The optimizer rule. Runs late (extraOptimizations / injected rule batch),
-  * i.e. after predicate pushdown and column pruning, so the matched shape is
+/** The optimizer rule, installed by [[graft.GraftExtensions]]. Runs late
+  * (extraOptimizations / injected rule batch), i.e. after predicate
+  * pushdown and column pruning, so the matched shape is
   * `Aggregate [Project] [Filter] LogicalRelation(parquet)` in any
   * Project/Filter order. Idempotent: the rewritten plan scans the MV path,
   * which is never a registered base, so the fixed-point batch converges in
@@ -312,7 +307,8 @@ object Mv {
 object MvRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformUp {
+    if (Mv.isEmpty) plan
+    else plan.transformUp {
       case agg: Aggregate =>
         tryRewrite(agg).getOrElse(agg)
     }

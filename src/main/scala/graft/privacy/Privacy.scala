@@ -4,9 +4,8 @@ import java.util.Base64
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -129,20 +128,6 @@ case class HmacDetokenize(left: Expression, right: Expression)
 
 object Privacy {
 
-  /** Register `hmac_tokenize` / `hmac_detokenize` in the session function
-    * registry (the runtime twin of a SparkSessionExtensions
-    * `injectFunction`; see [[GraftExtensions]] for the spark.sql.extensions
-    * path). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier("hmac_tokenize"),
-      new ExpressionInfo(classOf[HmacSha256Base64].getName, "hmac_tokenize"),
-      (children: Seq[Expression]) => HmacSha256Base64(children(0), children(1)))
-    reg.registerFunction(FunctionIdentifier("hmac_detokenize"),
-      new ExpressionInfo(classOf[HmacDetokenize].getName, "hmac_detokenize"),
-      (children: Seq[Expression]) => HmacDetokenize(children(0), children(1)))
-  }
-
   /** F11: salted irreversible SHA-256 (`security/phi_redaction.py:10-15`). */
   def irreversibleHash(value: Column, salt: String): Column =
     sha2(concat(lit(salt), value), 256)
@@ -184,7 +169,8 @@ object Privacy {
       else acc
     }
 
-  /** Column API for the HMAC pair (requires [[register]] first). */
+  /** Column API for the HMAC pair (requires
+    * [[graft.GraftExtensions.setup]] first). */
   def tokenize(value: Column, key: String): Column =
     call_function("hmac_tokenize", value, lit(key))
   def detokenize(token: Column, key: String): Column =

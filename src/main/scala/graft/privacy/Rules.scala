@@ -1,6 +1,5 @@
 package graft.privacy
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -25,13 +24,4 @@ object EliminateHmacRoundTrip extends Rule[LogicalPlan] {
       case HmacDetokenize(HmacSha256Base64(v, k1), k2)
           if k1.semanticEquals(k2) && k1.deterministic && !k1.nullable => v
     }
-}
-
-object Rules {
-  /** Runtime registration for plain sessions (the spark.sql.extensions
-    * path injects via [[graft.GraftExtensions]]); idempotent. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(EliminateHmacRoundTrip))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ EliminateHmacRoundTrip
 }

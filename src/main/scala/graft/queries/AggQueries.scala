@@ -255,7 +255,7 @@ object AggQueries {
     // by a real heavy hitter, not vacuously.
     Q("a18_heavy_hitters",
       (s, d) => {
-        graft.functions.HeavyHittersAgg.register(s)
+        graft.GraftExtensions.setup(s)
         val key = when(col("o_orderkey") % 4 < 2, lit("whale"))
           .otherwise(col("o_custkey").cast("string"))
         val items = Tables.orders(s, d).select(key.as("item"))

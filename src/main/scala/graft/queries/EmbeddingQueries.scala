@@ -129,8 +129,7 @@ object EmbeddingQueries {
 
     Q("emb3_lsh_bucket_histogram",
       (s, d) => {
-        graft.functions.ArrayDotProduct.register(s)
-        graft.functions.HyperplaneBucket.register(s)
+        graft.GraftExtensions.setup(s)
         Tables.embeddings(s, d)
           .select(Ann.hyperplaneBucket(col("embedding"), planes = 8).as("bucket"))
           .groupBy("bucket").agg(count(lit(1)).as("n"))
@@ -350,7 +349,7 @@ object EmbeddingQueries {
     // no shuffle, no data-sized explode.
     Q("emb9_random_projection",
       (s, d) => {
-        graft.functions.ArrayDotProduct.register(s)
+        graft.GraftExtensions.setup(s)
         Tables.embeddings(s, d)
           .select(col("vec_id"),
             posexplode(array(Ann.randomProjection(col("embedding"), 8): _*))

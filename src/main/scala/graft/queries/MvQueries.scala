@@ -57,8 +57,8 @@ object MvQueries {
     val key = (s, d)
     val hit = mvCache.get(key)
     // hit path: create() already registered for THIS session (cache key);
-    // only the rule enablement is per-call cheap insurance
-    if (hit != null) { Mv.enable(s); return hit }
+    // only the extension setup is per-call cheap insurance
+    if (hit != null) { graft.GraftExtensions.setup(s); return hit }
     mvCache.keySet.removeIf(_._1.sparkContext.isStopped)
     val h = Integer.toHexString(d.hashCode)
     val basePath = s"$mvRoot/mv_base_$h"
@@ -75,7 +75,7 @@ object MvQueries {
   }
 
   private def register(s: SparkSession, basePath: String, mvPath: String): Unit = {
-    Mv.enable(s)
+    graft.GraftExtensions.setup(s)
     Mv.create(s, basePath, mvPath,
       groupCols = Seq("l_returnflag", "l_linestatus"),
       measures = Seq(
@@ -105,7 +105,7 @@ object MvQueries {
   private def incrementalBaseAndMv(s: SparkSession, d: String): (String, String) = {
     val key = (s, d)
     val hit = incrCache.get(key)
-    if (hit != null) { Mv.enable(s); return hit }
+    if (hit != null) { graft.GraftExtensions.setup(s); return hit }
     incrCache.keySet.removeIf(_._1.sparkContext.isStopped)
     val h = Integer.toHexString(d.hashCode)
     val basePath = s"$mvRoot/mv3_base_$h"
@@ -114,7 +114,7 @@ object MvQueries {
         "l_extendedprice")
     li.where(col("l_orderkey") % 4 =!= 0)
       .write.mode("overwrite").parquet(basePath)
-    Mv.enable(s)
+    graft.GraftExtensions.setup(s)
     val v1 = Mv.create(s, basePath, s"$mvRoot/mv3_agg_${h}_v1",
       groupCols = Seq("l_returnflag", "l_linestatus"),
       measures = Seq(
@@ -372,7 +372,7 @@ object MvQueries {
       : (String, DataFrame, String) = {
     val key = (s, d)
     val hit = vmvCache.get(key)
-    if (hit != null) { Mv.enable(s); return hit }
+    if (hit != null) { graft.GraftExtensions.setup(s); return hit }
     vmvCache.keySet.removeIf(_._1.sparkContext.isStopped)
     val h = Integer.toHexString(d.hashCode)
     val dir = s"$mvRoot/mv5_table_$h"
@@ -383,7 +383,7 @@ object MvQueries {
       col("o_totalprice").cast("double").as("o_totalprice"),
       col("o_orderkey").cast("long").as("o_orderkey"))
     graft.ops.Versioned.commit(o.filter(col("o_orderkey") % 2 === 0), dir)
-    Mv.enable(s)
+    graft.GraftExtensions.setup(s)
     val e1 = Mv.createVersioned(s, dir, s"$mvRoot/mv5_agg_${h}_v1",
       groupCols = Seq("o_orderstatus"),
       measures = Seq(("sum", "o_totalprice",
@@ -418,7 +418,7 @@ object MvQueries {
   private def distinctMvOrders(s: SparkSession, d: String): (String, String) = {
     val key = (s, d)
     val hit = dmvCache.get(key)
-    if (hit != null) { Mv.enable(s); return hit }
+    if (hit != null) { graft.GraftExtensions.setup(s); return hit }
     dmvCache.keySet.removeIf(_._1.sparkContext.isStopped)
     val h = Integer.toHexString(d.hashCode)
     val dir = s"$mvRoot/mv6_table_$h"
@@ -430,7 +430,7 @@ object MvQueries {
         col("o_totalprice").cast("double").as("o_totalprice"))
       graft.ops.Versioned.commit(o, dir)
     }
-    Mv.enable(s)
+    graft.GraftExtensions.setup(s)
     Mv.createVersioned(s, dir, mvPath,
       groupCols = Seq("o_orderstatus"),
       measures = Seq(("sum", "o_totalprice", Some(DecimalType(18, 2)))),

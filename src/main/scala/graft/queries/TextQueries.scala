@@ -1034,7 +1034,7 @@ object TextQueries {
     // The oracle recomputes the same counts with DuckDB list functions.
     Q("t15_repetition_ratio",
       (s, d) => {
-        graft.functions.ShingleStats.register(s)
+        graft.GraftExtensions.setup(s)
         val st = call_function("graft_shingle_stats", col("text"), lit(3))
         Tables.documents(s, d)
           .select(col("doc_id"), st.as("st"))
@@ -1507,7 +1507,7 @@ object TextQueries {
     // max_by/arg_max).
     Q("t49_ngram_generate",
       (s, d) => {
-        graft.functions.NgramGenerator.register(s)
+        graft.GraftExtensions.setup(s)
         Tables.documents(s, d)
           .selectExpr("doc_id", "graft_ngrams(text, 3)")
           .groupBy("doc_id")

@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.ArrayDotProduct
 
 /** Similarity search over embedding columns (`Array[Float]`): brute-force
   * cosine top-k as the exact baseline and an LSH-bucketed variant as the
@@ -48,9 +47,7 @@ object Ann {
     when(n1 > 0.0 && n2 > 0.0, d / n1 / n2).otherwise(lit(0.0))
 
   private def withRegistry(df: DataFrame): DataFrame = {
-    ArrayDotProduct.register(df.sparkSession)
-    graft.functions.HyperplaneBucket.register(df.sparkSession)
-    graft.functions.BandedHyperplanes.register(df.sparkSession)
+    graft.GraftExtensions.setup(df.sparkSession)
     df
   }
 

@@ -41,7 +41,7 @@ object Ivf {
   def knn(index: Index, idCol: String, vecCol: String, queryId: Long,
       k: Int, nProbe: Int): DataFrame = {
     val spark = index.assigned.sparkSession
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val qRow = index.assigned.filter(col(idCol) === queryId)
       .select(col(vecCol).cast("array<double>"), col("__cell")).head()
     // cast above makes the collected element type dtype-agnostic:
@@ -132,7 +132,7 @@ object Ivf {
       queryId: Long, k: Int, nProbe: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
     val spark = emb.sparkSession
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val idCol = index.idCol
     val qVec = emb.filter(col(idCol) === queryId)
       .select(transform(col(vecCol), x => x.cast("double"))).head()
@@ -177,7 +177,7 @@ object Ivf {
       k: Int, nProbe: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
     val spark = index.assigned.sparkSession
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val qRow = index.assigned.filter(col(idCol) === queryId)
       .select(col(vecCol).cast("array<double>"), col("__cell")).head()
     val qVec = qRow.getSeq[Double](0).toArray

@@ -81,7 +81,7 @@ object Kmeans {
   def lloydWithCodebook(emb0: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): (DataFrame, DataFrame) = {
     require(k > 0 && iters > 0, s"need k > 0 and iters > 0, got ($k, $iters)")
-    graft.functions.ArrayDotProduct.register(emb0.sparkSession)
+    graft.GraftExtensions.setup(emb0.sparkSession)
     val emb = emb0.select(col(idCol).as("__vid"),
       col(vecCol).cast("array<double>").as("__v"))
     // orderBy+limit, not `id < k`: sparse or non-zero-based id spaces

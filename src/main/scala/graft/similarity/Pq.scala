@@ -94,7 +94,7 @@ object Pq {
   def adcKnn(index: Index, emb: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    graft.functions.ArrayDotProduct.register(emb.sparkSession)
+    graft.GraftExtensions.setup(emb.sparkSession)
     val m = index.codebooks.length
     val qVec = emb.filter(col(idCol) === queryId)
       .select(transform(col(vecCol), x => x.cast("double"))).head()

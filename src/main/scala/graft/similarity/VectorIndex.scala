@@ -87,7 +87,7 @@ object VectorIndex {
     * Ivf discipline). */
   def knn(spark: SparkSession, dir: String, idCol: String, queryId: Long,
       k: Int, nProbe: Int): DataFrame = {
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val t = Versioned.read(spark, dir)
     val vecs = t.filter(col("kind") === "v")
     val qVec = vecs.filter(col(idCol) === queryId)
@@ -163,7 +163,7 @@ object VectorIndex {
     * yardstick for [[knn]]. */
   def knnExact(spark: SparkSession, dir: String, idCol: String,
       queryId: Long, k: Int): DataFrame = {
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val vecs = Versioned.read(spark, dir).filter(col("kind") === "v")
     val qVec = vecs.filter(col(idCol) === queryId)
       .select(col("vec")).head().getSeq[Double](0).toArray

@@ -82,7 +82,7 @@ object Corpus {
     * DuckDB). Rows with empty/NULL text are filtered to match the
     * relational form's emit-no-row behavior. */
   def charEntropyFused(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.CharEntropy.register(docs.sparkSession)
+    graft.GraftExtensions.setup(docs.sparkSession)
     docs.select(col(idCol),
         call_function("graft_char_entropy", col(textCol)).as("__e"))
       .select(col(idCol), col("__e.n_chars").as("n_chars"),

@@ -153,7 +153,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: graft_shingle_stats equals the composed Column form on random text") {
-    graft.functions.ShingleStats.register(spark)
+    graft.GraftExtensions.setup(spark)
     // whitespace-heavy generator: tokens, runs of spaces/tabs/newlines,
     // duplicated words — the inputs where tokenizer semantics diverge
     val wsText = Gen.listOf(Gen.oneOf(

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps the
   * test run fast; suites must not mutate global session state beyond
-  * function registration). */
+  * [[GraftExtensions.setup]]). */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -18,9 +18,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.privacy.Privacy.register(s)
-    graft.functions.ArrayDotProduct.register(s)
-    graft.functions.HyperplaneBucket.register(s)
+    GraftExtensions.setup(s)
     s
   }
 }

@@ -8,7 +8,7 @@ class BloomSpec extends SparkSpec {
   import spark.implicits._
 
   test("no false negatives: every dim key probes true, any partitioning") {
-    Bloom.register(spark)
+    graft.GraftExtensions.setup(spark)
     val keys = (1 to 5000).map(i => s"k$i")
     for (p <- Seq(1, 7)) {
       val bloom = keys.toDF("k").repartition(p)
@@ -21,7 +21,7 @@ class BloomSpec extends SparkSpec {
   }
 
   test("false-positive rate is near the sized expectation") {
-    Bloom.register(spark)
+    graft.GraftExtensions.setup(spark)
     // 5k keys in 2^16 bits at 5 hashes ≈ 13 bits/key → FP well under 5%
     val bloom = (1 to 5000).map(i => s"k$i").toDF("k")
       .agg(call_function("graft_bloom", col("k"), lit(1 << 16), lit(5))

@@ -8,7 +8,7 @@ class HeavyHittersSpec extends SparkSpec {
 
   private def candidates(items: Seq[String], k: Int,
       partitions: Int): Set[String] = {
-    HeavyHittersAgg.register(spark)
+    graft.GraftExtensions.setup(spark)
     items.toDF("item").repartition(partitions)
       .agg(call_function("graft_heavy_hitters", col("item"), lit(k)).as("c"))
       .collect()(0).getSeq[String](0).toSet
@@ -32,7 +32,7 @@ class HeavyHittersSpec extends SparkSpec {
   }
 
   test("null items are ignored, empty input yields an empty sketch") {
-    HeavyHittersAgg.register(spark)
+    graft.GraftExtensions.setup(spark)
     val withNulls = Seq(Some("a"), None, Some("a"), None).toDF("item")
     val c = withNulls
       .agg(call_function("graft_heavy_hitters", col("item"), lit(2)).as("c"))

@@ -6,7 +6,7 @@ import graft.SparkSpec
 class NgramGeneratorSpec extends SparkSpec {
   import spark.implicits._
 
-  NgramGenerator.register(spark)
+  graft.GraftExtensions.setup(spark)
 
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps"),

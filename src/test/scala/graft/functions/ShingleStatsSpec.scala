@@ -26,7 +26,7 @@ class ShingleStatsSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("expression equals the composed shingleArray/array_distinct form") {
-    ShingleStats.register(spark)
+    graft.GraftExtensions.setup(spark)
     val sh = shingleArray(col("text"), 3)
     val rows = docs.select(col("doc_id"),
         stats(3).as("st"),
@@ -43,7 +43,7 @@ class ShingleStatsSpec extends SparkSpec {
   }
 
   test("hand-checked values incl. null -> (0,0) and leading-tab token") {
-    ShingleStats.register(spark)
+    graft.GraftExtensions.setup(spark)
     val m = docs.select(col("doc_id"), stats(3).as("st")).collect()
       .map(r => r.getLong(0) -> {
         val st = r.getStruct(1); (st.getLong(0), st.getLong(1))
@@ -60,7 +60,7 @@ class ShingleStatsSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    ShingleStats.register(spark)
+    graft.GraftExtensions.setup(spark)
     val fromCodegen = docs.select(stats(3).as("st"))
       .collect().map(r => { val s = r.getStruct(0); (s.getLong(0), s.getLong(1)) }).toSeq
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
@@ -72,7 +72,7 @@ class ShingleStatsSpec extends SparkSpec {
   }
 
   test("n is validated and non-string input is rejected at analysis time") {
-    ShingleStats.register(spark)
+    graft.GraftExtensions.setup(spark)
     val err = intercept[Exception] {
       docs.select(call_function("graft_shingle_stats", col("doc_id"), lit(3)))
         .collect()

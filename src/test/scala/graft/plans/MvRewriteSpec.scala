@@ -33,7 +33,7 @@ class MvRewriteSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("tag", org.apache.spark.sql.types.StringType)))
     spark.createDataFrame(rows.asJava, schema)
       .write.mode("overwrite").parquet(basePath)
-    Mv.enable(spark)
+    graft.GraftExtensions.setup(spark)
     Mv.create(spark, basePath, mvPath,
       groupCols = Seq("g1", "g2"),
       measures = Seq(
@@ -155,7 +155,7 @@ class MvRewriteSpec extends SparkSpec {
       .write.mode("overwrite").parquet(avgBase)
     // byte-identical reference copy, never registered
     spark.read.parquet(avgBase).write.mode("overwrite").parquet(avgRef)
-    Mv.enable(spark)
+    graft.GraftExtensions.setup(spark)
     Mv.create(spark, avgBase, avgMv,
       groupCols = Seq("g"),
       measures = Seq(
@@ -204,7 +204,7 @@ class MvRewriteSpec extends SparkSpec {
       measures = Seq(("sum", "k", Some(DecimalType(18, 0))),
         ("count", "k", None)))
     assert(e1.baseVersion.contains(1))
-    Mv.enable(spark)
+    graft.GraftExtensions.setup(spark)
     def q() = spark.read.format("graft-versioned").option("path", tdir)
       .load().groupBy("g")
       .agg(sum(col("k").cast(DecimalType(18, 0))).as("s"),
@@ -263,7 +263,7 @@ class MvRewriteSpec extends SparkSpec {
     def build() = Mv.createVersioned(spark, tdir, mv, groupCols = Seq("g"),
       measures = Seq(("count", "k", None)))
     assert(build().baseVersion.contains(2))
-    Mv.enable(spark)
+    graft.GraftExtensions.setup(spark)
     def counted(df: DataFrame): (Boolean, Long) = {
       val q = df.groupBy("g").agg(count(col("k")).as("n"))
       (Mv.scanPaths(q).contains(Mv.canonical(mv)),
@@ -324,7 +324,7 @@ class MvRewriteSpec extends SparkSpec {
       (col("id") % 10).cast("double").as("amt"))
     val dir = s"$r2/tbl"
     graft.ops.Versioned.commit(o, dir)
-    Mv.enable(spark)
+    graft.GraftExtensions.setup(spark)
     val e = Mv.createVersioned(spark, dir, s"$r2/mv",
       groupCols = Seq("st"),
       measures = Seq(("sum", "amt", Some(DecimalType(18, 2)))),
@@ -391,7 +391,7 @@ class MvRewriteSpec extends SparkSpec {
       when(col("id") % 2 === 0, "A").otherwise("B").as("g"),
       (col("id") % 7).as("x"), col("id").cast("double").as("amt"))
     o.write.mode("overwrite").parquet(s"$r3/base")
-    Mv.enable(spark)
+    graft.GraftExtensions.setup(spark)
     // build WITHOUT distinctCols → artifact grain is (g) only
     Mv.create(spark, s"$r3/base", s"$r3/mv", groupCols = Seq("g"),
       measures = Seq(("sum", "amt", Some(DecimalType(18, 2)))))

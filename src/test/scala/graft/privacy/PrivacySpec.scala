@@ -7,7 +7,7 @@ class PrivacySpec extends SparkSpec {
   import spark.implicits._
 
   test("hmac tokenize/detokenize round-trips through the codegen path") {
-    Privacy.register(spark)
+    graft.GraftExtensions.setup(spark)
     val df = Seq("SUBJ0001", "SUBJ0002", "pii@example.com").toDF("v")
     val out = df
       .withColumn("tok", Privacy.tokenize(col("v"), "key-123"))
@@ -21,7 +21,7 @@ class PrivacySpec extends SparkSpec {
   }
 
   test("detokenize returns null on wrong key or garbage (no exception)") {
-    Privacy.register(spark)
+    graft.GraftExtensions.setup(spark)
     val df = Seq("SUBJ0001").toDF("v")
       .withColumn("tok", Privacy.tokenize(col("v"), "key-123"))
     val wrongKey = df.select(Privacy.detokenize(col("tok"), "other-key").as("r"))
@@ -88,7 +88,7 @@ class PrivacySpec extends SparkSpec {
     .select(col("doc_id"), col("lang").as("v"))
 
   test("optimizer rule eliminates hmac round-trip with equal literal keys") {
-    Rules.register(spark)
+    graft.GraftExtensions.setup(spark)
     val df = srcDocs
       .select(Privacy.detokenize(Privacy.tokenize(col("v"), "k1"), "k1").as("r"))
     val optimized = df.queryExecution.optimizedPlan.toString
@@ -97,7 +97,7 @@ class PrivacySpec extends SparkSpec {
   }
 
   test("optimizer rule does NOT fire for different or nullable keys") {
-    Rules.register(spark)
+    graft.GraftExtensions.setup(spark)
     // different keys: round-trip is not the identity (detokenize → null)
     val diff = srcDocs
       .select(Privacy.detokenize(Privacy.tokenize(col("v"), "k1"), "k2").as("r"))

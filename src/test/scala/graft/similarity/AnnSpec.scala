@@ -90,8 +90,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("fused graft_bands equals the composed per-plane graft_dot form") {
-    graft.functions.ArrayDotProduct.register(spark)
-    graft.functions.BandedHyperplanes.register(spark)
+    graft.GraftExtensions.setup(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val both = emb.select(
       Ann.bandedBuckets(col("embedding"), 3, 8).as("fused"),
@@ -100,7 +99,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("graft_bands buckets degenerate vectors at all-zero, like the SQL oracle") {
-    graft.functions.BandedHyperplanes.register(spark)
+    graft.GraftExtensions.setup(spark)
     val withNull = Seq(
       (1L, Array(1.0f, -2.0f, 3.0f)),
       (2L, null.asInstanceOf[Array[Float]]),
@@ -120,7 +119,7 @@ class AnnSpec extends SparkSpec {
     // (graft_dot over an empty array is 0.0 → every sign bit set; the
     // fused form follows the ORACLE) — pin the divergence like the
     // graft_hplanes test does, so the contract stays visible
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val composedEmpty = withNull.filter(col("id") === 3L)
       .select(Ann.bandedBucketsComposed(col("embedding"), 3, 8).as("b"))
       .collect()(0).getSeq[Long](0)
@@ -128,7 +127,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("graft_bands interpreted eval matches codegen") {
-    graft.functions.BandedHyperplanes.register(spark)
+    graft.GraftExtensions.setup(spark)
     val fromCodegen = vecs
       .select(Ann.bandedBuckets(col("embedding"), 3, 8).as("b"))
       .collect().map(_.getSeq[Long](0)).toSeq
@@ -197,7 +196,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("codegen'd graft_dot is bit-identical to the interpreted fold") {
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val both = emb.crossJoin(
       emb.filter(col("vec_id") === 0).select(col("embedding").as("q")))
@@ -207,7 +206,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("graft_dot rejects mismatched element types at analysis time") {
-    graft.functions.ArrayDotProduct.register(spark)
+    graft.GraftExtensions.setup(spark)
     val df = Seq((Array(1.0f), Array(1.0))).toDF("a", "b")
     intercept[org.apache.spark.sql.AnalysisException] {
       df.select(Ann.dot(col("a"), col("b"))).collect()
