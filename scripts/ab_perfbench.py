@@ -8,8 +8,10 @@ change, run alternately on N seeds.
 
 The base revision is exported with `git archive` into --work (default: a
 fresh temporary directory); --change is a revision exported the same way,
-or "." (the default) for the current checkout, run in place. Each side
-builds and runs `perfbench/run.py` from its own directory. For every seed
+or "." (the default) for the current checkout's working tree, copied into
+--work/change with its uncommitted edits and untracked, non-ignored files.
+Each side builds and runs `perfbench/run.py` from its own directory, so
+each builds its own classes and dumps its own class-data-sharing archive. For every seed
 the two sides run back to back, in alternating order (base first on even
 seed positions, change first on odd ones), and a host canary runs right
 before every run: a fixed CPU-bound loop in this process, whose time
@@ -26,6 +28,8 @@ shows how contended the machine was. The report gives:
 import argparse
 import hashlib
 import json
+import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -56,6 +60,21 @@ def export(rev, dest):
     archive = subprocess.run(["git", "-C", str(ROOT), "archive", rev],
                              check=True, capture_output=True).stdout
     subprocess.run(["tar", "-x", "-C", str(dest)], input=archive, check=True)
+    return dest
+
+
+def copy_worktree(dest):
+    """Copy of this checkout's working tree into `dest`: every tracked or
+    untracked-but-not-ignored file as it is on disk."""
+    listed = subprocess.run(
+        ["git", "-C", str(ROOT), "ls-files", "-z", "--cached", "--others",
+         "--exclude-standard"], check=True, capture_output=True).stdout
+    for name in filter(None, listed.split(b"\0")):
+        rel = os.fsdecode(name)
+        src = ROOT / rel
+        if src.is_file():  # a tracked file deleted in the working tree is skipped
+            (dest / rel).parent.mkdir(parents=True, exist_ok=True)
+            shutil.copy2(src, dest / rel)
     return dest
 
 
@@ -115,7 +134,7 @@ def quartile_spread(xs):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--base", required=True, help="base git revision")
-    ap.add_argument("--change", default=".", help='git revision, or "." for this checkout')
+    ap.add_argument("--change", default=".", help='git revision, or "." for this working tree')
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="comma-separated seeds")
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -126,7 +145,8 @@ def main():
 
     work = Path(a.work) if a.work else Path(tempfile.mkdtemp(prefix="ab_perfbench_"))
     sides = {"base": export(a.base, work / "base"),
-             "change": ROOT if a.change == "." else export(a.change, work / "change")}
+             "change": (copy_worktree(work / "change") if a.change == "."
+                        else export(a.change, work / "change"))}
     seeds = [int(s) for s in a.seeds.split(",")]
     runs = []
     for i, seed in enumerate(seeds):

@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   * only) so it survives the driver's bounded tail buffer — round 1's full
   * 94-query map made the line ~4 KB and the driver recorded
   * `parsed: null`. The complete per-query map (all reps) is written to
-  * bench_full.json in the working directory.
+  * bench_full.json in the working directory, with each query's settle
+  * indicator (`settle_slope_pct`, see [[settlePct]]) next to its median.
   *
   * A query that throws during any measured run is recorded as -1 seconds
   * and listed in "errors" — a fast failure must not read as a fast success.
@@ -168,7 +169,7 @@ object Bench {
       .toDouble
     val allSamples = canaries ++ results.flatMap(_._4)
     val cBaseAll = allSamples.min
-    // (name, best, spreadPct, allReps, ok, median, nDropped)
+    // (name, best, spreadPct, allReps, ok, median, nDropped, settlePct)
     val gated = results.map { case (name, secs, ok, brackets) =>
       val drifts = brackets.map(b => (b - cBaseAll) / cBaseAll * 100.0)
       val keptIdx = secs.indices.filter(i => drifts(i) <= dropPct)
@@ -188,7 +189,9 @@ object Bench {
       // KEPT reps — the canary gate already removed provably-contended
       // ones.
       val med = if (ok) kept.sorted.apply((kept.size - 1) / 2) else -1.0
-      (name, best, spreadPct, secs, ok, med, nDropped)
+      val keptAt = if (keptIdx.nonEmpty) keptIdx else secs.indices
+      val settle = settlePct(keptAt.map(i => (i.toDouble, secs(i))), med)
+      (name, best, spreadPct, secs, ok, med, nDropped, settle)
     }
     // drift vs the session-best canary (the steady cost this box is
     // capable of). Per-query drift = the BETTER of its two bracketing
@@ -208,16 +211,16 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val errors = gated.collect { case (k, _, _, _, false, _, _) => "\"" + k + "\"" }
+    val errors = gated.collect { case (k, _, _, _, false, _, _, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = gated.collect { case (_, v, _, _, true, _, _) => v }.sum
-    val medianTotal = gated.collect { case (_, _, _, _, true, m, _) => m }.sum
+    val total = gated.collect { case (_, v, _, _, true, _, _, _) => v }.sum
+    val medianTotal = gated.collect { case (_, _, _, _, true, m, _, _) => m }.sum
     val nRepsDropped = gated.map(_._7).sum
     // split the board by execution model so the streaming family's fixed
     // per-run cost reads separately from the batch engine number
     // (r9 VERDICT item 6): st* queries run real StreamingQuery executions
     val streamTotal =
-      gated.collect { case (k, v, _, _, true, _, _) if k.startsWith("st") => v }.sum
+      gated.collect { case (k, v, _, _, true, _, _, _) if k.startsWith("st") => v }.sum
     val batchTotal = total - streamTotal
     val headline = gated.filter(r => Headline.contains(r._1))
     val drifts = names.indices.map(qi => (names(qi), driftPct(qi)))
@@ -227,6 +230,7 @@ object Bench {
       s""""median_total_s":${fmt(medianTotal)},""" +
       s""""queries":${jmap(gated.map(r => (r._1, r._2)))},""" +
       s""""queries_median":${jmap(gated.map(r => (r._1, r._6)))},""" +
+      s""""settle_slope_pct":${jmap(gated.filter(_._5).map(r => (r._1, r._8)))},""" +
       s""""spread_pct":${jmap(gated.map(r => (r._1, r._3)))},""" +
       s""""n_reps_dropped":$nRepsDropped,""" +
       s""""reps_dropped":${gated.filter(_._7 > 0).map(r =>
@@ -253,7 +257,7 @@ object Bench {
     // headline per-query map + the scalar canary summary. queries_median
     // / spread_pct / canary_drift_pct maps now live ONLY in
     // bench_full.json — ~600 bytes printed, far inside the tail buffer.
-    val errNames = gated.collect { case (k, _, _, _, false, _, _) => k }
+    val errNames = gated.collect { case (k, _, _, _, false, _, _, _) => k }
     val errPreview = errNames.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${names.size},""" +
       s""""batch_s":${fmt(batchTotal)},"stream_s":${fmt(streamTotal)},""" +
@@ -273,5 +277,23 @@ object Bench {
       s""""canary_max_drift_pct":${fmt(canaryMaxDrift)},""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Settle indicator of one query's kept reps, given as (rep index,
+    * seconds): the least-squares slope of the LAST HALF of them, in
+    * percent of the median per rep. Near 0 the reps had settled; clearly
+    * negative means they were still getting faster, so the median is one
+    * point on a warm-up curve rather than a steady-state number. No rep
+    * is dropped for it; fewer than two reps in the half read 0. */
+  private[graft] def settlePct(reps: Seq[(Double, Double)], median: Double): Double = {
+    val tail = reps.drop(reps.size / 2)
+    val mx = tail.map(_._1).sum / tail.size
+    val sxx = tail.map { case (x, _) => (x - mx) * (x - mx) }.sum
+    if (tail.size < 2 || sxx == 0.0 || median <= 0.0) 0.0
+    else {
+      val my = tail.map(_._2).sum / tail.size
+      val sxy = tail.map { case (x, y) => (x - mx) * (y - my) }.sum
+      sxy / sxx / median * 100.0
+    }
   }
 }

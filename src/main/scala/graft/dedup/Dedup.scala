@@ -17,27 +17,15 @@ import graft.text.TextFunctions
   *    but produce O(df²) pairs; dropping them bounds the join output;
   *  - MinHash/LSH reduces pair generation from O(n²) to O(Σ bucket²), the
   *    standard scale path; band width trades recall vs. candidates.
+  *
+  * Intermediate frames the pair pipelines read from several subplans
+  * (shingle scans, signature tables) are materialized with an eager
+  * `localCheckpoint`: each is computed once when the pipeline is built,
+  * and Spark's ContextCleaner frees its blocks once the returned frame is
+  * garbage-collected. Nothing is left in the session's cache, so callers
+  * have nothing to release.
   */
 object Dedup {
-
-  /** Cached intermediate frames (shingle scans, signature tables) created
-    * by the pair pipelines. Caching is load-bearing — each cached frame
-    * feeds 2–3 downstream plans within one returned query — but the
-    * frames are module-internal, so callers could never unpersist them.
-    * Long-lived sessions invoking many pair pipelines should call
-    * [[unpersistCaches]] between batches; otherwise Spark's
-    * MEMORY_AND_DISK LRU eviction bounds the executor-storage footprint
-    * (correct, just later). Delegates to [[graft.ops.Caches]] (shared
-    * with the embedding pair pipelines). */
-  private[graft] def tracked(df: DataFrame): DataFrame =
-    graft.ops.Caches.tracked(df)
-
-  /** Release every cached intermediate the pair pipelines have created.
-    * Call BETWEEN batches: an unexecuted query built before the call
-    * will recompute (not re-cache) its shared subtrees when it finally
-    * runs — correct, but it pays the duplicated scan the cache existed
-    * to avoid. */
-  def unpersistCaches(): Unit = graft.ops.Caches.unpersistAll()
 
   /** Exact-duplicate groups: digest → group size and keeper (min id).
     * One shuffle on the md5 digest (reference A1-style hash group-by).
@@ -138,8 +126,8 @@ object Dedup {
     * this operator does not (measured: text pair family sub-linear at
     * the 4× rehearsal with r = 3 fixed, embedding family super-linear
     * until r auto-sizes).
-    * The shingle cache is reused by three downstream plans (df-cap,
-    * filter, sizes); Spark's MEMORY_AND_DISK eviction bounds it. */
+    * The shingle frame is materialized once and reused by three
+    * downstream plans (df-cap, filter, sizes). */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
       minJaccard: Double, maxShingleDf: Long = 1000L,
       lshPruneThreshold: Long = 100000L,
@@ -240,10 +228,10 @@ object Dedup {
     * shingle-keyed join for candidates, one for verification. */
   private def pairStatsPrefix(df: DataFrame, idCol: String, textCol: String,
       n: Int, maxShingleDf: Long, minContainment: Double): DataFrame = {
-    val sh = tracked(wordShingles(df, idCol, textCol, n).cache())
+    val sh = wordShingles(df, idCol, textCol, n).localCheckpoint()
     val rare = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxShingleDf)
-    val shF = tracked(sh.join(rare, "shingle").cache())
+    val shF = sh.join(rare, "shingle").localCheckpoint()
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
     val prefix = shF
       .withColumn("__rk", row_number().over(byDoc.orderBy(col("__df"),
@@ -267,9 +255,9 @@ object Dedup {
     // rejoin-the-explode verify was measured 4× slower than the exact
     // self-join at sf0.1 because candidates × doc-size rows dwarf the
     // co-shingle join it was supposed to avoid
-    val docSets = tracked(shF.groupBy(idCol)
+    val docSets = shF.groupBy(idCol)
       .agg(collect_list(col("shingle")).as("__set"),
-        count(lit(1)).as("sz")).cache())
+        count(lit(1)).as("sz")).localCheckpoint()
     val inter = cands
       .join(docSets.select(col(idCol).as("id1"), col("__set").as("__s1"),
         col("sz").as("sz1")), "id1")
@@ -289,7 +277,7 @@ object Dedup {
   private def pairStats(df: DataFrame, idCol: String, textCol: String, n: Int,
       maxShingleDf: Long, lshPruneThreshold: Long,
       docCount: Option[Long] = None): DataFrame = {
-    val sh = tracked(wordShingles(df, idCol, textCol, n).cache())
+    val sh = wordShingles(df, idCol, textCol, n).localCheckpoint()
     val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxShingleDf)
       .select("shingle")
@@ -307,7 +295,7 @@ object Dedup {
           docCount.getOrElse(df.count()) <= lshPruneThreshold)
         a.join(b, Seq("shingle")).filter(col("id1") < col("id2"))
       else {
-        // signatures derive from the already-cached UNCAPPED shingle scan
+        // signatures derive from the already-materialized UNCAPPED shingle scan
         // (t7 semantics: banding sees every shingle, only pairing is capped)
         val cands = bandedCandidates(
           signaturesFromShingles(sh, idCol, k = 12), idCol, rowsPerBand = 3)
@@ -329,7 +317,7 @@ object Dedup {
 
   /** Signatures from an existing (id, shingle) frame — lets callers that
     * also need the shingles for exact verification derive both from ONE
-    * (cached) shingle scan instead of re-tokenizing the corpus. Uses the
+    * (materialized) shingle scan instead of re-tokenizing the corpus. Uses the
     * [[graft.functions.MinHashAgg]] custom aggregate: all k slots fold in
     * one pass with a k-long buffer per group, so no k-rows-per-shingle
     * blowup is materialized and the shuffle carries one buffer per doc
@@ -409,10 +397,10 @@ object Dedup {
   def crossCorpusPairs(batch: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, n: Int, k: Int, rowsPerBand: Int,
       minJaccard: Double): DataFrame = {
-    // one cached shingle scan per side feeds both its signatures and the
+    // one materialized shingle scan per side feeds both its signatures and the
     // exact-verification joins
-    val shB = tracked(wordShingles(batch, idCol, textCol, n).cache())
-    val shC = tracked(wordShingles(corpus, idCol, textCol, n).cache())
+    val shB = wordShingles(batch, idCol, textCol, n).localCheckpoint()
+    val shC = wordShingles(corpus, idCol, textCol, n).localCheckpoint()
     val bB = bandBuckets(signaturesFromShingles(shB, idCol, k), idCol, rowsPerBand)
       .select(col(idCol).as("batch_id"), col("band"), col("band_hash"))
     val bC = bandBuckets(signaturesFromShingles(shC, idCol, k), idCol, rowsPerBand)
@@ -440,11 +428,11 @@ object Dedup {
   /** LSH candidate pairs from MinHash signatures: split the k signature
     * slots into bands of `rowsPerBand`; docs sharing any band bucket are
     * candidates, then the estimated Jaccard (fraction of agreeing slots)
-    * is computed and filtered. The signature cache feeds both the banding
-    * and the estimate join. */
+    * is computed and filtered. The materialized signatures feed both the
+    * banding and the estimate join. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, rowsPerBand: Int, minEstJaccard: Double): DataFrame = {
-    val sigs = tracked(minhashSignatures(df, idCol, textCol, n, k).cache())
+    val sigs = minhashSignatures(df, idCol, textCol, n, k).localCheckpoint()
     val cands = bandedCandidates(sigs, idCol, rowsPerBand)
     val s1 = sigs.select(col(idCol).as("id1"), col("j"), col("mh").as("mh1"))
     val s2 = sigs.select(col(idCol).as("id2"), col("j"), col("mh").as("mh2"))
@@ -465,9 +453,9 @@ object Dedup {
       n: Int, k: Int, rowsPerBand: Int, minJaccard: Double): DataFrame = {
     // banding only — the exact verification below supersedes the slot
     // estimate, so computing est_jaccard for every candidate would be a
-    // wasted k-rows-per-pair shuffle+aggregate stage. One cached shingle
-    // scan feeds both the signatures and the verification joins.
-    val sh = tracked(wordShingles(df, idCol, textCol, n).cache())
+    // wasted k-rows-per-pair shuffle+aggregate stage. One materialized
+    // shingle scan feeds both the signatures and the verification joins.
+    val sh = wordShingles(df, idCol, textCol, n).localCheckpoint()
     val cands = bandedCandidates(
       signaturesFromShingles(sh, idCol, k), idCol, rowsPerBand)
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))

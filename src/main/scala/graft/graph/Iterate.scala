@@ -21,7 +21,7 @@ import org.apache.spark.sql.DataFrame
   *
   * At 100 TB the state frames here are node tables (≪ edges), so the
   * per-round localCheckpoint stores O(|V|) — never the edge list, which
-  * each algorithm persists once outside the loop.
+  * each algorithm materializes once outside the loop.
   */
 private[graft] object Iterate {
 

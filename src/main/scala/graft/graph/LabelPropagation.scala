@@ -43,34 +43,31 @@ object LabelPropagation {
       : (DataFrame => DataFrame, DataFrame) = {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val nodes = graft.ops.Caches.tracked(
-      e0.select(col("src").as("node"))
-        .union(e0.select(col("dst").as("node"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val nodes = e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct()
+      .localCheckpoint()
     val n = nodes.count()
     // Per-round join strategy + iterated-side partitioning picked from
     // the counts the setup already materializes (r16 — the PageRank g5
     // treatment, guide §2/§3.1): the label frame is two BIGINTs per
     // node, so while it fits a broadcast every round is a broadcast-hash
-    // join over the cached edge list — no per-round sort or edge
-    // exchange; and the cached edge list is hash-repartitioned on `src`
+    // join over the materialized edge list — no per-round sort or edge
+    // exchange; and that edge list is hash-repartitioned on `src`
     // to ~1M rows/partition so a tiny graph's rounds do not pay 32
     // near-empty task launches each.
     val bcast = n <= PageRank.BroadcastNodeLimit
     // self-loops carry each node's own label through the round's MIN.
-    // The raw union is deliberately NOT persisted (review r16): only the
-    // repartitioned frame is the iteration's working set, so caching the
-    // raw copy too would pin 2× the edge list for the whole run — the
+    // The raw union is deliberately NOT materialized (review r16): only
+    // the repartitioned frame is the iteration's working set, so keeping
+    // the raw copy too would pin 2× the edge list for the whole run — the
     // sizing count below pays one extra narrow pass over the input
-    // instead (nodes rides its own cache).
+    // instead (nodes is already materialized).
     val eRaw =
       e0.union(nodes.select(col("node").as("src"), col("node").as("dst")))
     val eParts = math.max(1L, math.min(
       edges.sparkSession.sparkContext.defaultParallelism.toLong,
       eRaw.count() / PageRank.EdgesPerPartition + 1L)).toInt
-    val e = graft.ops.Caches.tracked(
-      eRaw.repartition(eParts, col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val e = eRaw.repartition(eParts, col("src")).localCheckpoint()
     val step = (labels: DataFrame) => {
       val l = labels.withColumnRenamed("node", "src")
       e.join(if (bcast) broadcast(l) else l, "src")

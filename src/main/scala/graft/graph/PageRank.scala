@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * Scale shape per iteration (the classic one): one equi-join of the
   * edge list against the current rank table (both keyed on the source
   * node) and ONE shuffle — the contribution aggregation on the
-  * destination node. The edge+degree table is built once and persisted;
-  * the rank frame is eagerly localCheckpointed per iteration so plan
-  * depth stays constant in the iteration count (the t33 lineage rule).
+  * destination node. The edge+degree table is built once and
+  * localCheckpointed; the rank frame is eagerly localCheckpointed per
+  * iteration so plan depth stays constant in the iteration count (the
+  * t33 lineage rule).
   * At 100 TB the same plan holds with the edge list bucketed by source
   * so the per-iteration join is co-partitioned.
   *
@@ -39,8 +40,8 @@ object PageRank {
     * Graphs beyond it keep the shuffle join. */
   val BroadcastNodeLimit: Long = 1L << 20
 
-  /** Edge rows per cached partition of the iterated edge+degree table —
-    * sized so one per-round task does ~1M hash probes (tens of ms of
+  /** Edge rows per materialized partition of the iterated edge+degree
+    * table — sized so one per-round task does ~1M hash probes (tens of ms of
     * real work, well above task-launch overhead) while 100 TB-scale
     * edge lists still fan out to the parallelism cap. */
   val EdgesPerPartition: Long = 1L << 20
@@ -51,12 +52,13 @@ object PageRank {
     * referencing the rank frame exactly once — the [[Iterate]] rule). */
   private def prepared(edges: DataFrame, srcCol: String, dstCol: String)
       : (DataFrame => DataFrame, DataFrame) = {
-    val e = graft.ops.Caches.tracked(
-      edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // the raw edge list feeds three jobs here (the count, the edge+degree
+    // table and the node set), so it is materialized once
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .localCheckpoint()
     // Scale-adaptive partitioning for the ITERATED side (guide §2): the
-    // persisted edge+degree table is scanned once per round, so its
+    // materialized edge+degree table is scanned once per round, so its
     // partition count is a per-round task-count multiplier — inheriting
     // spark.sql.shuffle.partitions left 32 near-empty cached partitions
     // at sf0.1 and the 10-round g5 spent more wall-clock on task launch
@@ -68,39 +70,30 @@ object PageRank {
     val edParts = math.max(1L, math.min(
       edges.sparkSession.sparkContext.defaultParallelism.toLong,
       eCnt / PageRank.EdgesPerPartition + 1L)).toInt
-    // degree folded INTO the persisted edge list ONCE — each round is
+    // degree folded INTO the materialized edge list ONCE — each round is
     // then a single edge⋈rank join instead of re-paying the e⋈deg join
     // every iteration (measured ~2× on the 10-round g5 row); the window
     // avoids a second scan-and-shuffle of e to build a separate deg
     // table, and the explicit hash repartition on `src` IS the window's
     // required partitioning, so the window adds no second exchange
-    val ed = graft.ops.Caches.tracked(
-      e.repartition(edParts, col("src"))
-        .withColumn("deg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("src")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // nodes persisted: consumed by the count here AND the initial rank
-    // frame at round 1 — and keeping it cached lets the raw edge cache
-    // below be dropped without a recompute
-    val nodes = graft.ops.Caches.tracked(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // `ed` and `nodes` are read by every round of the returned lazy
+    // chain, so both are materialized here; `e` is then unreachable once
+    // this method returns, and its blocks go with it
+    val ed = e.repartition(edParts, col("src"))
+      .withColumn("deg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("src")))
+      .localCheckpoint()
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint()
     val n = nodes.count()
     require(n > 0, "empty graph")
-    // materialize the per-round frame while `e` is still cached, then
-    // drop the raw cache — it is dead weight for the whole iteration
-    // (review r16: two pinned copies of the edge list put eviction
-    // pressure exactly at the scale the partition sizing targets); the
-    // eager count is work round 1 would have paid anyway
-    ed.count()
-    e.unpersist(false)
     val teleportNano = 150000000L / n // (0.15 × 10⁹) ÷ N, floor — exact
     // Join strategy is picked HERE, from the node count the setup already
     // paid for (guide §3.1): the rank frame is O(|V|) slim (two BIGINTs),
     // so while it fits a broadcast, hinting it makes every round a
-    // broadcast-hash join — the cached edge list is scanned in place,
-    // never re-sorted or re-exchanged. Without the hint Catalyst
+    // broadcast-hash join — the materialized edge list is scanned in
+    // place, never re-sorted or re-exchanged. Without the hint Catalyst
     // estimates the post-aggregation rank frame above the auto-broadcast
     // threshold and plans a per-round SortMergeJoin: measured 7.5 s for
     // the 10-round g5 at local[32]/sf0.1 vs 3.6 s once AQE converted the

@@ -69,22 +69,21 @@ object ShortestPaths {
     // still carry its own (node, 0) row through every round, or the
     // documented contract (the source itself is reachable at 0 edges)
     // silently drops it at the first join
-    val nodes = graft.ops.Caches.tracked(
-      e0.select(col("src").as("node"))
-        .union(e0.select(col("dst").as("node")))
-        .union(srcNodes).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val nodes = e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node")))
+      .union(srcNodes).distinct()
+      .localCheckpoint()
     val n = nodes.count()
     // Per-round join strategy + iterated-side partitioning from the
     // setup's own counts (r16 — the PageRank g5 treatment, guide
     // §2/§3.1). The frontier is SPARSE (≤ nodes rows of two BIGINTs),
-    // so the node count bounds the broadcast safely; the cached edge
-    // list is hash-repartitioned on `src` to ~1M rows/partition so
+    // so the node count bounds the broadcast safely; the materialized
+    // edge list is hash-repartitioned on `src` to ~1M rows/partition so
     // small graphs' rounds stop paying near-empty task launches.
     val bcast = n <= PageRank.BroadcastNodeLimit
     // weight-0 self-loops: a reached node relaxes itself each round.
-    // The raw union is deliberately NOT persisted (review r16): only the
-    // repartitioned frame is the iteration's working set — caching the
+    // The raw union is deliberately NOT materialized (review r16): only
+    // the repartitioned frame is the iteration's working set — keeping the
     // raw copy too would pin 2× the edge list; the sizing count pays one
     // extra narrow pass over the input instead.
     val eRaw =
@@ -93,9 +92,7 @@ object ShortestPaths {
     val eParts = math.max(1L, math.min(
       edges.sparkSession.sparkContext.defaultParallelism.toLong,
       eRaw.count() / PageRank.EdgesPerPartition + 1L)).toInt
-    val e = graft.ops.Caches.tracked(
-      eRaw.repartition(eParts, col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val e = eRaw.repartition(eParts, col("src")).localCheckpoint()
     val step = (dist: DataFrame) => {
       val d = dist.withColumnRenamed("node", "src")
       e.join(if (bcast) broadcast(d) else d, "src")

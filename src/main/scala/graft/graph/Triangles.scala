@@ -26,9 +26,9 @@ object Triangles {
     * (src < dst, distinct). Returns (node, tri) for every node in at
     * least one triangle. */
   def perNode(oriented: DataFrame): DataFrame = {
-    val e = graft.ops.Caches.tracked(
-      oriented.select(col("src").cast("long"), col("dst").cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // the edge list is read three times by the returned plan
+    val e = oriented.select(col("src").cast("long"), col("dst").cast("long"))
+      .localCheckpoint()
     val tri = e.as("ab")
       .join(e.as("bc"), col("ab.dst") === col("bc.src"))
       .join(e.as("ac"),

@@ -53,11 +53,10 @@ object Medallion {
       .schema(withCorrupt)
       .csv(path)
       // corrupt-record column contract: Spark requires materializing the
-      // raw frame before filtering on _corrupt_record. The cache is on
-      // the RAW plan (not the returned filtered views), so a long-lived
-      // ingest loop should spark.catalog.clearCache() between batches —
-      // MEMORY_AND_DISK eviction bounds it otherwise.
-      .cache()
+      // raw frame before filtering on _corrupt_record. The eager
+      // localCheckpoint parses every column once; its blocks are freed
+      // with the returned frames, and nothing enters the session's cache.
+      .localCheckpoint()
     (raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
       raw.filter(col("_corrupt_record").isNotNull).select(col("_corrupt_record")))
   }

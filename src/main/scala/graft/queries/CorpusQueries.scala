@@ -683,16 +683,15 @@ object CorpusQueries {
         def sh(parity: Int) = graft.dedup.Dedup.wordShingles(
             docs.filter(col("doc_id") % 2 === parity), "doc_id", "text", 3)
           .select("shingle").distinct()
-        def hashes(parity: Int) = graft.ops.Caches.tracked(
-          sh(parity)
-            .select(graft.text.TextFunctions.hash60(col("shingle"), seed)
-              .as("h"))
-            .distinct().persist())
+        // each hash set and sketch is read by several jobs below
+        def hashes(parity: Int) = sh(parity)
+          .select(graft.text.TextFunctions.hash60(col("shingle"), seed).as("h"))
+          .distinct().localCheckpoint()
         val (ha, hb) = (hashes(1), hashes(0))
-        val ska = graft.ops.Caches.tracked(
-          graft.stats.Kmv.sketch(sh(1), col("shingle"), k, seed).persist())
-        val skb = graft.ops.Caches.tracked(
-          graft.stats.Kmv.sketch(sh(0), col("shingle"), k, seed).persist())
+        val ska = graft.stats.Kmv.sketch(sh(1), col("shingle"), k, seed)
+          .localCheckpoint()
+        val skb = graft.stats.Kmv.sketch(sh(0), col("shingle"), k, seed)
+          .localCheckpoint()
         val (kthA, kthB) =
           (graft.stats.Kmv.kthMin(ska), graft.stats.Kmv.kthMin(skb))
         val (sku, both) = graft.stats.Kmv.unionIntersect(ska, skb, k)

@@ -311,14 +311,13 @@ object EmbeddingQueries {
           graft.similarity.Ivf.knn(idx, "vec_id", "embedding",
             queryId = 0L, k = 10, nProbe = nProbe).select(col("vec_id"))
         // the exact top-10 ground truth feeds three gate joins and the
-        // probe-8 result feeds two — cache both 10-row frames so the
-        // corpus scans behind them run once per execution, not per gate
-        val exact = graft.ops.Caches.tracked(
-          graft.similarity.Ann.knnBruteForce(emb, "vec_id",
-              "embedding", queryId = 0L, k = 10)
-            .select(col("vec_id"), round(col("score"), 6).as("score"))
-            .cache())
-        val ivf8 = graft.ops.Caches.tracked(ivfIds(IvfNProbe).cache())
+        // probe-8 result feeds two — both 10-row frames are materialized
+        // so the corpus scans behind them run once, not once per gate
+        val exact = graft.similarity.Ann.knnBruteForce(emb, "vec_id",
+            "embedding", queryId = 0L, k = 10)
+          .select(col("vec_id"), round(col("score"), 6).as("score"))
+          .localCheckpoint()
+        val ivf8 = ivfIds(IvfNProbe).localCheckpoint()
         val ivfAll = graft.similarity.Ivf.knn(idx, "vec_id", "embedding",
             queryId = 0L, k = 10, nProbe = 16)
           .select(col("vec_id"), round(col("score"), 6).as("score"))
@@ -549,13 +548,11 @@ object EmbeddingQueries {
         def adc(nProbe: Int) =
           graft.similarity.Ivf.adcKnn(idx, "vec_id", "embedding",
             queryId = 0L, k = k, nProbe = nProbe, rerank = 10 * k)
-        val exact = graft.ops.Caches.tracked(
-          graft.similarity.Ann.knnBruteForce(emb, "vec_id",
-              "embedding", queryId = 0L, k = k)
-            .select(col("vec_id"), round(col("score"), 6).as("score"))
-            .cache())
-        val adc8 = graft.ops.Caches.tracked(
-          adc(IvfNProbe).select(col("vec_id")).cache())
+        val exact = graft.similarity.Ann.knnBruteForce(emb, "vec_id",
+            "embedding", queryId = 0L, k = k)
+          .select(col("vec_id"), round(col("score"), 6).as("score"))
+          .localCheckpoint()
+        val adc8 = adc(IvfNProbe).select(col("vec_id")).localCheckpoint()
         val adcAll = adc(16)
           .select(col("vec_id"), round(col("score"), 6).as("score"))
         val h8 = adc8.join(exact.select("vec_id"), "vec_id")
@@ -656,9 +653,9 @@ object EmbeddingQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val idx = pqIndex(s, d)
-        val exact = graft.ops.Caches.tracked(
+        val exact =
           Ann.knnBruteForce(emb, "vec_id", "embedding", queryId = 0L, k = 10)
-            .select("vec_id").cache())
+            .select("vec_id").localCheckpoint()
         def hits(rerank: Int, name: String) = graft.similarity.Pq
           .adcKnn(idx, emb, "vec_id", "embedding", queryId = 0L, k = 10,
             rerank = rerank)
@@ -794,10 +791,10 @@ object EmbeddingQueries {
         def ids(nProbe: Int, rerank: Int) = graft.similarity.Ivf
           .pqAdcKnn(idx, emb, "embedding", queryId = 0L, k = k,
             nProbe = nProbe, rerank = rerank)
-        val exact = graft.ops.Caches.tracked(
+        val exact =
           Ann.knnBruteForce(emb, "vec_id", "embedding", queryId = 0L, k = k)
             .select(col("vec_id"), round(col("score"), 6).as("score"))
-            .cache())
+            .localCheckpoint()
         val h8 = ids(IvfNProbe, 100).select("vec_id")
           .join(exact.select("vec_id"), "vec_id")
           .agg(count(lit(1)).as("h8"))

@@ -123,7 +123,7 @@ object GraphQueries {
     // hash-fail. Symmetrized edges mean no dangling mass; per iteration
     // the plan is one edge⋈rank equi-join + one shuffle on the
     // destination (the canonical distributed-PageRank shape, edge list
-    // persisted, ranks localCheckpointed).
+    // and ranks localCheckpointed).
     Q("g1_pagerank",
       (s, d) => {
         val edges0 = Tables.orders(s, d)

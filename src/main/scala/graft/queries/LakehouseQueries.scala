@@ -1194,12 +1194,12 @@ object LakehouseQueries {
     Q("s30_versioned_cdc_apply",
       (s, d) => {
         val dir = mergedOrders(s, d)
-        val rebuilt = graft.ops.Caches.tracked(
-          graft.ops.Versioned.applyChanges(
+        // read by both exceptAll counts and the returned aggregate
+        val rebuilt = graft.ops.Versioned.applyChanges(
             graft.ops.Versioned.read(s, dir, 1),
             graft.ops.Versioned.changes(s, dir, 1, 2, "o_orderkey"),
             "o_orderkey")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .localCheckpoint()
         val snap = graft.ops.Versioned.read(s, dir, 2)
         val sym = rebuilt.exceptAll(snap).count() +
           snap.exceptAll(rebuilt).count()
@@ -1669,19 +1669,18 @@ object LakehouseQueries {
           StructField("_corrupt", StringType)))
         // CSV column pruning parses ONLY referenced columns, and an
         // unparsed column can never flag malformation — the documented
-        // workaround is to materialize the full schema once (persist)
-        // before touching the corrupt column (8 rows here; tracked so
-        // the bench GC reclaims it)
-        val parsed = graft.ops.Caches.tracked(s.read.schema(schema)
+        // workaround is to materialize the full schema once (an eager
+        // localCheckpoint) before touching the corrupt column; the
+        // DROPMALFORMED count needs the same, or it parses no column and
+        // drops nothing
+        val parsed = s.read.schema(schema)
           .option("header", "true").option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_corrupt")
-          .csv(p.toString).persist())
-        parsed.count()
-        val droppedDf = graft.ops.Caches.tracked(s.read
+          .csv(p.toString).localCheckpoint()
+        val dropped = s.read
           .schema(StructType(schema.fields.filter(_.name != "_corrupt")))
           .option("header", "true").option("mode", "DROPMALFORMED")
-          .csv(p.toString).persist())
-        val dropped = droppedDf.count()
+          .csv(p.toString).localCheckpoint().count()
         parsed.agg(
           sum(when(col("_corrupt").isNull, 1L).otherwise(0L)).as("n_good"),
           sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L))

@@ -285,16 +285,16 @@ object PrivacyMiscQueries {
             col("timescale"), col("duration"))
         // parsed metadata feeds four downstream plans (n_media, the
         // eligibility filter, mixToTarget's internal counts, the kept
-        // filter) — cache it so the synth+parse mapPartitions pass runs
-        // once, not once per consumer (tracked like Dedup's shingle
-        // frames, releasable via Caches.unpersistAll)
-        val meta = graft.ops.Caches.tracked(img.join(vid, "media_id")
+        // filter) — materialized with an eager localCheckpoint so the
+        // synth+parse mapPartitions pass runs once, not once per
+        // consumer (the Dedup shingle-frame convention)
+        val meta = img.join(vid, "media_id")
           .select(col("media_id"),
             when(col("img_format") =!= "unknown", col("img_format"))
               .when(col("vid_format") =!= "unknown", col("vid_format"))
               .otherwise(lit("unknown")).as("format"),
             col("width"), col("height"), col("timescale"), col("duration"))
-          .cache())
+          .localCheckpoint()
         val eligible = meta.filter(
           (col("format").isin("png", "gif", "bmp", "jpeg") &&
             col("width") * col("height") >= 10000L) ||

@@ -390,13 +390,14 @@ object TpchQueries {
     Q("q15_top_supplier",
       (s, d) => {
         // rev feeds TWO consumers (its own MAX and the equality join) —
-        // persisted so the lineitem fact is scanned and aggregated ONCE;
-        // the cached frame is |suppliers| rows, not fact-sized
-        val rev = graft.ops.Caches.tracked(Tables.lineitem(s, d)
+        // materialized so the lineitem fact is scanned and aggregated
+        // ONCE (the two branches infer different filters, so AQE does not
+        // reuse the exchange); the frame is |suppliers| rows
+        val rev = Tables.lineitem(s, d)
           .groupBy(col("l_suppkey").as("s_key"))
           .agg(sum(expr("l_extendedprice * (1 - l_discount)")
             .cast("decimal(18,4)")).as("rev_dec"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .localCheckpoint()
         val top = rev.agg(max(col("rev_dec")).as("max_rev"))
         rev.join(broadcast(top), col("rev_dec") === col("max_rev"))
           .join(broadcast(Tables.supplier(s, d).select("s_suppkey", "s_name")),
@@ -472,11 +473,13 @@ object TpchQueries {
           .select("p_partkey", "p_name")
         val ps = Tables.lineitem(s, d)
           .select("l_partkey", "l_suppkey").distinct()
-        val cand = graft.ops.Caches.tracked(
-          ps.join(broadcast(parts), col("l_partkey") === col("p_partkey"))
-            .join(broadcast(eur), col("l_suppkey") === col("s_suppkey"))
-            .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        // cand feeds the per-part minimum and the join back onto it; both
+        // branches share the lineitem distinct's exchange (AQE exchange
+        // reuse), so only the dim-sized broadcast joins run twice
+        val cand = ps
+          .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
+          .join(broadcast(eur), col("l_suppkey") === col("s_suppkey"))
+          .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name")
         val minBal = cand.groupBy("p_partkey")
           .agg(min(col("s_acctbal")).as("min_bal"))
         cand.join(broadcast(minBal), "p_partkey")
@@ -604,16 +607,16 @@ object TpchQueries {
     // Q11: important parts — per-part revenue above a fraction of the
     // total: GROUP BY + HAVING against a SCALAR SUBQUERY over the same
     // aggregate. The per-part frame feeds two consumers (the threshold
-    // and the filter) → computed once and persisted; sums stay DECIMAL
+    // and the filter) → computed once and materialized; sums stay DECIMAL
     // until the single final double cast on BOTH sides of the compare,
     // so the cut can never flip on aggregation order.
     Q("q11_important_parts",
       (s, d) => {
-        val perPart = graft.ops.Caches.tracked(Tables.lineitem(s, d)
+        val perPart = Tables.lineitem(s, d)
           .groupBy(col("l_partkey"))
           .agg(sum(expr("l_extendedprice * (1 - l_discount)")
             .cast("decimal(18,4)")).as("v"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .localCheckpoint()
         val thr = perPart.agg(sum(col("v")).as("t"))
           .select((col("t").cast("double") * 0.0001).as("thr"))
         perPart.crossJoin(broadcast(thr))
@@ -806,11 +809,12 @@ object TpchQueries {
         val lines = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_suppkey"),
             col("l_shipdate").cast("date").as("ship"))
-        val late = graft.ops.Caches.tracked(lines
+        // late feeds the main join and the late-supplier sets
+        val late = lines
           .join(ordF, col("l_orderkey") === col("o_orderkey"))
           .filter(col("ship") > date_add(col("odate"), 90))
           .select("l_orderkey", "l_suppkey")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .localCheckpoint()
         val orderSupp = lines.select(col("l_orderkey").as("ok2"),
           col("l_suppkey").as("sk2")).distinct()
         val lateSupp = late.select(col("l_orderkey").as("ok3"),

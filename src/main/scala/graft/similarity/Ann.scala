@@ -173,12 +173,12 @@ object Ann {
       planesPerBand: Int = AutoPlanes, bands: Int = 8,
       docCount: Option[Long] = None): DataFrame = {
     val emb = withRegistry(emb0)
-    // two consumers (both sides of the pair join) — cache, or the
+    // two consumers (both sides of the pair join) — materialize, or the
     // dims×64 projection multiply-adds compute twice per row (the
     // bandedCandidatePairs convention; Spark does not dedupe subplans)
-    val proj = graft.ops.Caches.tracked(emb.select(col(idCol).as("__id"),
-      array(randomProjection(col(vecCol), dims): _*).as("__proj"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val proj = emb.select(col(idCol).as("__id"),
+        array(randomProjection(col(vecCol), dims): _*).as("__proj"))
+      .localCheckpoint()
     // candidate enumeration auto-selects like Dedup.jaccardPairs: the
     // all-pairs join (exact prefilter recall) while the corpus is at or
     // below `maxExactDocs`, OR-amplified banded LSH above it (pairs form
@@ -290,13 +290,13 @@ object Ann {
   private def bandedCandidatePairs(emb: DataFrame, idCol: String,
       vecCol: String, planesPerBand: Int, bands: Int): DataFrame = {
     // the slim (id, band, bucket) table feeds BOTH sides of the self-join;
-    // Spark does not dedupe common subplans, so cache it once (same
-    // convention as Dedup's shingle frames — tracked, releasable via
-    // Caches.unpersistAll / Dedup.unpersistCaches)
-    val bk = graft.ops.Caches.tracked(
-      emb.select(col(idCol).as("__id"),
+    // Spark does not dedupe common subplans, so it is materialized once
+    // with an eager localCheckpoint (same convention as Dedup's shingle
+    // frames); its blocks go when the returned pairs frame is collected
+    val bk = emb.select(col(idCol).as("__id"),
         posexplode(bandedBuckets(col(vecCol), planesPerBand, bands))
-          .as(Seq("__band", "__bkt"))).cache())
+          .as(Seq("__band", "__bkt")))
+      .localCheckpoint()
     bk.select(col("__id").as("id1"), col("__band"), col("__bkt"))
       .join(bk.select(col("__id").as("id2"), col("__band"), col("__bkt")),
         Seq("__band", "__bkt"))
@@ -553,13 +553,13 @@ object Ann {
     val assign = nearestCentroid(emb, idCol, vecCol, labelCol)
       .select(col("__vid"), col("assigned").as("cluster"))
     // three consumers (both pair-join sides + the per-cluster census)
-    // and Spark does not dedupe common subplans — without the cache the
-    // centroid crossJoin + argmax pipeline executes three times
-    val v = graft.ops.Caches.tracked(emb
+    // and Spark does not dedupe common subplans — unless materialized,
+    // the centroid crossJoin + argmax pipeline executes three times
+    val v = emb
       .select(col(idCol).as("__vid"), col(vecCol).cast("array<double>").as("__v"))
       .join(assign, "__vid")
       .withColumn("__n", norm(col("__v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .localCheckpoint()
     val a = v.select(col("cluster"), col("__vid").as("__id1"),
       col("__v").as("__v1"), col("__n").as("__n1"))
     val b = v.select(col("cluster"), col("__vid").as("__id2"),
@@ -668,18 +668,17 @@ object Ann {
     val q = base.filter(col(idCol) === queryId)
       .select(col("xd").as("__qvec"), norm(col("xd")).as("__qnorm"))
     // The slim (id, q_score, exact_score) frame feeds BOTH rankings —
-    // Spark does not dedupe common subplans, so without a persist the
+    // Spark does not dedupe common subplans, so unless materialized the
     // dequantization and both per-row dots would run twice per query
-    // (r9 ADVICE). Tracked in the shared weak-cache registry.
-    val scored = graft.ops.Caches.tracked(
-      base.filter(col(idCol) =!= queryId)
-        .crossJoin(broadcast(q))
-        .select(col(idCol),
-          cosineOrZero(dot(col("xhat"), col("__qvec")), norm(col("xhat")),
-            col("__qnorm")).as("q_score"),
-          cosineOrZero(dot(col("xd"), col("__qvec")), norm(col("xd")),
-            col("__qnorm")).as("exact_score"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // (r9 ADVICE).
+    val scored = base.filter(col(idCol) =!= queryId)
+      .crossJoin(broadcast(q))
+      .select(col(idCol),
+        cosineOrZero(dot(col("xhat"), col("__qvec")), norm(col("xhat")),
+          col("__qnorm")).as("q_score"),
+        cosineOrZero(dot(col("xd"), col("__qvec")), norm(col("xd")),
+          col("__qnorm")).as("exact_score"))
+      .localCheckpoint()
     val exactTop = scored
       .orderBy(col("exact_score").desc, col(idCol)).limit(k)
       .select(col(idCol)).withColumn("__hit", lit(true))

@@ -31,10 +31,9 @@ object Contamination {
       textCol: String, n: Int = 3): DataFrame = {
     // the held-out shingle derivation (tokenize + explode + distinct
     // shuffle) feeds two subtrees (sizes and the semi-join); Spark does
-    // not dedupe common subplans, so cache it once — same convention as
-    // jaccardPairs' shingle frame
-    val heldSh = Dedup.tracked(
-      Dedup.wordShingles(heldout, idCol, textCol, n).cache())
+    // not dedupe common subplans, so materialize it once — same convention
+    // as jaccardPairs' shingle frame
+    val heldSh = Dedup.wordShingles(heldout, idCol, textCol, n).localCheckpoint()
     val trainSh = Dedup.wordShingles(train, idCol, textCol, n)
       .select("shingle").distinct()
     val sizes = heldSh.groupBy(idCol).agg(count(lit(1)).as("n_shingles"))

@@ -45,13 +45,12 @@ object Curation {
       cfg: Config = Config()): Stages = {
     val q = df.filter(TextFunctions.qualityScore(col(textCol)) >= cfg.minQuality)
     val lg = q.filter(TextFunctions.detectLang(col(textCol)).isin(cfg.langs: _*))
-    // Persisted: the near-dup machinery consumes `ex` from four distinct
-    // subplans (shingles, signatures, sizes, anti-join target) — without
-    // the cache each one re-runs the quality+langid scan and the
-    // fingerprint shuffle. MEMORY_AND_DISK, LRU-evicted under pressure;
-    // the cached set is the already-filtered corpus, not the raw input.
-    val ex = Dedup.exactDedup(lg, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Materialized: the near-dup machinery consumes `ex` from four
+    // distinct subplans (shingles, signatures, sizes, anti-join target) —
+    // without it each one re-runs the quality+langid scan and the
+    // fingerprint shuffle. The kept set is the already-filtered corpus,
+    // not the raw input; its blocks go when the caller drops the frame.
+    val ex = Dedup.exactDedup(lg, idCol, textCol).localCheckpoint()
     // Greedy near-dup prune: drop the higher id of every verified pair
     // (id1 < id2 by construction). Survivors are pairwise non-similar
     // w.r.t. the verified pairs; this is NOT cluster-min
@@ -62,10 +61,10 @@ object Curation {
     val drops = Dedup.lshThenExactPairs(ex, idCol, textCol, cfg.shingleSize,
         cfg.minhashes, cfg.rowsPerBand, cfg.minJaccard)
       .select(col("id2").as(idCol)).distinct()
-    // nd persisted for the same reason: the funnel counts it AND splits
-    // it, and each branch would otherwise re-run the whole LSH pipeline
-    val nd = ex.join(drops, Seq(idCol), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // nd materialized for the same reason: the funnel counts it AND
+    // splits it, and each branch would otherwise re-run the whole LSH
+    // pipeline
+    val nd = ex.join(drops, Seq(idCol), "left_anti").localCheckpoint()
     Stages(df, q, lg, ex, nd)
   }
 
@@ -127,14 +126,13 @@ object Curation {
     val exB = Dedup.exactDedup(lg, idCol, textCol)
     val histFp = history.filter(col(textCol).isNotNull)
       .select(TextFunctions.fingerprint(col(textCol)).as("__hfp")).distinct()
-    // persisted: the near-dup machinery consumes the surviving batch from
-    // several subplans (shingles, signatures, sizes, anti-join target,
-    // funnel count) — the stages() discipline
-    val exH = graft.ops.Caches.tracked(
-      exB.withColumn("__fp", TextFunctions.fingerprint(col(textCol)))
-        .join(histFp, col("__fp") === col("__hfp"), "left_anti")
-        .drop("__fp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // materialized: the near-dup machinery consumes the surviving batch
+    // from several subplans (shingles, signatures, sizes, anti-join
+    // target, funnel count) — the stages() discipline
+    val exH = exB.withColumn("__fp", TextFunctions.fingerprint(col(textCol)))
+      .join(histFp, col("__fp") === col("__hfp"), "left_anti")
+      .drop("__fp")
+      .localCheckpoint()
     val drops = Dedup.crossCorpusPairs(exH, history, idCol, textCol,
         cfg.shingleSize, cfg.minhashes, cfg.rowsPerBand, cfg.minJaccard)
       .select(col("batch_id").as(idCol)).distinct()
@@ -441,10 +439,10 @@ object Curation {
     val spark = df.sparkSession
     import spark.implicits._
     def ordered(s: Column) = if (desc) s.desc else s.asc
-    // slim score frame persisted: BOTH consumers (per-partition totals,
-    // final rank filter) reread it — without the cache Catalyst re-runs
+    // slim score frame materialized: BOTH consumers (per-partition
+    // totals, final rank filter) reread it — without it Catalyst re-runs
     // the range exchange once per branch (the Packing discipline)
-    val local = graft.ops.Caches.tracked(df
+    val local = df
       .select(col(idCol).cast("long").as("__id"), score.as("__s"))
       .repartitionByRange(parts, ordered(col("__s")), col("__id"))
       .sortWithinPartitions(ordered(col("__s")), col("__id"))
@@ -456,7 +454,7 @@ object Curation {
         it.map { id => rk += 1; (pid, id, rk) }
       }
       .toDF("__pid", "__id", "__rk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .localCheckpoint()
     // one row per partition; both windows are bounded by `parts`
     val wPid = Window.orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -3,7 +3,6 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Hashed bigram language-model perplexity scoring — the CCNet-family
   * quality filter (Wenzek et al. 2020, public method; also RefinedWeb /
@@ -20,10 +19,11 @@ import org.apache.spark.storage.StorageLevel
   * rows matching `trainFilter`, scored over ALL rows.
   *
   * 100 TB design: the fitted model is (observed bigram-bucket types ×
-  * 3 longs) — data-BOUNDED, never corpus-sized — and is persisted, so
-  * the training subset is scanned exactly once (the model window + the
-  * scoring join both read the persisted relation; Spark's ContextCleaner
-  * unpersists when the plan is garbage-collected). Scoring is one
+  * 3 longs) — data-BOUNDED, never corpus-sized — and is materialized
+  * with an eager `localCheckpoint`, so the training subset is scanned
+  * exactly once (the context collect and the scoring join both read the
+  * checkpointed blocks, which Spark's ContextCleaner frees once the
+  * returned frame is garbage-collected). Scoring is one
   * corpus-sized explode shuffled against the model on (b1,b2) with a
   * broadcast B-row context fallback — everything linear in tokens. At
   * deployment the model is the artifact you'd write to a table once and
@@ -74,22 +74,17 @@ object NgramLm {
         .select(col(idCol), col("keep"), col("p.b1"), col("p.b2"))
 
     // fitted model: observed (b1,b2) types with their context totals and
-    // entry log-probs in nano-units — data-bounded, persisted so the
-    // ctx collect below and the scoring join share ONE training scan
+    // entry log-probs in nano-units — data-bounded, materialized so the
+    // ctx collect below and the scoring join share ONE training scan.
+    // Each fit owns its blocks: an earlier call's still-lazy result keeps
+    // reading its own model, never a refit (r9 ADVICE).
     val model = bigrams(docs, trainFilter).filter(col("keep"))
       .groupBy("b1", "b2").agg(count(lit(1)).as("n_pair"))
       .withColumn("n_ctx", sum("n_pair").over(Window.partitionBy("b1")))
       .withColumn("lp_nano",
         round(log((col("n_pair").cast("double") + 1.0) /
           (col("n_ctx").cast("double") + bD)) * 1e9, 0).cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Registered with the shared weak-cache registry rather than a static
-    // last-fit slot (r9 ADVICE: unpersisting the PREVIOUS fit here could
-    // yank the cache out from under an earlier call's still-lazy result —
-    // lineage keeps that correct but silently refits). Callers release
-    // between batches via Caches.unpersistAll; otherwise ContextCleaner
-    // collects the plan when the result graph is garbage.
-    graft.ops.Caches.tracked(model)
+      .localCheckpoint()
 
     // unseen-pair fallback per KNOWN context: ln(1/(c(b1·)+B)); ≤ B rows
     val spark = docs.sparkSession

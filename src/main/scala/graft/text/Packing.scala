@@ -46,12 +46,11 @@ object Packing {
       parts: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // persisted because BOTH consumers below need it — the per-partition
-    // totals and the final join; without the cache Catalyst re-runs the
-    // scan + range exchange once per branch (measured: two data-sized
-    // Exchanges in the plan). The frame is narrow (four longs per row),
-    // MEMORY_AND_DISK, registered with the weak cache registry
-    val local = graft.ops.Caches.tracked(df
+    // materialized because BOTH consumers below need it — the
+    // per-partition totals and the final join; without it Catalyst re-runs
+    // the scan + range exchange once per branch (measured: two data-sized
+    // Exchanges in the plan). The frame is narrow (four longs per row)
+    val local = df
       .select(col(idCol).cast("long").as("__id"), col(nCol).cast("long").as("__n"))
       .repartitionByRange(parts, col("__id"))
       .sortWithinPartitions("__id")
@@ -62,7 +61,7 @@ object Packing {
         it.map { case (id, n) => acc += n; (pid, id, n, acc) }
       }
       .toDF("__pid", "__id", "__n", "__run")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .localCheckpoint()
     // one row per partition; the cumulative-base window is bounded by
     // `parts`, never by the data (local running sums are monotone, so
     // the partition total is their max)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Caches
 
 /** Winnowing document fingerprinting — the MOSS algorithm (Schleimer,
   * Wilkerson, Aiken, "Winnowing: Local Algorithms for Document
@@ -102,12 +101,11 @@ object Winnowing {
       k: Int = 3, w: Int = 4, minOverlap: Double = 0.6,
       maxFpDf: Long = 1000L): DataFrame = {
     // distinct (doc, hash): positions matter for the guarantee, not the
-    // score. Cached — feeds the df-cap, the per-doc sizes AND both join
-    // sides.
-    val fph = Caches.tracked(
-      fingerprints(docs, idCol, textCol, k, w)
-        .select(col(idCol).as("__id"), col("fp_hash")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // score. Materialized — feeds the df-cap, the per-doc sizes AND both
+    // join sides.
+    val fph = fingerprints(docs, idCol, textCol, k, w)
+      .select(col(idCol).as("__id"), col("fp_hash")).distinct()
+      .localCheckpoint()
     val rare = fph.groupBy("fp_hash").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxFpDf).select("fp_hash")
     val kept = fph.join(rare, "fp_hash")

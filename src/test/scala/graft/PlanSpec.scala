@@ -72,7 +72,10 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"cartesian stage in the banded path:\n$plan")
-    assert(plan.contains("graft_bands"), s"graft_bands missing:\n$plan")
+    // both sides of the candidate join read the one materialized
+    // (id, band, bucket) table that graft_bands filled
+    assert("Scan ExistingRDD\\[__id".r.findAllIn(plan).size == 2,
+      s"band table not shared by both join sides:\n$plan")
   }
 
   test("t31: model joins broadcast off a local table; weight agg has map-side partial") {
@@ -92,8 +95,8 @@ class PlanSpec extends SparkSpec {
 
   test("t32: LM model is persisted (training scanned once) with broadcast context fallback") {
     val plan = planString("t32_lm_perplexity")
-    assert(plan.contains("InMemoryTableScan"),
-      s"fitted model not persisted — training subtree would re-expand per consumer:\n$plan")
+    assert(plan.contains("Scan ExistingRDD[b1"),
+      s"fitted model not materialized — training subtree would re-expand per consumer:\n$plan")
     assert(plan.contains("LocalTableScan"),
       s"context-fallback table should be a driver-built local table:\n$plan")
     assert(plan.contains("partial_count"), s"no map-side partial counts:\n$plan")
@@ -340,6 +343,15 @@ class PlanSpec extends SparkSpec {
       s"part filters did not push to the scan:\n$plan")
   }
 
+  test("q2: both consumers of the candidate set share the lineitem " +
+      "distinct's exchange") {
+    val df = SparkEntry.queries("q2_min_cost_supplier")(spark, sf)
+    df.collect() // the adaptive plan reuses exchanges once its stages ran
+    val plan = df.queryExecution.executedPlan.toString
+    assert("""ReusedExchange \[l_partkey""".r.findFirstIn(plan).nonEmpty,
+      s"the lineitem distinct runs once per consumer:\n$plan")
+  }
+
   test("mv1: the physical plan scans the MV parquet, never the base — and " +
       "the MV2 filter lands as a pushed filter on the MV scan") {
     val p1 = planString("mv1_rewrite_agg")
@@ -381,5 +393,28 @@ class PlanSpec extends SparkSpec {
       s"retriever top-k lost TakeOrdered fusion:\n$plan")
     assert(!plan.contains("CartesianProduct"),
       s"fusion grew a cartesian:\n$plan")
+  }
+
+  // One board query per family whose body or verb used to leave a cached
+  // frame behind; each must now leave the session's cache as it found it.
+  Seq(
+    "graph" -> "g1_pagerank", "graph" -> "g2_label_propagation",
+    "graph" -> "g3_triangle_count", "graph" -> "g4_shortest_paths",
+    "text dedup" -> "t7_minhash_lsh_pairs",
+    "text curation" -> "t13_curation_funnel",
+    "text curation" -> "t38_incremental_curation",
+    "embedding" -> "emb12_semantic_dedup",
+    "tpch" -> "q15_top_supplier", "tpch" -> "q2_min_cost_supplier",
+    "tpch" -> "q11_important_parts", "tpch" -> "q21_waiting_suppliers",
+    "corpus" -> "t43_kmv_overlap",
+    "lakehouse" -> "s30_versioned_cdc_apply",
+    "lakehouse" -> "s43_csv_quarantine",
+    "privacy-misc" -> "mm5_media_mix_curation"
+  ).foreach { case (family, name) =>
+    test(s"$family: $name leaves nothing in the session's cache") {
+      spark.catalog.clearCache() // start from an empty cache
+      SparkEntry.queries(name)(spark, sf).collect()
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
   }
 }

@@ -92,6 +92,19 @@ class MedallionSpec extends SparkSpec {
     assert(bad == Set("S2,not_a_number", "S3,31,EXTRA,COLS"))
   }
 
+  test("permissive CSV read leaves nothing in the session's cache") {
+    import org.apache.spark.sql.types._
+    val tmp = Files.createTempDirectory("graft-permissive-cache").toString
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/dm.csv"),
+      "SUBJID,AGE\nS1,42\nS2,not_a_number\n")
+    spark.catalog.clearCache() // start from an empty cache
+    val (clean, corrupt) = Medallion.readCsvPermissive(spark, s"$tmp/dm.csv",
+      StructType(Seq(StructField("SUBJID", StringType),
+        StructField("AGE", IntegerType))))
+    assert(clean.count() == 1L && corrupt.count() == 1L)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("compact rewrites many small files into few, preserving rows") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-compact").toString
