@@ -1,17 +1,13 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
-import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Group metadata answered from parquet FOOTERS on the driver — never a
   * Spark job. A schema-less `spark.read.parquet(paths)` launches one
@@ -19,9 +15,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * scale, where a [[Versioned]] verb moves a few thousand rows); this
   * object reads the same footer Spark's non-merge inference would read
   * and hands the schema to `spark.read.schema(...)`, so Spark jobs only
-  * move data. The connector plans every snapshot read from its group
-  * schemas; the ops layer's group rewrites and delete-key reads and the
-  * MV rewrite rule read parquet through [[read]]. */
+  * move data. The connector plans every read of a Versioned data or
+  * delete group from its group schemas ([[schema]]); [[read]], a plain
+  * `spark.read.parquet`, serves only the MV rewrite rule's read of a
+  * materialized view's artifact, which is no Versioned table. */
 object ParquetFooters {
 
   /** Per-root resolution: which file Spark's inference would pick under
@@ -138,45 +135,5 @@ object ParquetFooters {
     org.apache.spark.sql.GraftSqlShims.asNullable(
       ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
-  }
-
-  /** Footers (row-group metadata included) of every data file under a
-    * LOCAL, freshly-written group directory: `.parquet` files not
-    * hidden by a `_`/`.` prefix. Bounded by files per commit. */
-  def dataFooters(root: String, conf: Configuration): Seq[ParquetMetadata] = {
-    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-    val files =
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        java.nio.file.Files.isRegularFile(p) && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }.toList
-      finally s.close()
-    files.map(p => ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(new Path(p.toString), conf),
-      ParquetMetadataConverter.NO_FILTER))
-  }
-
-  /** Min/max of a top-level BIGINT column from the footers' column-chunk
-    * statistics: `Some(None)` when every value is NULL (or there are no
-    * rows), `Some(Some((lo, hi)))` otherwise; None when the footers
-    * cannot answer (another type, a missing column, a chunk written
-    * without statistics) — the caller then computes it with a job. */
-  def longMinMax(footers: Seq[ParquetMetadata], column: String,
-      dataType: DataType): Option[Option[(Long, Long)]] = {
-    if (dataType != LongType) return None
-    val path = ColumnPath.get(column)
-    val chunks = footers.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0)
-      .map(_.getColumns.asScala.find(c => c.getPath == path &&
-          c.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64)
-        .map(_.getStatistics).filter(st => st != null && !st.isEmpty))
-    if (chunks.exists(_.isEmpty)) None
-    else {
-      val valued = chunks.flatten.filter(_.hasNonNullValue)
-      def bound(v: Any): Long = v.asInstanceOf[java.lang.Long].longValue
-      Some(if (valued.isEmpty) None
-        else Some((valued.map(st => bound(st.genericGetMin)).min,
-          valued.map(st => bound(st.genericGetMax)).max)))
-    }
   }
 }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.VersionedCommitMessage
+
 import scala.jdk.CollectionConverters._
 
 /** Manifest-based snapshot versioning over plain parquet — the minimal
@@ -107,16 +109,6 @@ object Versioned {
     * records foreign groups as absolute paths/URIs, used verbatim. */
   private def resolveGroup(dir: String, g: String): String =
     if (g.startsWith("/") || g.contains("://")) g else s"$dir/data/$g"
-
-  /** One multi-root parquet read of `groups`, its schema taken from the
-    * driver-side footer ([[ParquetFooters.read]]) — no inference job.
-    * Serves what the manifest's table read cannot: delete-key groups
-    * ([[deleteKeys]]) and a group this commit has just written but not
-    * yet published (stats probes). Published data groups read through
-    * [[groupsRead]]. */
-  private def readGroups(spark: SparkSession, dir: String,
-      groups: Seq[String]): DataFrame =
-    ParquetFooters.read(spark, groups.map(resolveGroup(dir, _)))
 
   /** Manifest file names under `_manifests/`, stream closed via
     * try/finally (Files.list leaks a directory fd otherwise — and
@@ -396,73 +388,48 @@ object Versioned {
     (dgs, dk)
   }
 
-  /** The distinct keys of delete groups `dgs` (one column, `dk`) — the
-    * planning input of [[applyDeletesCommit]] and the change feed's
-    * delete steps. Delete dirs are read ONE AT A TIME then unioned: a
-    * history may mix the flat legacy layout and the per-group
-    * `__tg=`-partitioned deletion-vector layout ([[deleteCommitMor]]),
-    * and parquet partition discovery cannot span both under one
-    * multi-root read. */
-  private def deleteKeys(spark: SparkSession, dir: String, dgs: Seq[String],
-      dk: String): DataFrame =
-    dgs.map(g => readGroups(spark, dir, Seq(g)).select(dk))
-      .reduce(_ unionAll _).distinct()
+  /** The distinct keys of version `v`'s delete groups `dgs` (one column,
+    * `dk`) — the planning input of [[applyDeletesCommit]] and the change
+    * feed's delete steps. One connector read over all of them: its file
+    * listing recurses, so the flat legacy layout and the per-group
+    * `__tg=` layout ([[deleteCommitMor]]) read alike, and their footers
+    * carry the key column only. The frame is pinned as a group subset,
+    * so nothing takes it for the version's snapshot. */
+  private[ops] def deleteKeys(spark: SparkSession, dir: String, v: Int,
+      dgs: Seq[String], dk: String): DataFrame =
+    graft.sources.VersionedRead.frame(spark, dir,
+      ConnectorPlan(v, dgs.map(g => g -> resolveGroup(dir, g)), Map.empty,
+        None, Map.empty, Set.empty, Map.empty, None, Seq.empty), Some(dgs))
+      .select(dk).distinct()
 
   private def requireNoMorDeletes(dir: String, v: Int, verb: String): Unit =
     require(readDeletes(dir, v)._1.isEmpty,
       s"$verb at $dir requires a delete-free snapshot — run " +
         "applyDeletesCommit first (merge-on-read deletes are pending)")
 
-  /** Min/max of `statsCol` over the WRITTEN group (the manifest must
-    * describe what is on disk, not the input plan). None when the group
-    * is empty or the column is all-null. Read from the written footers'
-    * column statistics; only a group the footers cannot answer for (a
-    * non-BIGINT column, chunks without statistics) pays an aggregation
-    * job, over the column cast to BIGINT — the cast every stats consumer
-    * ([[touchedGroups]], [[deleteCommitMor]]'s routing) applies to the
-    * keys it plans. A column without an order-preserving BIGINT image
-    * (strings, dates) records none: its group is planned conservatively. */
-  private def writtenStats(spark: SparkSession, dir: String, group: String,
-      statsCol: String): Option[(Long, Long)] = {
-    val root = resolveGroup(dir, group)
-    val field = ParquetFooters.schema(spark, Seq(root)).fields
-      .find(f => spark.sessionState.conf.resolver(f.name, statsCol))
-    field.flatMap(f => ParquetFooters.longMinMax(
-        ParquetFooters.dataFooters(root, spark.sparkContext.hadoopConfiguration),
-        f.name, f.dataType))
-      .getOrElse(field.map(_.dataType) match {
-        case Some(_: org.apache.spark.sql.types.NumericType |
-            org.apache.spark.sql.types.TimestampType) =>
-          import org.apache.spark.sql.functions.{col, max, min}
-          val c = col(statsCol).try_cast("long")
-          val row = readGroups(spark, dir, Seq(group)).select(min(c), max(c))
-            .head()
-          if (row.isNullAt(0)) None else Some((row.getLong(0), row.getLong(1)))
-        case Some(_) => None
-        case None => throw new IllegalArgumentException(
-          s"stats column $statsCol is not in group $group at $dir")
-      })
-  }
-
   /** Write `df` as the file group `data/<group>`: staged by the
     * connector's writer ([[graft.sources.VersionedWriter.stage]]) under
     * `_staging/`, then moved into place with one rename, so a failed
     * write leaves no group and an occupied `data/<group>` fails the write
-    * instead of merging into it. Returns the group's EXACT row count from
-    * the tasks' commit messages — the manifest's per-group `counts`,
-    * which make a global `COUNT(*)` answerable from the manifest alone. */
+    * instead of merging into it. Returns the tasks' commit messages: the
+    * group's EXACT row count (the manifest's per-group `counts`, which
+    * make a global `COUNT(*)` answerable from the manifest alone) and the
+    * min/max of the `statsCols`' BIGINT images over the WRITTEN rows
+    * (the manifest describes what is on disk, not the input plan). */
   private def writeGroup(df: DataFrame, dir: String, group: String,
-      partitionCol: Option[String] = None): Long = {
+      partitionCol: Option[String] = None, statsCols: Seq[String] = Nil,
+      strictStats: Boolean = false)
+      : Seq[VersionedCommitMessage] = {
     val target = Paths.get(resolveGroup(dir, group))
     if (Files.exists(target))
       throw new java.nio.file.FileAlreadyExistsException(target.toString)
     val staging = Paths.get(dir, "_staging", s"o${java.util.UUID.randomUUID}")
     try {
-      val n = graft.sources.VersionedWriter.stage(df, staging.toString,
-        partitionCol).map(_.nRows).sum
+      val messages = graft.sources.VersionedWriter.stage(df,
+        staging.toString, partitionCol, statsCols, strictStats)
       Files.createDirectories(target.getParent)
       Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      n
+      messages
     } finally deleteRecursively(staging) // after the move: nothing left
   }
 
@@ -525,18 +492,19 @@ object Versioned {
             "OPTIMIZE must re-key them first")
       }
     }
-    val rows = writeGroup(
+    // the written group carries physical names; map the caller's
+    // logical stats column back before the writer tracks it
+    val physStats =
+      statsCol.map(c => renames.find(_._2 == c).map(_._1).getOrElse(c))
+    val written = writeGroup(
       withoutDrops(withDefaults(toPhysical(df, renames), defaults), drops),
-      dir, group)
+      dir, group, statsCols = physStats.toSeq)
     val groups =
       (if (overwrite || parent == 0) Seq.empty
        else readManifest(dir, parent)) :+ group
-    val newStats = statsCol.flatMap { c =>
-      // the written group carries physical names; map the caller's
-      // logical stats column back before probing it
-      val phys = renames.find(_._2 == c).map(_._1).getOrElse(c)
-      writtenStats(df.sparkSession, dir, group, phys).map(group -> _)
-    }
+    // no range (no non-NULL BIGINT image): no stats, planned conservatively
+    val newStats = physStats.flatMap(VersionedCommitMessage.ranges(written).get)
+      .map(group -> _)
     // an append carries the parent's pending MOR delete files forward
     // (they still mask rows of the carried data groups); an overwrite
     // starts a fresh snapshot and drops them
@@ -560,7 +528,7 @@ object Versioned {
       scol = statsCol.orElse(parentScol),
       scol2 = if (overwrite || parent == 0) None
               else readStatsCol2(dir, parent),
-      counts = parentCounts + (group -> rows))
+      counts = parentCounts + (group -> written.map(_.nRows).sum))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"commit at $dir lost the race for version $v — " +
@@ -621,7 +589,7 @@ object Versioned {
         if (overwrite || lvAtWrite == 0) Map.empty
         else readDefaults(dir, lvAtWrite)),
         if (overwrite || lvAtWrite == 0) Set.empty
-        else readDrops(dir, lvAtWrite)), dir, group)
+        else readDrops(dir, lvAtWrite)), dir, group).map(_.nRows).sum
     val orphan = Paths.get(resolveGroup(dir, group))
     beforePublish()
     var attempts = 0
@@ -1025,7 +993,7 @@ object Versioned {
       // clustered on every key)
       writeGroup(keys.coalesce(1).distinct(), dir, dgroup)
     }
-    val wroteGroup = written > 0
+    val wroteGroup = written.map(_.nRows).sum > 0
     if (!wroteGroup) deleteRecursively(Paths.get(dgroupDir))
     else if (statsUsable)
       // the routing SCOPE: the groups that existed when this delete
@@ -1075,7 +1043,7 @@ object Versioned {
     val statsUsable = readStatsCol(dir, parent).contains(dk)
     val (touched, carried) =
       if (statsUsable)
-        touchedGroups(deleteKeys(spark, dir, dgs, dk), dk, dir, parent)
+        touchedGroups(deleteKeys(spark, dir, parent, dgs, dk), dk, dir, parent)
       else (readManifest(dir, parent), Seq.empty[String])
     if (touched.isEmpty) {
       // no group can contain a deleted key: just drop the delete files
@@ -1383,10 +1351,11 @@ object Versioned {
             "rewrite must re-key them first")
       }
     }
-    val rows = writeGroup(
-      if (repartitionTo > 0) df.repartition(repartitionTo) else df, dir, group)
-    val newStats = statsCol.flatMap(c =>
-      writtenStats(spark, dir, group, c).map(group -> _))
+    val written = writeGroup(
+      if (repartitionTo > 0) df.repartition(repartitionTo) else df, dir, group,
+      statsCols = statsCol.toSeq)
+    val newStats = statsCol.flatMap(VersionedCommitMessage.ranges(written).get)
+      .map(group -> _)
     val carriedStats2 = parentStats2.filter(kv => carriedSet(kv._1))
     val json = manifestJson(v, parent, overwrite, carried :+ group,
       carriedStats ++ newStats, carriedStats2,
@@ -1394,7 +1363,7 @@ object Versioned {
       scol2 = if (carriedStats2.nonEmpty) readStatsCol2(dir, parent)
               else None,
       counts = readCounts(dir, parent).filter(kv => carriedSet(kv._1)) +
-        (group -> rows))
+        (group -> written.map(_.nRows).sum))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"rewrite commit at $dir lost the race for version $v")
@@ -1472,9 +1441,9 @@ object Versioned {
     * Inputs must be pre-gridded to [0, 2^gridBits) ints (the
     * [[ZOrder.writeZOrdered]] bucket-first rule). The bucket id is pure
     * column arithmetic (z >> (2·gridBits − bucketBits)) — deterministic,
-    * no range sampling — and the write is ONE hive-partitioned pass; the
-    * stats2 table is one bounded aggregate over the written files.
-    * Returns (version, groupCount). */
+    * no range sampling — and the write is ONE hive-partitioned pass whose
+    * tasks also record each bucket's 2-D min/max. Returns
+    * (version, groupCount). */
   def compactZOrder(spark: SparkSession, dir: String, aCol: String,
       bCol: String, gridBits: Int, bucketBits: Int): (Int, Int) = {
     import org.apache.spark.sql.functions._
@@ -1490,28 +1459,23 @@ object Versioned {
     val shiftBits = 2 * gridBits - bucketBits
     val snap = read(spark, dir, parent)
     val z = ZOrder.zValue(col(aCol), col(bCol))
-    writeGroup(snap
+    val written = writeGroup(snap
       .withColumn("__zb", shiftright(z, shiftBits).cast("int"))
       .withColumn("__z", z)
       .repartition(col("__zb"))
       .sortWithinPartitions("__zb", "__z")
-      .drop("__z"), dir, base, Some("__zb"))
-    // 2-D stats from the WRITTEN buckets, one bounded aggregate — the
-    // explicit long casts keep getLong safe when aCol/bCol are INT
-    // (the docstring invites pre-gridded ints; zValue casts internally
-    // so the write succeeds and only the stats probe would crash)
-    val statRows = readGroups(spark, dir, Seq(base))
-      .groupBy(col("__zb"))
-      .agg(min(col(aCol).cast("long")).as("aLo"),
-        max(col(aCol).cast("long")).as("aHi"),
-        min(col(bCol).cast("long")).as("bLo"),
-        max(col(bCol).cast("long")).as("bHi"))
-      .collect() // bounded by 2^bucketBits
-    val groups = statRows.map(r => s"$base/__zb=${r.getInt(0)}").toSeq.sorted
-    val stats2 = statRows.map { r =>
-      s"$base/__zb=${r.getInt(0)}" ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    }.toMap
+      .drop("__z"), dir, base, Some("__zb"), Seq(aCol, bCol),
+      strictStats = true)
+    // 2-D stats of the WRITTEN buckets (`__zb=<b>` dirs), from the
+    // messages of the files under each
+    val buckets = written.groupBy(m =>
+        s"$base/${Paths.get(m.file.get).getParent.getFileName}")
+      .map { case (g, ms) => g -> VersionedCommitMessage.ranges(ms) }
+    val groups = buckets.keys.toSeq.sorted
+    val stats2 = buckets.collect { case (g, r)
+        if r.contains(aCol) && r.contains(bCol) =>
+      g -> (r(aCol)._1, r(aCol)._2, r(bCol)._1, r(bCol)._2)
+    }
     val json = manifestJson(v, parent, overwrite = true, groups,
       stats2 = stats2, scol2 = Some((aCol, bCol)))
     if (!publishIfAbsent(dir, v, json))
@@ -1670,7 +1634,7 @@ object Versioned {
           if (newDels.nonEmpty && cd.take(pd.size) == pd &&
               readManifest(dir, v) == readManifest(dir, v - 1)) {
             read(spark, dir, v - 1)
-              .join(deleteKeys(spark, dir, newDels, cdk.get), Seq(cdk.get),
+              .join(deleteKeys(spark, dir, v, newDels, cdk.get), Seq(cdk.get),
                 "left_semi")
               .withColumn("_change_type", lit("delete"))
           } else snapshotDiff(read(spark, dir, v - 1), read(spark, dir, v), key)
@@ -1841,10 +1805,13 @@ object Versioned {
     * manifest v left an orphan no reader can see — it is swept here
     * before the move (manifest v absent ⇒ nothing references the dir;
     * concurrent batch racers are still linearized by the put-if-absent
-    * publish, and the streaming sink is single-writer per app). */
+    * publish, and the streaming sink is single-writer per app).
+    * `written` are the staged files' commit messages: the group's row
+    * count and the [min, max] of `statsCol` (a LOGICAL name) as the
+    * writers saw them. */
   def commitStagedGroup(spark: SparkSession, dir: String, stagedDir: String,
-      nRows: Long, overwrite: Boolean = false, statsCol: Option[String] = None,
-      txn: Option[(String, Long)] = None,
+      written: Seq[VersionedCommitMessage], overwrite: Boolean = false,
+      statsCol: Option[String] = None, txn: Option[(String, Long)] = None,
       omitDefaultedOk: Boolean = false): Int = {
     val parent = latestVersion(dir)
     val v = parent + 1
@@ -1881,7 +1848,7 @@ object Versioned {
       // new column for them, so an omission there is schema drift and
       // must refuse loudly, keeping the post-ALTER-groups-are-complete
       // invariant for every batch-written group. The stats column is
-      // never omittable — [[writtenStats]] reads it after the move.
+      // never omittable — the writer tracks its min/max.
       // Present columns still type-check exactly; unknown staged
       // columns and missing UNDEFAULTED columns always refuse.
       val defaults = readDefaults(dir, parent)
@@ -1952,15 +1919,8 @@ object Versioned {
     val groups =
       (if (overwrite || parent == 0) Seq.empty
        else readManifest(dir, parent)) :+ group
-    // statsCol arrives in LOGICAL name (the table's current schema); the
-    // written group's files speak PHYSICAL — translate for the min/max
-    // probe, record under the logical name (the manifest scol domain)
-    val statsL2p =
-      if (overwrite || parent == 0) Map.empty[String, String]
-      else readRenames(dir, parent).map(_.swap)
-    val newStats = statsCol.flatMap(c =>
-      writtenStats(spark, dir, group, statsL2p.getOrElse(c, c))
-        .map(group -> _))
+    val newStats = statsCol.flatMap(VersionedCommitMessage.ranges(written).get)
+      .map(group -> _)
     val (dgs, dk) =
       if (overwrite || parent == 0) (Seq.empty[String], None)
       else readDeletes(dir, parent)
@@ -1984,7 +1944,7 @@ object Versioned {
         if (overwrite || parent == 0) Set.empty else readDrops(dir, parent),
       scol = statsCol.orElse(parentScol),
       scol2 = if (overwrite || parent == 0) None else readStatsCol2(dir, parent),
-      counts = parentCounts + (group -> nRows))
+      counts = parentCounts + (group -> written.map(_.nRows).sum))
     if (!publishIfAbsent(dir, v, json))
       throw new java.util.ConcurrentModificationException(
         s"staged commit at $dir lost the race for version $v")
@@ -2002,15 +1962,15 @@ object Versioned {
     * foreign commit still fails loudly via put-if-absent. Returns
     * Some(version) when the commit landed, None on a replay skip. */
   def commitStagedGroupIdempotent(spark: SparkSession, dir: String,
-      stagedDir: String, appId: String, txnVersion: Long, nRows: Long,
-      statsCol: Option[String] = None,
+      stagedDir: String, appId: String, txnVersion: Long,
+      written: Seq[VersionedCommitMessage], statsCol: Option[String] = None,
       omitDefaultedOk: Boolean = false): Option[Int] = {
     requireId("appId", appId)
     if (lastTxnVersion(dir, appId).exists(_ >= txnVersion)) {
       deleteRecursively(Paths.get(stagedDir))
       return None
     }
-    Some(commitStagedGroup(spark, dir, stagedDir, nRows, overwrite = false,
+    Some(commitStagedGroup(spark, dir, stagedDir, written, overwrite = false,
       statsCol = statsCol, txn = Some((appId, txnVersion)),
       omitDefaultedOk = omitDefaultedOk))
   }
@@ -2051,10 +2011,12 @@ object Versioned {
     * landing in between fails loudly (write-serializable, the OCC rule).
     * An EMPTY staged dir with removed groups publishes the survivors
     * alone (a whole-group delete); empty with nothing removed is a no-op
-    * returning the parent version. */
+    * returning the parent version. `written` as in [[commitStagedGroup]]. */
   def replaceGroupsStagedCommit(spark: SparkSession, dir: String,
-      stagedDir: String, nRows: Long, removed: Seq[String], expectParent: Int,
+      stagedDir: String, written: Seq[VersionedCommitMessage],
+      removed: Seq[String], expectParent: Int,
       statsCol: Option[String] = None): Int = {
+    val nRows = written.map(_.nRows).sum
     val parent = latestVersion(dir)
     require(parent == expectParent,
       s"row-level commit at $dir planned against v$expectParent but the " +
@@ -2071,7 +2033,7 @@ object Versioned {
         deleteRecursively(Paths.get(stagedDir))
         return 0
       }
-      return commitStagedGroup(spark, dir, stagedDir, nRows,
+      return commitStagedGroup(spark, dir, stagedDir, written,
         overwrite = false, statsCol = statsCol)
     }
     // the scan already refused these states; re-check at commit (cheap,
@@ -2112,8 +2074,10 @@ object Versioned {
     }
     val keep = carried.toSet
     val parentScol = readStatsCol(dir, parent)
-    val newStats = if (hasStaged) statsCol.orElse(parentScol).flatMap(c =>
-      writtenStats(spark, dir, group, c).map(group -> _)) else None
+    val newStats =
+      if (hasStaged) statsCol.orElse(parentScol)
+        .flatMap(VersionedCommitMessage.ranges(written).get).map(group -> _)
+      else None
     val newCounts =
       if (hasStaged) Map(group -> nRows) else Map.empty[String, Long]
     val json = manifestJson(v, parent, overwrite = removed.nonEmpty,

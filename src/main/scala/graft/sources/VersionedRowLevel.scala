@@ -197,23 +197,26 @@ private[sources] class VersionedRowLevelBatchWrite(schema: StructType,
 
   private val staging = s"$dir/_staging/rl$queryId"
 
+  /** The writers track the column the commit records stats on:
+    * `statsCol`, else the one the head version's stats describe. */
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    VersionedDataWriterFactory(VersionedDataWriter.conf(schema), staging)
+      : DataWriterFactory = {
+    val v = Versioned.latestVersion(dir)
+    val c = statsCol.orElse(
+      if (v == 0) None else Versioned.readStatsCol(dir, v))
+    VersionedDataWriterFactory(VersionedDataWriter.conf(schema), staging,
+      c.toSeq.flatMap(VersionedDataWriter.statsImage(schema, _)))
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val acked = messages.collect {
-      case VersionedCommitMessage(Some(f), _) =>
-        java.nio.file.Paths.get(f).getFileName.toString
-    }.toSet
-    VersionedBatchWrite.dropUnacked(staging, acked)
+    val written = VersionedBatchWrite.written(messages)
+    VersionedBatchWrite.dropUnacked(staging, written)
     val (scanVersion, removed) = op.scanned.getOrElse(
       throw new IllegalStateException(
         "row-level write committed before its scan planned — " +
           "the ReplaceData contract always scans first"))
     Versioned.replaceGroupsStagedCommit(SparkSession.active, dir, staging,
-      VersionedBatchWrite.rowCount(messages), removed,
-      expectParent = scanVersion, statsCol = statsCol)
+      written, removed, expectParent = scanVersion, statsCol = statsCol)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

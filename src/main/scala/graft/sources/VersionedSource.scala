@@ -15,7 +15,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
@@ -72,9 +72,10 @@ import graft.ops.Versioned
   * cap. The version's planning state comes from
   * [[Versioned.connectorPlan]], so ALTERed and MOR-deleted tables read
   * with zero data rewritten and nothing refused. This scan is the only
-  * reader of Versioned snapshots: the ops layer's reads
-  * ([[Versioned.read]] and its pruned and change-feed variants) are
-  * frames over the same relation ([[VersionedRead]]). Column types: the
+  * reader of every Versioned data and delete file: the ops layer's reads
+  * ([[Versioned.read]], its pruned and change-feed variants and the
+  * delete-key reads) are frames over the same relation
+  * ([[VersionedRead]]). Column types: the
   * atomic types and arrays, maps and structs of them
   * ([[VersionedSource.isSupportedType]]).
   */
@@ -183,12 +184,12 @@ private[sources] object VersionedSource {
 
 /** A snapshot the ops layer pinned before building its relation: the
   * version's planning state, narrowed to a group subset when `subset`
-  * (a pruned read or a change-feed step). */
+  * (a pruned read, a change-feed step or the delete keys). */
 private[sources] final case class Pinned(plan: Versioned.ConnectorPlan,
     subset: Boolean)
 
-/** The ops layer's snapshot reads ([[Versioned.read]], its pruned and
-  * change-feed variants, the delete fold's group rewrite): a DataFrame
+/** The ops layer's reads ([[Versioned.read]], its pruned and change-feed
+  * variants, the delete fold's group rewrite, the delete keys): a DataFrame
   * over the connector's own relation, built directly — no format
   * lookup, no read options — and pinned to `plan`. `groups` narrows the
   * scan to those manifest groups while the schema stays the version's,
@@ -1129,8 +1130,15 @@ private[sources] class VersionedWrite(info: LogicalWriteInfo,
     val dir = validatedDir()
     new VersionedBatchWrite(
       graft.ops.Versioned.stagedWriteSchema(dir, info.schema(), overwrite),
-      dir, overwrite, opt("statsCol"), info.queryId())
+      dir, overwrite, opt("statsCol"), statsImage, info.queryId())
   }
+
+  /** The `statsCol` option's BIGINT image over the staged rows, bound
+    * through the logical schema: the staged fields are its fields
+    * renamed position by position. */
+  private def statsImage: Seq[(String, Expression)] =
+    opt("statsCol").toSeq
+      .flatMap(VersionedDataWriter.statsImage(info.schema(), _))
 
   /** Native streaming sink (`writeStream.format("graft-versioned")`) —
     * epoch-keyed exactly-once: each epoch stages its part files under an
@@ -1160,7 +1168,7 @@ private[sources] class VersionedWrite(info: LogicalWriteInfo,
     new VersionedStreamingWrite(
       graft.ops.Versioned.stagedWriteSchema(dir, info.schema(),
         overwrite = false),
-      dir, opt("statsCol"), info.queryId())
+      dir, opt("statsCol"), statsImage, info.queryId())
   }
 }
 
@@ -1171,25 +1179,22 @@ private[sources] class VersionedWrite(info: LogicalWriteInfo,
   * per-run runId), so a restart from the same checkpoint replays epochs
   * idempotently. */
 private[sources] class VersionedStreamingWrite(schema: StructType,
-    dir: String, statsCol: Option[String], queryId: String)
-    extends StreamingWrite {
+    dir: String, statsCol: Option[String], stats: Seq[(String, Expression)],
+    queryId: String) extends StreamingWrite {
 
   private def stagingFor(epochId: Long) = s"$dir/_staging/s$queryId-e$epochId"
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
     VersionedStreamingWriterFactory(VersionedDataWriter.conf(schema),
-      s"$dir/_staging/s$queryId")
+      s"$dir/_staging/s$queryId", stats)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val staging = stagingFor(epochId)
-    val acked = messages.collect {
-      case VersionedCommitMessage(Some(f), _) =>
-        java.nio.file.Paths.get(f).getFileName.toString
-    }.toSet
-    VersionedBatchWrite.dropUnacked(staging, acked)
-    if (acked.isEmpty) {
+    val written = VersionedBatchWrite.written(messages)
+    VersionedBatchWrite.dropUnacked(staging, written)
+    if (written.isEmpty) {
       VersionedBatchWrite.deleteRecursive(staging)
       return // an empty epoch appends nothing — standard sink semantics
     }
@@ -1197,8 +1202,7 @@ private[sources] class VersionedStreamingWrite(schema: StructType,
     // start, so epoch files legitimately lack a column added by a
     // mid-stream ALTER ADD COLUMN — readers fill its default per group
     Versioned.commitStagedGroupIdempotent(SparkSession.active, dir, staging,
-      VersionedStreamingWrite.appIdOf(queryId), epochId,
-      VersionedBatchWrite.rowCount(messages), statsCol,
+      VersionedStreamingWrite.appIdOf(queryId), epochId, written, statsCol,
       omitDefaultedOk = true)
   }
 
@@ -1214,12 +1218,12 @@ private[sources] object VersionedStreamingWrite {
 }
 
 private[sources] case class VersionedStreamingWriterFactory(
-    writeConf: Map[String, String], stagingPrefix: String)
-    extends StreamingDataWriterFactory {
+    writeConf: Map[String, String], stagingPrefix: String,
+    stats: Seq[(String, Expression)]) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
     new VersionedDataWriter(writeConf,
-      s"$stagingPrefix-e$epochId/part-$partitionId-$taskId.parquet")
+      s"$stagingPrefix-e$epochId/part-$partitionId-$taskId.parquet", stats)
 }
 
 /** Executors stage parquet part files under `<table>/_staging/<queryId>`
@@ -1228,23 +1232,18 @@ private[sources] case class VersionedStreamingWriterFactory(
   * file group via [[Versioned.commitStagedGroup]] — manifest last, so a
   * failed/aborted job leaves nothing any reader can see. */
 private[sources] class VersionedBatchWrite(schema: StructType, dir: String,
-    overwrite: Boolean, statsCol: Option[String], queryId: String)
-    extends BatchWrite {
+    overwrite: Boolean, statsCol: Option[String],
+    stats: Seq[(String, Expression)], queryId: String) extends BatchWrite {
 
   private val staging = s"$dir/_staging/q$queryId"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    VersionedDataWriterFactory(VersionedDataWriter.conf(schema), staging)
+    VersionedDataWriterFactory(VersionedDataWriter.conf(schema), staging, stats)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // compare by file NAME (unique per partition+task attempt) — the
-    // staged path string may differ from the listed path in prefix form
-    val acked = messages.collect {
-      case VersionedCommitMessage(Some(f), _) =>
-        java.nio.file.Paths.get(f).getFileName.toString
-    }.toSet
-    if (acked.isEmpty) {
+    val written = VersionedBatchWrite.written(messages)
+    if (written.isEmpty) {
       // an empty APPEND is a legitimate no-op (INSERT INTO ... WHERE
       // false must not throw — standard SQL semantics): publish nothing,
       // mint nothing. An empty OVERWRITE genuinely truncates — and a
@@ -1260,9 +1259,9 @@ private[sources] class VersionedBatchWrite(schema: StructType, dir: String,
     // attempt can leave a truncated or duplicate part file in staging
     // without ever running abort() — committing the whole directory
     // would publish duplicated rows or an unreadable file
-    VersionedBatchWrite.dropUnacked(staging, acked)
-    Versioned.commitStagedGroup(SparkSession.active, dir, staging,
-      VersionedBatchWrite.rowCount(messages), overwrite, statsCol)
+    VersionedBatchWrite.dropUnacked(staging, written)
+    Versioned.commitStagedGroup(SparkSession.active, dir, staging, written,
+      overwrite, statsCol)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1270,13 +1269,21 @@ private[sources] class VersionedBatchWrite(schema: StructType, dir: String,
 }
 
 private[sources] object VersionedBatchWrite {
-  /** Rows the acknowledged files hold — the staged group's `counts`. */
-  def rowCount(messages: Array[WriterCommitMessage]): Long =
-    messages.collect { case VersionedCommitMessage(Some(_), n) => n }.sum
+  /** The acknowledged messages: those of the tasks that staged a file. */
+  def written(messages: Array[WriterCommitMessage])
+      : Seq[VersionedCommitMessage] =
+    messages.toSeq.collect {
+      case m @ VersionedCommitMessage(Some(_), _, _) => m }
 
   /** Driver-side staging hygiene (local filesystem — gated upfront in
-    * [[VersionedWrite]]): delete staged part files no task acknowledged. */
-  def dropUnacked(staging: String, acked: Set[String]): Unit = {
+    * [[VersionedWrite]]): delete staged part files no task acknowledged,
+    * compared by file NAME (unique per partition and task attempt) — the
+    * staged path string may differ from the listed path in prefix form. */
+  def dropUnacked(staging: String, written: Seq[VersionedCommitMessage])
+      : Unit = {
+    val acked =
+      written.map(m => java.nio.file.Paths.get(m.file.get).getFileName.toString)
+        .toSet
     val root = java.nio.file.Paths.get(staging)
     if (!java.nio.file.Files.isDirectory(root)) return
     val s = java.nio.file.Files.list(root)
@@ -1298,18 +1305,32 @@ private[sources] object VersionedBatchWrite {
 }
 
 /** `file` = the task's staged path IFF it wrote rows — the driver's
-  * commit publishes only acknowledged files (crash/retry hygiene) — and
-  * `nRows` its row count, which the manifest records as the group's
-  * exact `counts` entry without re-reading a footer. */
-final case class VersionedCommitMessage(file: Option[String], nRows: Long)
-  extends WriterCommitMessage
+  * commit publishes only acknowledged files (crash/retry hygiene);
+  * `nRows` its row count, the group's exact manifest `counts` entry;
+  * `stats` the [min, max] of each stats column's BIGINT image
+  * ([[VersionedDataWriter.statsImage]]) over the file's non-NULL
+  * images, by column name — reduced on the driver into the manifest's
+  * `stats` and `stats2` without re-reading the file. */
+final case class VersionedCommitMessage(file: Option[String], nRows: Long,
+    stats: Map[String, (Long, Long)] = Map.empty) extends WriterCommitMessage
+
+object VersionedCommitMessage {
+  /** Per stats column, the [min, max] over every file of `messages`; a
+    * column no file holds a non-NULL image of has no entry. */
+  def ranges(messages: Seq[VersionedCommitMessage])
+      : Map[String, (Long, Long)] =
+    messages.flatMap(_.stats)
+      .groupMapReduce(_._1)(_._2) { case ((lo1, hi1), (lo2, hi2)) =>
+        (math.min(lo1, lo2), math.max(hi1, hi2)) }
+}
 
 private[sources] case class VersionedDataWriterFactory(
-    writeConf: Map[String, String], staging: String) extends DataWriterFactory {
+    writeConf: Map[String, String], staging: String,
+    stats: Seq[(String, Expression)]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new VersionedDataWriter(writeConf,
-      s"$staging/part-$partitionId-$taskId.parquet")
+      s"$staging/part-$partitionId-$taskId.parquet", stats)
 }
 
 /** The one writer of Versioned data and delete groups: the connector's
@@ -1321,14 +1342,28 @@ private[sources] case class VersionedDataWriterFactory(
   * FileSystem, so no checksum sidecar and no permission fork. The file
   * is created lazily on the first row, so empty partitions stage
   * nothing; `commit` adds the file's rows and bytes to the task's output
-  * metrics. */
+  * metrics. `stats` are (column, BIGINT image bound to the written row)
+  * pairs whose min/max the writer tracks as the rows pass. */
 private[sources] class VersionedDataWriter(writeConf: Map[String, String],
-    file: String) extends DataWriter[InternalRow] {
+    file: String, stats: Seq[(String, Expression)])
+    extends DataWriter[InternalRow] {
 
   private var writer: ParquetWriter[InternalRow] = _
   private var rows = 0L
+  private val image =
+    if (stats.isEmpty) null else UnsafeProjection.create(stats.map(_._2))
+  // lo > hi until a non-NULL image arrives
+  private val lo = Array.fill(stats.size)(Long.MaxValue)
+  private val hi = Array.fill(stats.size)(Long.MinValue)
 
   override def write(row: InternalRow): Unit = {
+    if (image != null) {
+      val r = image(row)
+      for (i <- lo.indices if !r.isNullAt(i)) {
+        lo(i) = math.min(lo(i), r.getLong(i))
+        hi(i) = math.max(hi(i), r.getLong(i))
+      }
+    }
     if (writer == null) writer = VersionedDataWriter.open(file, writeConf)
     writer.write(row)
     rows += 1
@@ -1339,7 +1374,9 @@ private[sources] class VersionedDataWriter(writeConf: Map[String, String],
     writer.close()
     org.apache.spark.GraftSparkShims.addTaskOutput(
       java.nio.file.Files.size(java.nio.file.Paths.get(file)), rows)
-    VersionedCommitMessage(Some(file), rows)
+    VersionedCommitMessage(Some(file), rows, stats.indices
+      .collect { case i if lo(i) <= hi(i) => stats(i)._1 -> (lo(i), hi(i)) }
+      .toMap)
   }
 
   override def abort(): Unit = {
@@ -1369,6 +1406,27 @@ private[sources] object VersionedDataWriter {
     SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "TIMESTAMP_MICROS",
     SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key -> "false",
     SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key -> "false")
+
+  /** The BIGINT image the manifest records for stats column `c`, bound
+    * to a row of `schema`: `try_cast(c AS BIGINT)` for a numeric or
+    * timestamp column (1-D `stats`; other columns have none and record
+    * no stats), or with `strict` `cast(c AS BIGINT)` under the session's
+    * ANSI mode (the Z-order `stats2`). A missing column fails the write
+    * before any row is written. */
+  def statsImage(schema: StructType, c: String, strict: Boolean = false)
+      : Option[(String, Expression)] = {
+    val i = schema.fields.indexWhere(f => SQLConf.get.resolver(f.name, c))
+    require(i >= 0, s"stats column $c is not in the written columns " +
+      schema.fieldNames.mkString("[", ", ", "]"))
+    val ref = BoundReference(i, schema(i).dataType, schema(i).nullable)
+    val tz = Some(SQLConf.get.sessionLocalTimeZone)
+    schema(i).dataType match {
+      case _ if strict => Some(c -> Cast(ref, LongType, tz))
+      case _: NumericType | TimestampType =>
+        Some(c -> Cast(ref, LongType, tz, EvalMode.TRY))
+      case _ => None
+    }
+  }
 
   private class Builder(file: OutputFile)
       extends ParquetWriter.Builder[InternalRow, Builder](file) {
@@ -1407,14 +1465,22 @@ object VersionedWriter {
     * under `<col>=<value>/` (Spark's partition-path escaping) at each
     * value change, and the column is left out of the files — the layout
     * `partitionBy` writes. A value that reappears after the task moved
-    * past it fails the write. */
+    * past it fails the write.
+    *
+    * Each file's message carries the min/max of the `statsCols`' BIGINT
+    * images ([[VersionedDataWriter.statsImage]], `strictStats` as its
+    * `strict`), so the caller records manifest statistics without
+    * reading the group back. */
   def stage(df: DataFrame, stagingDir: String,
-      partitionCol: Option[String] = None): Seq[VersionedCommitMessage] = {
+      partitionCol: Option[String] = None, statsCols: Seq[String] = Nil,
+      strictStats: Boolean = false): Seq[VersionedCommitMessage] = {
     val schema = df.schema
     val partIdx = partitionCol.map(schema.fieldIndex)
     val dataIdx = schema.indices.filterNot(partIdx.contains)
-    val writeConf =
-      VersionedDataWriter.conf(StructType(dataIdx.map(schema(_))))
+    val dataSchema = StructType(dataIdx.map(schema(_)))
+    val writeConf = VersionedDataWriter.conf(dataSchema)
+    val stats = statsCols.flatMap(
+      VersionedDataWriter.statsImage(dataSchema, _, strictStats))
     val tz = SQLConf.get.sessionLocalTimeZone
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
     val qe = df.queryExecution
@@ -1425,10 +1491,10 @@ object VersionedWriter {
           partIdx match {
             case None =>
               writeAll(new VersionedDataWriter(writeConf,
-                s"$stagingDir/$name"), rows).toSeq
+                s"$stagingDir/$name", stats), rows).toSeq
             case Some(pi) =>
               writeClustered(rows, schema, pi, dataIdx, tz, writeConf,
-                stagingDir, name)
+                stats, stagingDir, name)
           }
         }).toSeq.flatten
     }
@@ -1448,7 +1514,8 @@ object VersionedWriter {
 
   private def writeClustered(rows: Iterator[InternalRow], schema: StructType,
       partIdx: Int, dataIdx: Seq[Int], tz: String,
-      writeConf: Map[String, String], stagingDir: String, name: String)
+      writeConf: Map[String, String], stats: Seq[(String, Expression)],
+      stagingDir: String, name: String)
       : Seq[VersionedCommitMessage] = {
     val col = schema(partIdx)
     val valueOf = Cast(BoundReference(partIdx, col.dataType, col.nullable),
@@ -1468,7 +1535,8 @@ object VersionedWriter {
           require(!done(dirName), s"staged write partitioned on '${col.name}'" +
             s" needs input clustered on it: $dirName reappeared")
           current = dirName
-          w = new VersionedDataWriter(writeConf, s"$stagingDir/$dirName/$name")
+          w = new VersionedDataWriter(writeConf,
+            s"$stagingDir/$dirName/$name", stats)
         }
         w.write(project(row))
       }

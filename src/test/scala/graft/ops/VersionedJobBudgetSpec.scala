@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Job budgets of the Versioned verbs: group metadata (schemas, delete
-  * emptiness, manifest statistics) comes from parquet footers read on
-  * the driver, so Spark jobs only move data. Jobs are counted with a
+/** Job budgets of the Versioned verbs: group metadata comes from parquet
+  * footers read on the driver (schemas) or from the write tasks' commit
+  * messages (row counts, delete emptiness, manifest statistics), so
+  * Spark jobs only move data. Jobs are counted with a
   * SparkListener under a per-test job group; the footer schema is
   * checked against Spark's own inference. */
 class VersionedJobBudgetSpec extends SparkSpec {
@@ -344,5 +345,140 @@ class VersionedJobBudgetSpec extends SparkSpec {
     footers.flatten.flatMap(_.getBlocks.asScala).flatMap(_.getColumns.asScala)
       .foreach(c => assert(c.getCodec == CompressionCodecName.SNAPPY, c))
     assert(Versioned.read(spark, dir).count() == 100)
+  }
+
+  // ── manifest statistics: the exact text every write path records ─────
+
+  /** The manifest's `groups`, `stats` and `stats2` entries of version
+    * `v`, or "-" when the version was never committed. */
+  private def statsText(dir: String, v: Int): String =
+    if (!Files.exists(Paths.get(dir, "_manifests", s"v$v.json"))) "-"
+    else {
+      val m = manifest(dir, v)
+      Seq("\"groups\":\\[[^\\]]*\\]", "\"stats\":\\{[^}]*\\}",
+        "\"stats2\":\\{[^}]*\\}").map(_.r.findFirstIn(m).getOrElse("")).mkString
+    }
+
+  /** Stats-column cases: (name, SQL expression over the row index `i`,
+    * rows). */
+  private val statsCases: Seq[(String, String, Int)] = Seq(
+    ("bigint", "element_at(array(-1000L, 7L, 1099511627776L, -3L), " +
+      "CAST(i AS INT) + 1)", 4),
+    ("int", "element_at(array(-7, 0, 123456, 42), CAST(i AS INT) + 1)", 4),
+    ("decimal", "CAST(element_at(array('-12.75', '0.5', '99999.99', '-0.99'), " +
+      "CAST(i AS INT) + 1) AS DECIMAL(18,2))", 4),
+    ("double", "element_at(array(-3.9D, 2.5D, 1e19D, -1e300D, " +
+      "double('NaN'), 1e18D), CAST(i AS INT) + 1)", 6),
+    ("timestamp", "CAST(element_at(array('1960-05-01 12:34:56.789', " +
+      "'1969-12-31 23:59:59.5', '1970-01-01 00:00:00.25'), " +
+      "CAST(i AS INT) + 1) AS TIMESTAMP)", 3),
+    ("all_null", "CAST(NULL AS BIGINT)", 3),
+    ("empty", "i", 0),
+    ("string", "concat('s', CAST(i AS STRING))", 3))
+
+  /** Manifest text the writers recorded before the stats moved into the
+    * write tasks (generated by running this leg against the footer and
+    * aggregation probes it replaced). */
+  private val expectedStats: Map[(String, String), String] = Map(
+    ("bigint", "commit") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-1000,1099511627776]}",
+    ("bigint", "insert") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-1000,1099511627776]}",
+    ("bigint", "stream") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-1000,1099511627776]}",
+    ("int", "commit") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-7,123456]}",
+    ("int", "insert") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-7,123456]}",
+    ("int", "stream") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-7,123456]}",
+    ("decimal", "commit") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-12,99999]}",
+    ("decimal", "insert") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-12,99999]}",
+    ("decimal", "stream") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-12,99999]}",
+    ("double", "commit") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-3,1000000000000000000]}",
+    ("double", "insert") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-3,1000000000000000000]}",
+    ("double", "stream") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-3,1000000000000000000]}",
+    ("timestamp", "commit") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-305119504,0]}",
+    ("timestamp", "insert") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-305119504,0]}",
+    ("timestamp", "stream") -> "\"groups\":[\"c1\"]\"stats\":{\"c1\":[-305119504,0]}",
+    ("all_null", "commit") -> "\"groups\":[\"c1\"]",
+    ("all_null", "insert") -> "\"groups\":[\"c1\"]",
+    ("all_null", "stream") -> "\"groups\":[\"c1\"]",
+    ("empty", "commit") -> "\"groups\":[\"c1\"]",
+    ("empty", "insert") -> "-",
+    ("empty", "stream") -> "-",
+    ("string", "commit") -> "\"groups\":[\"c1\"]",
+    ("string", "insert") -> "\"groups\":[\"c1\"]",
+    ("string", "stream") -> "\"groups\":[\"c1\"]",
+    ("int_bigint", "zorder") -> "\"groups\":[\"c2/__zb=0\",\"c2/__zb=1\",\"c2/__zb=2\",\"c2/__zb=3\"]\"stats2\":{\"c2/__zb=0\":[0,7,0,5],\"c2/__zb=1\":[10,14,1,7],\"c2/__zb=2\":[2,6,9,15],\"c2/__zb=3\":[8,15,8,13]}",
+    ("decimal_double", "zorder") -> "\"groups\":[\"c2/__zb=0\",\"c2/__zb=2\"]\"stats2\":{\"c2/__zb=0\":[0,4,0,7],\"c2/__zb=2\":[0,4,8,11]}",
+    ("timestamp_int", "zorder") -> "\"groups\":[\"c2/__zb=0\",\"c2/__zb=1\"]\"stats2\":{\"c2/__zb=0\":[0,7,0,6],\"c2/__zb=1\":[8,15,0,6]}")
+
+  test("manifest stats and stats2 text for every stats-column type, through " +
+      "commit, a connector INSERT, a streaming epoch and compactZOrder") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def rowsOf(n: Int, e: String): DataFrame =
+      spark.range(0, n, 1, 3).select(col("id").as("i"))
+        .selectExpr("i AS k", s"$e AS s")
+    val got = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
+    statsCases.foreach { case (name, e, n) =>
+      val cd = tmp(s"sc_$name")
+      Versioned.commit(rowsOf(n, e), cd, statsCol = Some("s"))
+      got((name, "commit")) = statsText(cd, 1)
+      val id = tmp(s"si_$name")
+      rowsOf(n, e).write.format("graft-versioned").option("path", id)
+        .option("statsCol", "s").mode("append").save()
+      got((name, "insert")) = statsText(id, 1)
+      val sd = tmp(s"ss_$name")
+      val mem = MemoryStream[Long]
+      val q = mem.toDF().selectExpr("value AS i").selectExpr("i AS k", s"$e AS s")
+        .writeStream.format("graft-versioned").option("path", sd)
+        .option("statsCol", "s").option("checkpointLocation", s"$sd-ckpt")
+        .outputMode("append").start()
+      try {
+        if (n > 0) mem.addData(0L until n.toLong)
+        q.processAllAvailable()
+      } finally q.stop()
+      got((name, "stream")) = statsText(sd, 1)
+    }
+    // Z-order: the 2-D statistics of each bucket, cast to BIGINT
+    Seq(
+      ("int_bigint", "CAST(i % 16 AS INT)", "i * 5 % 16"),
+      ("decimal_double", "CAST(i % 5 AS DECIMAL(18,2)) + 0.75",
+        "CAST(i AS DOUBLE) / 2 + 0.25"),
+      ("timestamp_int", "timestamp_seconds(CAST(i % 16 AS DOUBLE) + 0.5)",
+        "CAST(i % 7 AS INT)")
+    ).foreach { case (name, a, b) =>
+      val zd = tmp(s"sz_$name")
+      Versioned.commit(spark.range(0, 24, 1, 3).select(col("id").as("i"))
+        .selectExpr("i AS k", s"$a AS a", s"$b AS b"), zd)
+      val (zv, _) = Versioned.compactZOrder(spark, zd, "a", "b", 4, 2)
+      got((name, "zorder")) = statsText(zd, zv)
+    }
+    val table = got.map { case ((c, via), t) =>
+      s"""    ("$c", "$via") -> ${"\"" + t.replace("\"", "\\\"") + "\""},"""
+    }.mkString("\n")
+    assert(got.toMap == expectedStats, s"\n$table")
+  }
+
+  test("commit with statsCol on an INT, DECIMAL or TIMESTAMP column " +
+      "launches one job: the write") {
+    // three at the footer-probe commit: the write and an aggregation
+    Seq("CAST(id AS INT)", "CAST(id AS DECIMAL(18,2)) - 0.5",
+        "timestamp_seconds(id * 60 - 3600)").foreach { e =>
+      val dir = tmp("stats_typed")
+      val df = spark.range(0, 300, 1, 3).selectExpr("id AS k", s"$e AS s")
+      val (n, v) = jobs(Versioned.commit(df, dir, statsCol = Some("s")))
+      assert(n == 1, s"commit with stats on $e launched $n jobs")
+      assert(manifest(dir, v).contains("\"stats\":{\"c1\":["), manifest(dir, v))
+    }
+  }
+
+  test("compactZOrder launches two jobs: the bucketing shuffle and the " +
+      "write") {
+    // four when the 2-D stats were a second aggregation over the buckets
+    val dir = tmp("zjobs")
+    Versioned.commit(spark.range(0, 400, 1, 4).selectExpr("id AS k",
+      "CAST(id % 16 AS INT) AS a", "CAST(id / 25 AS INT) AS b"), dir)
+    val (n, (v, g)) = jobs(Versioned.compactZOrder(spark, dir, "a", "b", 4, 2))
+    assert(n == 2, s"compactZOrder launched $n jobs")
+    assert(g == 4 && manifest(dir, v).contains("\"stats2\":{\"c2/__zb=0\":" +
+      "[0,7,0,7],\"c2/__zb=1\":[8,15,0,7],\"c2/__zb=2\":[0,7,8,15]," +
+      "\"c2/__zb=3\":[8,15,8,15]}"), manifest(dir, v))
   }
 }

@@ -464,6 +464,83 @@ class VersionedReadPathSpec extends SparkSpec {
       assert(model.size == 15)
     }
   }
+
+  test("a history holding both delete layouts: changes across both deletes " +
+      "and the fold equal the reference and the model; the delete keys are " +
+      "no snapshot") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import graft.sources.VersionedMvBridge
+    val dir = tmp("mixed")
+    def rows(ks: Seq[Option[Long]], v0: Long): DataFrame =
+      ks.zipWithIndex.map { case (k, i) => (k, v0 + i) }.toDF("k", "v")
+    def dirsUnder(d: String): Seq[String] = {
+      val s = Files.list(java.nio.file.Paths.get(dir, "data", d))
+      try s.iterator().asScala.filter(Files.isDirectory(_))
+        .map(_.getFileName.toString).toList.sorted
+      finally s.close()
+    }
+    Versioned.commit(rows((0L until 10L).map(Some(_)), 0), dir,
+      statsCol = Some("k"))
+    Versioned.commit(rows((10L until 20L).map(Some(_)), 10), dir,
+      statsCol = Some("k"))
+    // every group carries stats on k: the delete is routed per group
+    val d1 = Versioned.deleteCommitMor(Seq(3L, 15L, 500L).toDF("k"), dir, "k")
+    assert(dirsUnder(s"d$d1") == Seq("__tg=__none", "__tg=c1", "__tg=c2"))
+    // an all-NULL stats column: the appended group records no stats, so
+    // the next delete is written flat
+    val a = Versioned.commit(rows(Seq(None, None), 100), dir,
+      statsCol = Some("k"))
+    assert(!new String(Files.readAllBytes(java.nio.file.Paths.get(dir,
+      "_manifests", s"v$a.json")), "UTF-8").contains(s"\"c$a\":["))
+    val d2 = Versioned.deleteCommitMor(Seq(4L, 16L, 17L).toDF("k"), dir, "k")
+    assert(dirsUnder(s"d$d2").isEmpty)
+
+    // the model: (k, v) rows after each step, and the change rows
+    val base = (0L until 20L).map(i => Row(i, i))
+    val nulls = Seq(Row(null, 100L), Row(null, 101L))
+    def without(rs: Seq[Row], ks: Long*) = rs.filterNot(r =>
+      !r.isNullAt(0) && ks.contains(r.getLong(0)))
+    val atD2 = without(base, 3L, 15L, 4L, 16L, 17L) ++ nulls
+    val modelChanges = Seq(
+      Row(3L, 3L, "delete", 3L), Row(15L, 15L, "delete", 3L),
+      Row(null, 100L, "insert", 4L), Row(null, 101L, "insert", 4L),
+      Row(4L, 4L, "delete", 5L), Row(16L, 16L, "delete", 5L),
+      Row(17L, 17L, "delete", 5L))
+    def sorted(rs: Seq[Row]): Seq[Row] =
+      rs.sortBy(r => (r.getLong(3), r.getLong(1)))
+    val got = Versioned.changes(spark, dir, d1 - 1, d2, "k")
+      .select("k", "v", "_change_type", "_commit_version").collect().toSeq
+    def ref(w: Int) = ReferenceRead.read(spark, dir, w).select("k", "v")
+    val refChanges = (d1 to d2).flatMap { w =>
+      def tag(df: DataFrame, kind: String) =
+        df.collect().toSeq.map(r => Row(r.get(0), r.get(1), kind, w.toLong))
+      tag(ref(w).except(ref(w - 1)), "insert") ++
+        tag(ref(w - 1).except(ref(w)), "delete")
+    }
+    assert(sorted(got) == modelChanges)
+    assert(sorted(refChanges) == modelChanges)
+
+    // the delete keys of both layouts, read as one group-subset frame
+    val (dgs, dk) = Versioned.readDeletes(dir, d2)
+    assert(dgs == Seq(s"d$d1", s"d$d2") && dk.contains("k"))
+    val keys = Versioned.deleteKeys(spark, dir, d2, dgs, "k")
+    assert(keys.as[Long].collect().sorted.toSeq ==
+      Seq(3L, 4L, 15L, 16L, 17L, 500L))
+    def scans(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan }
+    assert(scans(keys).nonEmpty &&
+      scans(keys).forall(VersionedMvBridge.scanInfo(_).isEmpty))
+    assert(scans(Versioned.read(spark, dir, d2))
+      .map(VersionedMvBridge.scanInfo) == Seq(Some((dir, d2))))
+
+    val (fv, touched, _) = Versioned.applyDeletesCommit(spark, dir)
+    assert(touched.contains(s"c$a"), "a group without stats is touched")
+    def byV(df: DataFrame) = df.select("k", "v").collect().toSeq
+      .sortBy(_.getLong(1))
+    assert(byV(Versioned.read(spark, dir, fv)) == atD2.sortBy(_.getLong(1)))
+    assert(byV(ReferenceRead.read(spark, dir, fv)) == atD2.sortBy(_.getLong(1)))
+    assert(Versioned.readDeletes(dir, fv)._1.isEmpty)
+  }
 }
 
 object VersionedReadPathSpec {

@@ -721,7 +721,8 @@ class VersionedSourceSpec extends SparkSpec {
     spark.range(10, 15).select(col("id").as("k"))
       .coalesce(1).write.mode("overwrite").parquet(staged)
     val committed = Versioned.commitStagedGroupIdempotent(spark, d, staged,
-      appId = "epochapp", txnVersion = 7L, nRows = 5L)
+      appId = "epochapp", txnVersion = 7L,
+      written = Seq(VersionedCommitMessage(Some(staged), 5L)))
     assert(committed.contains(2))
     val got = Versioned.read(spark, d)
     assert(got.count() == 15L) // the orphan bytes are gone, not served
@@ -745,7 +746,8 @@ class VersionedSourceSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(staged2)
     intercept[java.util.ConcurrentModificationException] {
       Versioned.commitStagedGroupIdempotent(spark, d, staged2,
-        appId = "otherapp", txnVersion = 1L, nRows = 3L)
+        appId = "otherapp", txnVersion = 1L,
+        written = Seq(VersionedCommitMessage(Some(staged2), 3L)))
     }
     assert(Versioned.latestVersion(d) == 2) // nothing published past it
   }
